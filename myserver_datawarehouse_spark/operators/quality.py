@@ -79,29 +79,3 @@ def null_count(df: DataFrame, col: str) -> DataFrame:
         F.count(F.when(F.col(col).isNull(), 1)).alias(f"null_{col}_count")
     )
 
-
-def range_violations(
-    df: DataFrame, col: str, lo: str, hi: str
-) -> DataFrame:
-    """V4: out-of-bounds date check (dim_date_etl_dag.py:117, P18)."""
-    c = F.col(col)
-    return df.agg(
-        F.count(F.when((c < F.lit(lo)) | (c > F.lit(hi)), 1)).alias(
-            f"out_of_range_{col}_count"
-        )
-    )
-
-
-def freshness_summary(
-    df: DataFrame, deleted_col: str = "deleted_at", ts_col: str = "updated_at"
-) -> DataFrame:
-    """V5: total/active/deleted counts + freshness probe
-    (populate_sources_dag.py:182-213, A7)."""
-    return df.agg(
-        F.count(F.lit(1)).alias("total_count"),
-        F.count(F.when(F.col(deleted_col).isNull(), 1)).alias("active_count"),
-        F.count(F.when(F.col(deleted_col).isNotNull(), 1)).alias(
-            "deleted_count"
-        ),
-        F.max(ts_col).alias("last_updated_at"),
-    )

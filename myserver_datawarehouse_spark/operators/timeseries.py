@@ -96,18 +96,6 @@ def bounded_minute_grid(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def _null_safe_on(keys: Sequence[str]):
-    """Join condition equating keys NULL-safely between aliases g and o
-    (reference groups with a NULL side_id must survive the grid join,
-    fact_gold_price.py:310 — a plain key-list join drops them because
-    NULL != NULL). String-qualified refs: the grid derives from obs, so
-    attribute refs would be ambiguous in the self-join."""
-    cond = F.col("g.minute_epoch") == F.col("o.minute_epoch")
-    for k in keys:
-        cond = cond & F.col(f"g.{k}").eqNullSafe(F.col(f"o.{k}"))
-    return cond
-
-
 def _lead_gaps(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Per observed row, the run of missing minutes up to (exclusive) the
     next observation in its group, plus both bracketing observations.
@@ -157,15 +145,6 @@ def gapfill_missing(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
     of fact_gold_price.py:312-315), generated directly from the gap runs
     between consecutive observations — see _lead_gaps."""
     return _lead_gaps(obs, keys).select(*keys, "minute_epoch")
-
-
-def _grid_with_values(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
-    grid = bounded_minute_grid(obs, keys).alias("g")
-    return grid.join(obs.alias("o"), _null_safe_on(keys), "left").select(
-        *[F.col(f"g.{k}") for k in keys],
-        F.col("g.minute_epoch"),
-        F.col("o.value"),
-    )
 
 
 def interpolate_bracketing(obs: DataFrame, keys: Sequence[str]) -> DataFrame:

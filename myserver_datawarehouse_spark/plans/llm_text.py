@@ -27,7 +27,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.functions.scalar import (
@@ -137,6 +137,16 @@ def _minhash_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_pairs_for(_docs(spark, sf_dir))
 
 
+def _shingle_hashes(d: DataFrame) -> DataFrame:
+    """The distinct (doc_id, shingle-hash) rows of a (doc_id, text)
+    frame, unmaterialized."""
+    return (
+        TX.shingle_rows(d, SHINGLE_K)
+        .select("doc_id", TX.hash60("g").alias("h"))
+        .distinct()
+    )
+
+
 def _shingle_hash_frame(d: DataFrame) -> DataFrame:
     """The materialized distinct (doc_id, shingle-hash) frame — the ONE
     table a production dedup stack persists and feeds to every member
@@ -144,30 +154,17 @@ def _shingle_hash_frame(d: DataFrame) -> DataFrame:
     because every consumer reads it multiple times (see the callers'
     comments); at 100 TB it is a persisted intermediate, not a
     recompute-per-pass lineage."""
-    return materialize(
-        TX.shingle_rows(d, SHINGLE_K)
-        .select("doc_id", TX.hash60("g").alias("h"))
-        .distinct()
-    )
+    return materialize(_shingle_hashes(d))
 
 
-def _minhash_band_candidates(
-    hs: DataFrame,
+def _minhash_signature_bands(
+    hs: DataFrame, *band_cols: Column
 ) -> tuple[DataFrame, DataFrame]:
-    """(distinct LSH band-collision candidate pairs, per-doc set sizes)
-    over the shared shingle-hash frame — the first half of
-    `_minhash_pairs_for`, factored out so an audit that already holds
-    the exact >= tau pair set (`lsh_recall_audit`) can semi-join the
-    CANDIDATES directly and skip the per-candidate Jaccard verify:
-    exact ∩ verified(cand) == exact ∩ cand, because every exact pair
-    has jaccard >= tau by the prefix-filter theorem and the verify
-    computes the identical rounded jaccard — the filter can only drop
-    pairs the exact side already excludes. `lsh_band_tuning` has used
-    this semi-join shape per config since round 13.
-
-    The shingle-set size rides along as a 17th aggregate in the
-    signature pass (one groupBy over hs instead of two full recomputes
-    of the shingle lineage — hs is lineage, not a materialized table)."""
+    """((doc_id, n, sig), (doc_id, bk, *band_cols)) over a (doc_id, h)
+    shingle-hash frame: the MINHASH_N MinHash slots as codegen'd MIN
+    aggregates (map-side partials, not higher-order array folds) with
+    the shingle-set size n riding along in the same groupBy, then one
+    row per LSH band key (LSH_BANDS bands of LSH_ROWS rows)."""
     p = F.lit(TX.MINHASH_P)
     sig = (
         hs.groupBy("doc_id")
@@ -185,8 +182,26 @@ def _minhash_band_candidates(
         )
     )
     bands = sig.select(
-        "doc_id", F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk")
+        "doc_id",
+        F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk"),
+        *band_cols,
     )
+    return sig, bands
+
+
+def _minhash_band_candidates(
+    hs: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    """(distinct LSH band-collision candidate pairs, per-doc set sizes)
+    over the shared shingle-hash frame — the first half of
+    `_minhash_pairs_for`, factored out so an audit that already holds
+    the exact >= tau pair set (`lsh_recall_audit`) can semi-join the
+    CANDIDATES directly and skip the per-candidate Jaccard verify:
+    exact ∩ verified(cand) == exact ∩ cand, because every exact pair
+    has jaccard >= tau by the prefix-filter theorem and the verify
+    computes the identical rounded jaccard — the filter can only drop
+    pairs the exact side already excludes."""
+    sig, bands = _minhash_signature_bands(hs)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -3173,51 +3188,17 @@ def near_dup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateless; `materialize` marks exactly the two frames a production
     job persists). The band join's skew profile matches the full-corpus
     query: hot buckets are boilerplate shingle patterns, absorbed by
-    AQE skew splitting.
-
-    Deliberately does NOT share `_minhash_pairs_for`: that helper backs
-    four standing driver verdicts (near_dup_minhash_lsh,
-    dedup_clusters, corpus_build_pipeline, leakage_safe_split), and
-    the two-frame generalization would change their plan lineage for
-    zero behavior gain — duplication here is cheaper than forfeiting
-    four green verdicts (registry staleness rule)."""
+    AQE skew splitting."""
     d = _docs(spark, sf_dir)
-    p = F.lit(TX.MINHASH_P)
-
-    def side(frame: DataFrame):
-        hs = (
-            TX.shingle_rows(frame, SHINGLE_K)
-            .select("doc_id", TX.hash60("g").alias("h"))
-            .distinct()
-            .transform(materialize)  # read by the sig agg AND the verify join
-        )
-        sig = (
-            hs.groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                    for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-                ],
-            )
-            .select(
-                "doc_id",
-                "n",
-                F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-            )
-        )
-        bands = sig.select(
-            "doc_id",
-            F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk"),
-        )
-        return hs, sig, bands
-
-    hs_new, sig_new, bands_new = side(
+    # each hash frame is read by its sig agg AND the verify join
+    hs_new = _shingle_hash_frame(
         d.filter(F.pmod(F.col("doc_id"), F.lit(INCR_MOD)) == 0)
     )
-    hs_idx, sig_idx, bands_idx = side(
+    hs_idx = _shingle_hash_frame(
         d.filter(F.pmod(F.col("doc_id"), F.lit(INCR_MOD)) != 0)
     )
+    sig_new, bands_new = _minhash_signature_bands(hs_new)
+    sig_idx, bands_idx = _minhash_signature_bands(hs_idx)
     cand = (
         bands_new.alias("a")
         .join(bands_idx.alias("b"), F.col("a.bk") == F.col("b.bk"))

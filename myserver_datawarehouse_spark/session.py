@@ -33,7 +33,16 @@ def get_spark(
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism. On a real cluster the
     master/memory settings come from spark-submit; everything set here is
     master-agnostic semantics (timezone, AQE, Arrow) plus local defaults.
+
+    A session already active in this thread is returned as it is:
+    ``getOrCreate`` would re-apply every option below to it, resetting
+    the caller's runtime conf (e.g. a tuned ``spark.sql.shuffle.partitions``)
+    when an entry point such as the CLI's ``main`` runs in-process.
+    ``extra_conf`` therefore applies only when the session is created.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -56,13 +56,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() queries mirror the
-    DuckDB oracle environment (same table names)."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

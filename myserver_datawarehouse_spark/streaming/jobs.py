@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -152,6 +153,18 @@ class _scoped_shuffle_partitions:
         return False
 
 
+def _drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run an availableNow streaming write to the end of its bounded
+    source and stop the query, also when the drain fails. Returns the
+    stopped query; its progress log stays readable."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    return q
+
+
 def run_available_now(
     agg: DataFrame, spark: SparkSession, sink_name: str, mode: str = "complete"
 ) -> DataFrame:
@@ -161,17 +174,11 @@ def run_available_now(
     matches emit on arrival, so the drain still yields every pair) and
     return the sink table. Registry/test harness path."""
     with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
+        _drain(
             agg.writeStream.format("memory")
             .queryName(sink_name)
             .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
     return agg.sparkSession.table(sink_name)
 
 
@@ -247,17 +254,11 @@ def run_update_available_now(
     """Drain a bounded source through an update-mode stateful query into a
     memory sink; the LAST update per key is the final state snapshot."""
     with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        sq = (
+        _drain(
             q.writeStream.format("memory")
             .queryName(sink_name)
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            sq.awaitTermination()
-        finally:
-            sq.stop()
     return spark.table(sink_name)
 
 
@@ -432,16 +433,10 @@ def upsert_merge_stream(
         # sweeps strictly-older versions, under the commit lock).
         vacuum_path_table(target)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return target
 
 
@@ -488,18 +483,12 @@ def restart_exactly_once_stream(
     def drain(new_half: DataFrame) -> None:
         new_half.write.mode("append").parquet(src)
         stream = spark.readStream.schema(schema).parquet(src)
-        q = (
+        _drain(
             stream.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
 
     drain(half_a)  # first incarnation: drains A, commits offsets
     drain(half_b)  # restart from the SAME checkpoint: must drain ONLY B
@@ -577,22 +566,16 @@ def watermark_audit_stream(
     )
     sink_name = "streaming_watermark_audit_sink"
     with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
+        q = _drain(
             agg.writeStream.format("memory")
             .queryName(sink_name)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination()
-            dropped = sum(
-                int(op.get("numRowsDroppedByWatermark", 0))
-                for p in q.recentProgress
-                for op in (p.get("stateOperators") or [])
-            )
-        finally:
-            q.stop()
+    dropped = sum(
+        int(op.get("numRowsDroppedByWatermark", 0))
+        for p in q.recentProgress
+        for op in (p.get("stateOperators") or [])
+    )
     return spark.table(sink_name), dropped
 
 
@@ -677,16 +660,10 @@ def cdc_apply_stream(
         )
         vacuum_path_table(target)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return target
 
 
@@ -809,16 +786,10 @@ def cdc_replicate_stream(
         )
         vacuum_path_table(replica)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return replica, primary, v2
 
 
@@ -910,16 +881,10 @@ def evolved_upsert_stream(
         # makes the per-batch vacuum metadata-cheap.
         M.vacuum_versions(root)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return root
 
 
@@ -1060,16 +1025,10 @@ def compaction_race_stream(
             )
         M.vacuum_versions(root)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     with open(os.path.join(work_dir, "race_flags.json"), "w") as fh:
         _json.dump(flags, fh)
     return root
@@ -1201,17 +1160,11 @@ def outer_attribution_stream(
     out = j.select("user_id", "click_id", "click_ts", "buy_id")
     sink_name = "streaming_outer_attribution_sink"
     with _scoped_shuffle_partitions(spark, STREAM_STATE_PARTITIONS):
-        q = (
+        _drain(
             out.writeStream.format("memory")
             .queryName(sink_name)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
     return spark.table(sink_name)
 
 
@@ -1295,16 +1248,10 @@ def bloom_maintained_stream(
         )
         M.vacuum_versions(root)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     final = os.path.join(root, M._published_version(root))
     carried = FS.bloom_sidecar_columns(final) == ["event_id"]
     if carried:
@@ -1485,16 +1432,10 @@ def ivf_ingest_stream(
         )
         _ledger(vecs).write.mode("append").parquet(cells_dir)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return cells_dir
 
 
@@ -1503,45 +1444,17 @@ NEAR_DUP_INGEST_BATCHES = 3  # arrivals split by (doc_id div 5) % 3
 
 def _near_dup_index_frames(frame: DataFrame, batch_no: int):
     """(hashes, sizes, bands) for any (doc_id, text) frame — the
-    signature scheme of plans/llm_text.near_dup_incremental_lsh,
-    DELIBERATELY duplicated rather than extracted from it (that helper
-    family backs standing driver verdicts; the set-equality test in
-    tests/test_round12b.py pins this copy to the original, so drift
-    fails the suite, not the user)."""
-    from myserver_datawarehouse_spark.operators import text as TX
+    signature scheme of plans/llm_text.near_dup_incremental_lsh, with
+    the batch number on every band row."""
     from myserver_datawarehouse_spark.plans.llm_text import (
-        LSH_BANDS,
-        LSH_ROWS,
-        MINHASH_N,
-        SHINGLE_K,
+        _minhash_signature_bands,
+        _shingle_hashes,
     )
 
-    p = F.lit(TX.MINHASH_P)
-    hs = (
-        TX.shingle_rows(frame, SHINGLE_K)
-        .select("doc_id", TX.hash60("g").alias("h"))
-        .distinct()
-    )
+    hs = _shingle_hashes(frame)
     hs.persist()
-    sig = (
-        hs.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-            ],
-        )
-        .select(
-            "doc_id",
-            "n",
-            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-        )
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk"),
-        F.lit(batch_no).cast("int").alias("batch_no"),
+    sig, bands = _minhash_signature_bands(
+        hs, F.lit(batch_no).cast("int").alias("batch_no")
     )
     return hs, sig.select("doc_id", "n"), bands
 
@@ -1835,16 +1748,10 @@ def near_dup_ingest_stream(
                 sp, bands_dir, hashes_dir, sizes_dir, ledger_dir, one, bno
             )
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return ledger_dir
 
 
@@ -1986,16 +1893,10 @@ def mix_drift_stream(
                 .parquet(os.path.join(ledger_dir, f"b{bno}"))
             )
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_monitor)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return ledger_dir
 
 
@@ -2434,14 +2335,8 @@ def curation_ledger_stream(
             )
             _curation_one(sp, d, one, bno)
 
-    q = (
+    _drain(
         stream.writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .start()
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return d["ledger"]

@@ -36,46 +36,91 @@ def test_staleness_debt_bounded():
     """No standing verdict may be older than one full rotation of the
     adjudication budget. The bound is DERIVED, not hard-coded: a
     registry of N queries on a 50/round budget fully rotates in
-    ceil(N/50) rounds, so the stalest legitimate tier is
-    newest_folded - ceil(N/50). Staleness is measured against the
-    newest record FOLDED into registry.py's _ADJUDICATED_R* sets —
-    the newest CORRECTNESS_r*.json on disk is tolerated unfolded for
-    exactly one round (the driver writes it at round end; the fold is
-    the next round's first maintenance task). This is the mechanism
-    fix the round-7 and round-8 verdicts both asked for: the test no
-    longer re-arms when a new record lands before the fold."""
-    import glob
+    ceil(N/50) rounds, so the stalest legitimate verdict is
+    newest - ceil(N/50), where newest is the newest CORRECTNESS record
+    on disk. Verdict rounds are the ones the registry derives from
+    those records at import."""
     import math
     import re
 
     rounds = [
-        int(re.search(r"_r(\d+)\.json$", p).group(1))
-        for p in glob.glob("/root/repo/CORRECTNESS_r*.json")
+        int(re.search(r"_r(\d+)\.json$", p.name).group(1))
+        for p in registry.CORRECTNESS_DIR.glob("CORRECTNESS_r*.json")
     ]
     if not rounds:  # fresh clone without driver artifacts
         return
-    newest_file = max(rounds)
-    folded = [
-        r
-        for r in range(1, newest_file + 1)
-        if getattr(registry, f"_ADJUDICATED_R{r}", frozenset())
-    ]
-    assert folded, "no _ADJUDICATED_R* tier folded into registry.py"
-    newest_folded = max(folded)
-    # The fold may lag the newest on-disk record by at most one round.
-    assert newest_file - newest_folded <= 1, (
-        f"CORRECTNESS_r{newest_file}.json exists but the newest folded "
-        f"tier is round {newest_folded}; run tools/refresh_adjudication.py"
-    )
+    newest = max(rounds)
     rotation = math.ceil(len(registry.specs()) / ADJUDICATION_BUDGET)
-    for r in range(2, newest_folded - rotation):
-        tier = getattr(registry, f"_ADJUDICATED_R{r}", frozenset())
-        assert not tier, (
-            f"_ADJUDICATED_R{r} still holds {len(tier)} queries but the "
-            f"newest folded record is round {newest_folded} and a full "
-            f"rotation is {rotation} rounds; the budget was not spent "
-            f"on the stalest tier"
-        )
+    stale = {
+        s.name: t
+        for s in registry.specs()
+        if 0 < (t := registry._staleness(s.name)) < newest - rotation
+    }
+    assert not stale, (
+        f"{len(stale)} standing verdicts predate round "
+        f"{newest - rotation} (newest record {newest}, full rotation "
+        f"{rotation} rounds); the budget was not spent on the stalest "
+        f"tier: {sorted(stale.items(), key=lambda kv: kv[1])[:10]}"
+    )
+
+
+def test_changed_since_verdict_keys_are_registry_names():
+    names = {s.name for s in registry.specs()}
+    assert set(registry._CHANGED_SINCE_VERDICT) <= names, (
+        set(registry._CHANGED_SINCE_VERDICT) - names
+    )
+
+
+def test_plan_change_newer_than_verdict_heads_the_order(monkeypatch):
+    verdicts = {"q_changed": 12, "q_reverified": 15, "q_steady": 11}
+    monkeypatch.setattr(registry, "_VERDICTS", verdicts)
+    monkeypatch.setattr(
+        registry,
+        "_CHANGED_SINCE_VERDICT",
+        {"q_changed": 14, "q_reverified": 15},
+    )
+    assert registry._staleness("q_changed") == 0  # verdict predates change
+    assert registry._staleness("q_reverified") == 15  # same-round verdict
+    assert registry._staleness("q_steady") == 11
+    assert registry._staleness("q_never_verified") == 0
+
+
+def test_committed_plan_changes_head_the_registry():
+    """At the committed records every _CHANGED_SINCE_VERDICT entry whose
+    verdict predates its change is in the head tier, i.e. the first
+    queries the oracle gate checks."""
+    changed = {
+        n
+        for n, rnd in registry._CHANGED_SINCE_VERDICT.items()
+        if registry._VERDICTS.get(n, 0) < rnd
+    }
+    head = [s.name for s in registry.specs()][: len(changed)]
+    assert set(head) == changed
+    assert all(registry._staleness(n) == 0 for n in head)
+
+
+def test_order_does_not_depend_on_cwd(tmp_path):
+    """The rotation reads the CORRECTNESS records next to the package,
+    so importing from another working directory yields the same order."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from myserver_datawarehouse_spark import registry;"
+            "print('\\n'.join(registry.queries()))",
+        ],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": repo},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert out == list(registry.queries())
 
 
 def test_growth_budget_clears_head_and_stalest_tier():

@@ -31,13 +31,12 @@ def test_lint_flags_null_promoted_spark_int(spark):
     assert any("toPandas" in p for p in probs)
 
 
-def test_refresh_adjudication_latest_wins_and_fail_invalidates(tmp_path):
+def test_latest_green_round_latest_wins_and_fail_invalidates(tmp_path):
     import json
-    import sys
 
-    sys.path.insert(0, "/root/repo/tools")
-    from refresh_adjudication import latest_green_round
+    from myserver_datawarehouse_spark.registry import latest_green_round
 
+    assert latest_green_round(tmp_path) == {}  # no records: no verdicts
     (tmp_path / "CORRECTNESS_r01.json").write_text(
         json.dumps(
             {
@@ -57,12 +56,25 @@ def test_refresh_adjudication_latest_wins_and_fail_invalidates(tmp_path):
             }
         )
     )
-    latest = latest_green_round(str(tmp_path / "CORRECTNESS_r*.json"))
+    # Unpadded rounds apply in parsed order (r3 before r10), so the r10
+    # FAIL invalidates the r3 verdict; filename order would reverse it.
+    (tmp_path / "CORRECTNESS_r3.json").write_text(
+        json.dumps(
+            {"q_parsed_order": {"rows_match": True, "schema_match": True, "hash_match": True}}
+        )
+    )
+    (tmp_path / "CORRECTNESS_r10.json").write_text(
+        json.dumps(
+            {"q_parsed_order": {"rows_match": False, "schema_match": True, "hash_match": False}}
+        )
+    )
+    latest = latest_green_round(tmp_path)
     assert latest["q_stays_r1"] == 1
     assert latest["q_rechecked"] == 2  # latest verdict wins
     assert "q_later_fail" not in latest  # later FAIL invalidates
     assert latest["q_rows_only"] == 1  # rows-only entries count
     assert "q_never_green" not in latest
+    assert "q_parsed_order" not in latest
 
 
 def test_bench_diff_spread_classification_and_mismatch_warning(
