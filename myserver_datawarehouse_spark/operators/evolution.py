@@ -55,20 +55,9 @@ from pyspark.sql.types import StructType
 
 from myserver_datawarehouse_spark.operators import merge as M
 from myserver_datawarehouse_spark.sources import files as _FS
-from myserver_datawarehouse_spark.operators.merge import (
-    _apply_deletes,
-    _claim_next_version,
-    _commit_manifest,
-    _link_all_files,
-    _link_untouched,
-    _published_version,
-    dedup_latest,
-)
 
 _SPECS = "_SPECS.json"
 _SCHEMA = "_SCHEMA.json"
-_DELETES = "_deletes"
-_PRECEDENCE = "__msdw_precedence"
 
 
 def _layout_dir(version_dir: str, spec_id: int) -> str:
@@ -89,18 +78,10 @@ def _snapshot_schema(version_dir: str) -> StructType:
 
 
 def _current_dir(table_root: str) -> str:
-    cur = _published_version(table_root)
+    cur = M._published_version(table_root)
     if cur is None:
         raise FileNotFoundError(f"no published version under {table_root}")
     return os.path.join(table_root, cur)
-
-
-def _has_data_files(base: str) -> bool:
-    for r, dirs, files in os.walk(base):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        if any(not f.startswith((".", "_")) for f in files):
-            return True
-    return False
 
 
 def _read_layout(
@@ -111,9 +92,9 @@ def _read_layout(
     values cast back to the logical schema (hive round-trips stringify
     partition values; the snapshot-level `_SCHEMA.json` is the truth)."""
     ldir = _layout_dir(version_dir, spec_id)
-    if not os.path.isdir(ldir) or not _has_data_files(ldir):
+    if not _FS._data_files_relative(ldir):
         return None
-    df = _apply_deletes(spark, ldir, spark.read.parquet(ldir))
+    df = M._apply_deletes(spark, ldir, spark.read.parquet(ldir))
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
@@ -186,14 +167,14 @@ def evolve_partition_spec(
         raise ValueError(
             f"table already partitioned by {list(new_partition_by)}"
         )
-    version = _claim_next_version(table_root)
+    version = M._claim_next_version(table_root)
     staged = os.path.join(table_root, version)
     if specs is None:
         prior_spec = active_spec
         specs = [{"id": 0, "partition_by": prior_spec}]
         # Legacy snapshot becomes spec subtree 0 (data + deletes, all
         # hardlinks — inode refcount keeps them alive across vacuums).
-        _link_all_files(cur_dir, _layout_dir(staged, 0))
+        M._link_all_files(cur_dir, _layout_dir(staged, 0))
         # The blanket link also relocated any root bloom sidecar's
         # parquet (META-less, and its row paths would be wrong under
         # _layout-0) — drop the misplaced tree and carry the sidecar
@@ -209,21 +190,12 @@ def evolve_partition_spec(
             spark, cur_dir, staged,
             prefix=os.path.basename(_layout_dir(staged, 0)),
         )
-        ddir = os.path.join(cur_dir, _DELETES)
-        if os.path.isdir(ddir):
-            meta = os.path.join(ddir, "_META.json")
-            if os.path.isfile(meta):
-                shutil.copy(
-                    meta,
-                    os.path.join(
-                        _layout_dir(staged, 0), _DELETES, "_META.json"
-                    ),
-                )
+        _carry_delete_meta(cur_dir, _layout_dir(staged, 0))
     else:
         for s in specs:
             src = _layout_dir(cur_dir, s["id"])
             if os.path.isdir(src):
-                _link_all_files(src, _layout_dir(staged, s["id"]))
+                M._link_all_files(src, _layout_dir(staged, s["id"]))
                 _carry_delete_meta(src, _layout_dir(staged, s["id"]))
         # Root bloom sidecar (row paths already _layout-*-prefixed by
         # the first evolution's carry): copy verbatim — layout data
@@ -232,12 +204,18 @@ def evolve_partition_spec(
     new_id = specs[-1]["id"] + 1
     specs = specs + [{"id": new_id, "partition_by": list(new_partition_by)}]
     os.makedirs(_layout_dir(staged, new_id), exist_ok=True)
+    _write_spec_manifest(staged, specs, schema)
+    M._commit_manifest(table_root, version)
+    return version
+
+
+def _write_spec_manifest(
+    staged: str, specs: list[dict], schema: StructType
+) -> None:
     with open(os.path.join(staged, _SPECS), "w") as fh:
         json.dump(specs, fh)
     with open(os.path.join(staged, _SCHEMA), "w") as fh:
         fh.write(schema.json())
-    _commit_manifest(table_root, version)
-    return version
 
 
 def _carry_root_blooms(
@@ -350,10 +328,10 @@ def _maintain_root_blooms(
 
 
 def _carry_delete_meta(src_layout: str, dst_layout: str) -> None:
-    meta = os.path.join(src_layout, _DELETES, "_META.json")
+    meta = os.path.join(src_layout, M._DELETES, "_META.json")
     if os.path.isfile(meta):
-        os.makedirs(os.path.join(dst_layout, _DELETES), exist_ok=True)
-        shutil.copy(meta, os.path.join(dst_layout, _DELETES, "_META.json"))
+        os.makedirs(os.path.join(dst_layout, M._DELETES), exist_ok=True)
+        shutil.copy(meta, os.path.join(dst_layout, M._DELETES, "_META.json"))
 
 
 def evolved_merge(
@@ -394,177 +372,89 @@ def evolved_merge(
     schema = _snapshot_schema(cur_dir)
     active = specs[-1]
     partition_by = list(active["partition_by"])
-    version = _claim_next_version(table_root)
+    version = M._claim_next_version(table_root)
     staged = os.path.join(table_root, version)
     try:
+        from pyspark.sql import Observation
+
         from myserver_datawarehouse_spark.session import materialize
 
-        # Stage the batch ONCE (r15, guide §1.2/§2.4): the update frame
-        # feeds the fold, the broadcast key set, the touched-partition
-        # prune AND each legacy layout's delete probe + sidecar rewrite
-        # — five consumers that each re-ran the caller's full batch
-        # lineage (measured: the legacy _rewrite_deletes alone re-paid
-        # two source scans per merge). One O(batch) lineage cut; a
-        # production merge stages its source the same way.
+        # Stage the batch once: it feeds the fold, the broadcast key set,
+        # the touched-partition prune and each legacy layout's delete
+        # probe and sidecar rewrite, which would otherwise each re-run
+        # the caller's full batch lineage.
         updates = materialize(updates)
-        # --- Legacy lookup: the batch keys' current rows in every
-        # legacy layout must enter the precedence fold (a newer legacy
-        # row beats a stale replay under order_by).
+        # Legacy lookup: the batch keys' current rows in every legacy
+        # layout enter the precedence fold (a newer legacy row beats a
+        # stale replay under order_by).
         batch_keys = updates.select(*keys).dropDuplicates(list(keys))
-        legacy_rows = None
         legacy_hits: dict[int, DataFrame] = {}
         for spec_l in specs[:-1]:
             lr = _read_layout(spark, cur_dir, spec_l["id"], schema)
-            if lr is None:
-                continue
-            hit = lr.alias("__l").join(
-                F.broadcast(batch_keys).alias("__k"),
-                functools.reduce(
-                    lambda a, b: a & b,
-                    [
-                        F.col(f"__l.{k}").eqNullSafe(F.col(f"__k.{k}"))
-                        for k in keys
-                    ],
-                ),
-                "left_semi",
-            )
-            legacy_hits[spec_l["id"]] = hit
-            legacy_rows = (
-                hit if legacy_rows is None else legacy_rows.unionByName(hit)
-            )
-        # --- ACTIVE layout: merge with touched-partition carry.
-        active_existing = _read_layout(spark, cur_dir, active["id"], schema)
-        existing = active_existing
-        # With an UNPARTITIONED active spec there is no touched-partition
-        # prune (and nothing to hardlink-carry): the merge is full-layout
-        # by construction, same as merge_upsert without partition_by.
-        if existing is not None and partition_by:
-            touched = updates.select(*partition_by).distinct()
-            existing = existing.alias("__e").join(
-                F.broadcast(touched).alias("__t"),
-                functools.reduce(
-                    lambda a, b: a & b,
-                    [
-                        F.col(f"__e.{c}").eqNullSafe(F.col(f"__t.{c}"))
-                        for c in partition_by
-                    ],
-                ),
-                "left_semi",
-            )
-        if legacy_rows is not None:
-            # Legacy hits join the fold WHOLE (their partition values
-            # under the ACTIVE spec may differ from where they sit in
-            # the legacy layout, so the touched-partition prune does
-            # not apply to them).
-            existing = (
-                legacy_rows
-                if existing is None
-                else existing.unionByName(legacy_rows)
-            )
-        if order_by:
-            both = (
-                updates
-                if existing is None
-                else updates.unionByName(existing)
-            )
-            merged = dedup_latest(both, keys, order_by=order_by)
-        else:
-            upd = updates.withColumn(_PRECEDENCE, F.lit(1))
-            both = (
-                upd
-                if existing is None
-                else upd.unionByName(
-                    existing.withColumn(_PRECEDENCE, F.lit(0))
+            if lr is not None:
+                legacy_hits[spec_l["id"]] = M._null_safe_semi(
+                    lr, batch_keys, keys
                 )
+        # ACTIVE layout: merge with touched-partition carry. With an
+        # UNPARTITIONED active spec there is no prune (and nothing to
+        # hardlink-carry), same as merge_upsert without partition_by.
+        existing = _read_layout(spark, cur_dir, active["id"], schema)
+        if existing is not None and partition_by:
+            existing = M._null_safe_semi(
+                existing, updates.select(*partition_by).distinct(),
+                partition_by,
             )
-            merged = dedup_latest(
-                both, keys, order_by=[_PRECEDENCE]
-            ).drop(_PRECEDENCE)
-        merged = merged.select(*schema.fieldNames())
-        from pyspark.sql import Observation
-
+        # Legacy hits join the fold WHOLE: their partition values under
+        # the ACTIVE spec may differ from where they sit in the legacy
+        # layout, so the touched-partition prune does not apply to them.
+        for hit in legacy_hits.values():
+            existing = hit if existing is None else existing.unionByName(hit)
+        merged = M._fold(updates, existing, keys, order_by)
         obs = Observation()
         adir = _layout_dir(staged, active["id"])
-        (
-            merged.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-            .write.mode("append")
-            .partitionBy(*partition_by)
-            .parquet(adir)
+        M._write(
+            merged.select(*schema.fieldNames()).observe(
+                obs, F.count(F.lit(1)).alias("rows_written")
+            ),
+            adir, partition_by, mode="append",
         )
         expected = obs.get["rows_written"]
         cur_active = _layout_dir(cur_dir, active["id"])
         linked: list[str] = []
         if os.path.isdir(cur_active):
-            linked = _link_untouched(cur_active, adir)
+            linked = M._link_untouched(cur_active, adir)
             # Active-layout deletes: carried MINUS the batch's keys (a
             # re-inserted key must not be suppressed by its own past).
             _rewrite_deletes(
                 spark, cur_active, adir, batch_keys, keys, subtract=True
             )
         # AUDIT the active layout before any legacy work — PHYSICAL
-        # completeness: every data file's footer row count must sum to
-        # (rows this merge observed writing) + (rows of the files the
-        # carry hardlinked). The footer is the writer's durable record
-        # of each file, so a missing/truncated file or a lost partition
-        # fails this exactly as the old logical re-read did — without
-        # the two driver-blocking count jobs per micro-batch the
-        # logical form cost (and delete-sidecar-independent, so no
-        # null-safe partition-predicate subtlety). Large layouts fall
-        # back to one distributed footer-metadata count.
-        audit = M._footer_audit(spark, adir)
-        limit = int(
-            spark.conf.get(
-                M._FOOTER_AUDIT_LIMIT_CONF, M._FOOTER_AUDIT_LIMIT_DEFAULT
-            )
-        )
-        n = (
-            audit[0]
-            if audit is not None
-            else spark.read.parquet(adir).count()
-        )
-        carried = (
-            M._footer_rows(linked)
-            if len(linked) <= limit
-            else spark.read.parquet(*linked).count()
+        # completeness, independent of the delete sidecars: its data
+        # files must read back (rows this merge observed writing) +
+        # (rows of the files the carry hardlinked).
+        n, _ = M._read_back(spark, adir)
+        carried, _ = M._read_back(
+            spark, adir, [os.path.relpath(p, adir) for p in linked]
         )
         if n != expected + carried:
             raise RuntimeError(
                 f"evolved_merge audit failed for {staged}: active layout "
                 f"read back {n} rows (wrote {expected}, carried {carried})"
             )
-        # --- LEGACY layouts: hardlink-carry + equality-delete ONLY the
-        # batch keys that actually have a live row in that layout (the
-        # per-spec semi-join above already computed them). Unioning the
-        # FULL batch key set would grow every legacy sidecar by
-        # O(sum of all batch keys) per merge regardless of relevance;
-        # bounding to real hits keeps each sidecar O(superseded rows).
-        for s in specs[:-1]:
-            src = _layout_dir(cur_dir, s["id"])
-            if not os.path.isdir(src) or not _has_data_files(src):
-                continue
-            dst = _layout_dir(staged, s["id"])
-            _link_all_files(src, dst)
-            hit = legacy_hits.get(s["id"])
-            # Materialize the layout's hit-key set ONCE (r15): the
-            # sidecar rewrite consumes it twice (emptiness probe +
-            # delete write), and each un-cut consumption re-ran the
-            # legacy scan + semi-join + dedup (measured 8 jobs / two
-            # layout scans per merge for this one step). O(superseded
-            # keys) rows, the same bound the sidecar itself carries.
-            hit_keys = (
-                None
-                if hit is None
-                else materialize(
-                    hit.select(*keys).dropDuplicates(list(keys))
-                )
+        # LEGACY layouts: hardlink-carry + equality-delete ONLY the batch
+        # keys with a live row in that layout, so each sidecar stays
+        # O(superseded rows) instead of growing by every batch's keys.
+        for sid, hit in legacy_hits.items():
+            src, dst = _layout_dir(cur_dir, sid), _layout_dir(staged, sid)
+            M._link_all_files(src, dst)
+            # The sidecar rewrite consumes the hit keys twice (emptiness
+            # probe + delete write): materialize them once, O(superseded
+            # keys) rows.
+            hit_keys = materialize(
+                hit.select(*keys).dropDuplicates(list(keys))
             )
-            _rewrite_deletes(
-                spark, src, dst, hit_keys, keys, subtract=False
-            )
-        with open(os.path.join(staged, _SPECS), "w") as fh:
-            json.dump(specs, fh)
-        with open(os.path.join(staged, _SCHEMA), "w") as fh:
-            fh.write(schema.json())
+            _rewrite_deletes(spark, src, dst, hit_keys, keys, subtract=False)
+        _write_spec_manifest(staged, specs, schema)
         # Root bloom sidecars maintain INCREMENTALLY: carried files'
         # rows copy verbatim, this commit's new active-layout files get
         # a fresh pass — pruning coverage survives the evolved merge.
@@ -572,7 +462,7 @@ def evolved_merge(
     except Exception:
         shutil.rmtree(staged, ignore_errors=True)
         raise
-    _commit_manifest(table_root, version)
+    M._commit_manifest(table_root, version)
     return version
 
 
@@ -580,7 +470,7 @@ def _rewrite_deletes(
     spark: SparkSession,
     src_layout: str,
     dst_layout: str,
-    key_set: DataFrame | None,
+    key_set: DataFrame,
     keys: Sequence[str],
     subtract: bool,
 ) -> None:
@@ -590,18 +480,16 @@ def _rewrite_deletes(
     for a legacy layout that is the batch keys with a live row in that
     layout, never the whole batch — so each sidecar stays O(rows it
     actually suppresses). The delete file is rewritten (not linked)
-    because it changes; it is O(keys), not data-sized. When `key_set`
-    is None or empty the hardlink-carried sidecar stands verbatim and
-    no rewrite (O(cumulative deletes)) is paid at all."""
+    because it changes; it is O(keys), not data-sized. When a legacy
+    layout's `key_set` is empty the hardlink-carried sidecar stands
+    verbatim and no rewrite (O(cumulative deletes)) is paid at all."""
     meta = M._delete_meta(src_layout)
     if meta is not None and list(meta["keys"]) != list(keys):
         raise ValueError(
             f"evolved_merge keys {list(keys)} != layout's established "
             f"delete spec {meta['keys']}"
         )
-    if not subtract and (
-        key_set is None or key_set.limit(1).count() == 0
-    ):
+    if not subtract and key_set.limit(1).count() == 0:
         # Nothing to add to this legacy layout: its delete part files
         # are already hardlinked under dst by _link_all_files (delete
         # files are immutable-by-convention — every rewrite lands in a
@@ -610,8 +498,8 @@ def _rewrite_deletes(
         _carry_delete_meta(src_layout, dst_layout)
         return
     prior = None
-    src_ddir = os.path.join(src_layout, _DELETES)
-    if meta is not None and _has_data_files(src_ddir):
+    src_ddir = os.path.join(src_layout, M._DELETES)
+    if meta is not None and _FS._data_files_relative(src_ddir):
         prior = (
             spark.read.parquet(src_ddir)
             .select(*keys)
@@ -621,8 +509,6 @@ def _rewrite_deletes(
         new_set = (
             None
             if prior is None
-            else prior
-            if key_set is None
             else prior.join(
                 F.broadcast(key_set),
                 functools.reduce(
@@ -638,7 +524,7 @@ def _rewrite_deletes(
             if prior is None
             else prior.unionByName(key_set).dropDuplicates(list(keys))
         )
-    dst_ddir = os.path.join(dst_layout, _DELETES)
+    dst_ddir = os.path.join(dst_layout, M._DELETES)
     # A carried-by-hardlink _deletes tree must be REPLACED, not
     # appended to (the links point at the old version's delete files).
     if os.path.isdir(dst_ddir):
@@ -663,19 +549,16 @@ def compact_evolved(
     specs = _specs(cur_dir)
     if specs is None:
         raise ValueError(f"{table_root} is not an evolved table")
-    active = specs[-1]
-    df = read_evolved(spark, table_root)
-    version = M._stage_snapshot(
-        spark, table_root, df, list(active["partition_by"])
+    # Bloom sidecars survive the layout-debt paydown: the commit rebuilds
+    # each indexed column's sidecar over the collapsed snapshot (full
+    # rewrite → full rebuild, same amortization).
+    return M.publish_overwrite(
+        spark,
+        table_root,
+        read_snapshot_dir(spark, cur_dir),
+        partition_by=list(specs[-1]["partition_by"]),
+        bloom_columns=_FS.bloom_sidecar_columns(cur_dir),
     )
-    # Bloom sidecars survive the layout-debt paydown: rebuild each
-    # indexed column's sidecar over the collapsed snapshot before the
-    # commit (full rewrite → full rebuild, same amortization).
-    staged = os.path.join(table_root, version)
-    for col in _FS.bloom_sidecar_columns(cur_dir):
-        _FS.write_bloom_sidecar(spark, staged, col)
-    _commit_manifest(table_root, version)
-    return version
 
 
 def _link_missing_files(src: str, dst: str) -> None:
@@ -715,24 +598,23 @@ def evolved_append(
     schema = _snapshot_schema(cur_dir)
     active = specs[-1]
     partition_by = list(active["partition_by"])
-    version = _claim_next_version(table_root)
+    version = M._claim_next_version(table_root)
     staged = os.path.join(table_root, version)
     try:
         from pyspark.sql import Observation
 
         obs = Observation()
         adir = _layout_dir(staged, active["id"])
-        (
-            rows.select(*schema.fieldNames())
-            .observe(obs, F.count(F.lit(1)).alias("rows_written"))
-            .write.mode("append")
-            .partitionBy(*partition_by)
-            .parquet(adir)
+        M._write(
+            rows.select(*schema.fieldNames()).observe(
+                obs, F.count(F.lit(1)).alias("rows_written")
+            ),
+            adir, partition_by, mode="append",
         )
         expected = obs.get["rows_written"]
         for s in specs:
             src = _layout_dir(cur_dir, s["id"])
-            if not os.path.isdir(src) or not _has_data_files(src):
+            if not _FS._data_files_relative(src):
                 continue
             dst = _layout_dir(staged, s["id"])
             if s["id"] == active["id"]:
@@ -744,24 +626,20 @@ def evolved_append(
                 # delete set carries verbatim (append-only feeds never
                 # re-insert deleted keys — the fast-append contract).
                 _link_missing_files(src, dst)
-                _carry_delete_meta(src, dst)
             else:
-                _link_all_files(src, dst)
-                _carry_delete_meta(src, dst)
-        back = _read_layout(spark, staged, active["id"], schema)
-        n = 0 if back is None else back.count()
-        prior_active = _read_layout(spark, cur_dir, active["id"], schema)
-        prior_n = 0 if prior_active is None else prior_active.count()
+                M._link_all_files(src, dst)
+            _carry_delete_meta(src, dst)
+        # AUDIT (physical, as in evolved_merge): the active layout's data
+        # files read back the prior ones plus the appended rows.
+        n, _ = M._read_back(spark, adir)
+        prior_n, _ = M._read_back(spark, _layout_dir(cur_dir, active["id"]))
         if n != expected + prior_n:
             raise RuntimeError(
                 f"evolved_append audit failed for {staged}: active "
                 f"layout read back {n} rows (appended {expected}, "
                 f"prior {prior_n})"
             )
-        with open(os.path.join(staged, _SPECS), "w") as fh:
-            json.dump(specs, fh)
-        with open(os.path.join(staged, _SCHEMA), "w") as fh:
-            fh.write(schema.json())
+        _write_spec_manifest(staged, specs, schema)
         # Root bloom sidecars maintain INCREMENTALLY: every prior file
         # carried by hardlink keeps its row verbatim, only this batch's
         # new part files get a fresh pass — append cost stays O(batch).
@@ -769,5 +647,5 @@ def evolved_append(
     except Exception:
         shutil.rmtree(staged, ignore_errors=True)
         raise
-    _commit_manifest(table_root, version)
+    M._commit_manifest(table_root, version)
     return version

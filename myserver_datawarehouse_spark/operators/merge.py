@@ -54,6 +54,49 @@ def dedup_latest(
     )
 
 
+# ------------------------------------------------------------------
+# The merge core every upsert shares (merge_upsert,
+# merge_upsert_published, evolution.evolved_merge): `_fold` owns the
+# precedence rule and `_null_safe_semi` the broadcast null-safe prune
+# (touched partitions, legacy-layout key lookups).
+
+
+def _fold(
+    updates: DataFrame,
+    existing: DataFrame | None,
+    keys: Sequence[str],
+    order_by: Sequence = (),
+) -> DataFrame:
+    """The upsert precedence rule every merge shares: one winning row per
+    key over `updates` + `existing`. With `order_by` the highest value
+    wins wherever the row came from; without it the update side wins
+    through an explicit precedence column."""
+    if order_by:
+        both = updates if existing is None else updates.unionByName(existing)
+        return dedup_latest(both, keys, order_by=order_by)
+    both = updates.withColumn(_PRECEDENCE, F.lit(1))
+    if existing is not None:
+        both = both.unionByName(existing.withColumn(_PRECEDENCE, F.lit(0)))
+    return dedup_latest(both, keys, order_by=[_PRECEDENCE]).drop(_PRECEDENCE)
+
+
+def _null_safe_semi(
+    df: DataFrame, probe: DataFrame, cols: Sequence[str]
+) -> DataFrame:
+    """Rows of `df` whose `cols` match some row of the small, broadcast
+    `probe` under NULL-SAFE equality. A plain equi-join never matches
+    null = null, so rows in a null partition (or with a null key) would
+    be neither merged nor carried and would vanish from the snapshot."""
+    return df.alias("__e").join(
+        F.broadcast(probe).alias("__t"),
+        functools.reduce(
+            lambda a, b: a & b,
+            [F.col(f"__e.{c}").eqNullSafe(F.col(f"__t.{c}")) for c in cols],
+        ),
+        "left_semi",
+    )
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -111,6 +154,7 @@ def merge_upsert(
     native root pointer."""
     _repair_symlink(target_path)
     link_untouched = bool(partition_by)
+    existing = None
     if _table_exists(target_path):
         existing = spark.read.parquet(target_path)
         existing_spec = _partition_spec(target_path)
@@ -145,48 +189,18 @@ def merge_upsert(
             # Only the partitions the batch touches participate: partition
             # pruning on the existing side + copy-on-write hardlinks for
             # everything else. An hourly batch rewrites O(batch dates), not
-            # O(table).
-            touched = updates.select(*partition_by).distinct()
-            # NULL-SAFE equality, not a column-name equi-join: a null
-            # partition value writes into __HIVE_DEFAULT_PARTITION__ in
-            # the staged snapshot (marking that directory 'touched', so
-            # the hardlink carry skips it), but a plain equi-join never
-            # matches null = null — the existing null-partition rows
-            # would be neither merged nor carried, silently vanishing
-            # from the new snapshot. eqNullSafe keeps them in the merge.
-            existing = existing.alias("__e").join(
-                F.broadcast(touched).alias("__t"),
-                functools.reduce(
-                    lambda a, b: a & b,
-                    [
-                        F.col(f"__e.{c}").eqNullSafe(F.col(f"__t.{c}"))
-                        for c in partition_by
-                    ],
-                ),
-                "left_semi",
+            # O(table). A null partition value is a touched partition
+            # too (__HIVE_DEFAULT_PARTITION__), hence the null-safe prune.
+            existing = _null_safe_semi(
+                existing, updates.select(*partition_by).distinct(),
+                partition_by,
             )
-        if order_by:
-            merged = dedup_latest(
-                updates.unionByName(existing), keys, order_by=order_by
-            )
-        else:
-            merged = dedup_latest(
-                updates.withColumn(_PRECEDENCE, F.lit(1)).unionByName(
-                    existing.withColumn(_PRECEDENCE, F.lit(0))
-                ),
-                keys,
-                order_by=[_PRECEDENCE],
-            ).drop(_PRECEDENCE)
-    elif order_by:
-        merged = dedup_latest(updates, keys, order_by=order_by)
-    else:
-        merged = dedup_latest(updates.withColumn(_PRECEDENCE, F.lit(1)), keys,
-                              order_by=[_PRECEDENCE]).drop(_PRECEDENCE)
     # The merged lineage reads target_path (the OLD snapshot) while the
     # write lands in a fresh version directory — disjoint paths, so no
-    # localCheckpoint materialization is needed anymore.
-    _publish_path_snapshot(spark, target_path, merged, partition_by,
-                           link_untouched=link_untouched)
+    # materialization is needed.
+    _publish_path_snapshot(spark, target_path,
+                           _fold(updates, existing, keys, order_by),
+                           partition_by, link_untouched=link_untouched)
 
 
 def merge_upsert_coalesce(
@@ -329,7 +343,7 @@ def _partition_spec(target_path: str) -> list[str]:
     while os.path.isdir(cur):
         subdirs = [
             d for d in os.listdir(cur)
-            if "=" in d and not d.startswith((".", "_"))
+            if "=" in d and _FILES._is_data_entry(d)
             and os.path.isdir(os.path.join(cur, d))
         ]
         if not subdirs:
@@ -446,28 +460,7 @@ def data_file_count(target_path: str) -> int:
         if cur is not None
         else os.path.realpath(target_path)
     )
-    n = 0
-    for root, dirs, files in os.walk(base):
-        # sidecar trees (e.g. the _deletes equality-delete files) are
-        # not data files — but a hive partition directory can start
-        # with an underscore too (a null partition value renders as
-        # __HIVE_DEFAULT_PARTITION__ and a partition COLUMN may itself
-        # be underscore-named, giving "_col=..."), so only prune
-        # underscore dirs that are not partition dirs.
-        dirs[:] = [d for d in dirs if not _is_sidecar_dir(d)]
-        n += sum(1 for f in files if not f.startswith((".", "_")))
-    return n
-
-
-def _is_sidecar_dir(d: str) -> bool:
-    """True for marker/sidecar directories (.crc trees, _deletes,
-    _temporary); FALSE for hive partition directories even when they
-    start with an underscore ("_col=v", "col=__HIVE_DEFAULT_PARTITION__"
-    — the latter never starts with "_" at the dir level but an
-    underscore-named partition column does)."""
-    if d.startswith("."):
-        return True
-    return d.startswith("_") and "=" not in d
+    return len(_FILES._data_files_relative(base))
 
 
 def _data_file_inodes(base: str) -> dict[str, int]:
@@ -475,19 +468,15 @@ def _data_file_inodes(base: str) -> dict[str, int]:
     (sidecar trees excluded) — the delete_where audit's evidence that
     a merge-on-read commit carried EXACTLY the current data file set
     and copied zero bytes (hardlinks share inodes)."""
-    out: dict[str, int] = {}
-    for root, dirs, files in os.walk(base):
-        dirs[:] = [d for d in dirs if not _is_sidecar_dir(d)]
-        for f in files:
-            if not f.startswith((".", "_")):
-                p = os.path.join(root, f)
-                out[os.path.relpath(p, base)] = os.stat(p).st_ino
-    return out
+    return {
+        rel: os.stat(os.path.join(base, rel)).st_ino
+        for rel in _FILES._data_files_relative(base)
+    }
 
 
 def _table_exists(target_path: str) -> bool:
     return os.path.isdir(target_path) and any(
-        not f.startswith((".", "_")) for f in os.listdir(target_path)
+        _FILES._is_data_entry(f) for f in os.listdir(target_path)
     )
 
 
@@ -501,12 +490,16 @@ def _write(
 
 
 # ------------------------------------------------------------------
-# Path-table snapshot commit: the symlink tier of the WAP protocol.
-# `target_path` stays a plain `spark.read.parquet`-able path for every
-# reader; underneath it is a symlink into a sibling hidden versions
-# root, swapped atomically at commit. This is what lets merge_upsert /
-# merge_upsert_coalesce / ensure_columns share publish_overwrite's
-# crash-atomicity without changing a single call site.
+# Commit machinery shared by both table kinds. A writer stages through
+# `_stage_snapshot` (write + `_read_back` audit), or writes its own
+# files and audits them with `_read_back`; only `_write_current` ever
+# writes a `_CURRENT` pointer. Path tables keep `target_path` a plain
+# `spark.read.parquet`-able path: underneath it is a symlink into a
+# sibling hidden versions root, swapped atomically at commit by
+# `_publish_path_snapshot` (with its own symlink-aware conflict check),
+# which lets merge_upsert / merge_upsert_coalesce / ensure_columns
+# share publish_overwrite's crash-atomicity without changing a call
+# site.
 
 
 def _versions_root(target_path: str) -> str:
@@ -544,31 +537,36 @@ _FOOTER_AUDIT_LIMIT_CONF = "spark.msdw.audit.footerFileLimit"
 _FOOTER_AUDIT_LIMIT_DEFAULT = "4096"
 
 
-def _footer_audit(
-    spark: SparkSession, staged_dir: str
-) -> tuple[int, set] | None:
-    """Driver-side READ-BACK audit of a freshly staged snapshot: sum of
-    parquet footer row counts + the union of footer schema names (plus
-    hive partition-dir column names) over every data file. The footer
-    is the writer's own durable record of each file's contents, so this
-    is the same physical-completeness check as re-reading the snapshot
-    through Spark — a missing, truncated or corrupt file fails the
-    footer parse; a lost row flips the sum — without one driver-blocking
-    distributed count per commit (this is how table formats audit:
-    manifest stats, not re-scans). Returns None when the staged file
-    count exceeds the conf'd limit; the caller then audits distributed."""
+def _read_back(
+    spark: SparkSession, base: str, files: Sequence[str] | None = None
+) -> tuple[int, set]:
+    """READ-BACK audit shared by every writer: (rows, column names) of
+    the data files under `base` — or of just `files`, given relative to
+    `base`. Up to the conf'd file limit it sums parquet footer row
+    counts and unions footer schema names (plus hive partition-dir
+    column names) on the driver. The footer is the writer's own durable
+    record of each file, so this is the same physical-completeness
+    check as re-reading through Spark — a missing, truncated or corrupt
+    file fails the footer parse; a lost row flips the sum — without a
+    driver-blocking distributed count per commit (table formats audit
+    the same way: manifest stats, not re-scans). Past the limit the
+    same read-back runs as one distributed count."""
     import pyarrow.parquet as pq
 
-    files = _FILES._data_files_relative(staged_dir)
+    rels = _FILES._data_files_relative(base) if files is None else files
     limit = int(
         spark.conf.get(_FOOTER_AUDIT_LIMIT_CONF, _FOOTER_AUDIT_LIMIT_DEFAULT)
     )
-    if len(files) > limit:
-        return None
+    if len(rels) > limit:
+        back = spark.read.parquet(
+            *([base] if files is None else
+              [os.path.join(base, f) for f in files])
+        )
+        return back.count(), set(back.columns)
     total = 0
     cols: set = set()
-    for rel in files:
-        pf = pq.ParquetFile(os.path.join(staged_dir, rel))
+    for rel in rels:
+        pf = pq.ParquetFile(os.path.join(base, rel))
         total += pf.metadata.num_rows
         cols.update(pf.schema_arrow.names)
         for seg in rel.split(os.sep)[:-1]:
@@ -616,13 +614,7 @@ def _stage_snapshot(
             # verify the staged dir is present and empty-readable.
             n = _read_snapshot(spark, staged).count()
         else:
-            footer = _footer_audit(spark, staged)
-            if footer is not None:
-                n, back_cols = footer
-            else:
-                back = spark.read.parquet(staged)
-                n = back.count()
-                back_cols = set(back.columns)
+            n, back_cols = _read_back(spark, staged)
             if back_cols != set(df.columns):
                 raise RuntimeError(
                     f"audit failed for {staged}: cols {sorted(back_cols)} "
@@ -634,16 +626,6 @@ def _stage_snapshot(
                 f"(wrote {expected})"
             )
     return version
-
-
-def _footer_rows(paths: Sequence[str]) -> int:
-    """Sum of parquet footer row counts over explicit file paths —
-    the driver-side twin of `_footer_audit` for a file list the caller
-    already holds (e.g. the hardlink-carried set a merge audit adds to
-    its own written rows)."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
 
 
 def _read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
@@ -692,12 +674,7 @@ def _apply_deletes(
     if meta is None:
         return df
     ddir = os.path.join(snapshot_dir, _DELETES)
-    has_rows = any(
-        not f.startswith((".", "_"))
-        for _r, _d, files in os.walk(ddir)
-        for f in files
-    )
-    if not has_rows:
+    if not _FILES._data_files_relative(ddir):
         return df
     keys = meta["keys"]
     dels = spark.read.parquet(ddir).select(*keys).dropDuplicates(keys)
@@ -722,7 +699,7 @@ def _link_untouched(current_dir: str, staged_dir: str) -> list[str]:
     wrote itself)."""
     linked: list[str] = []
     for entry in os.listdir(current_dir):
-        if entry.startswith((".", "_")):
+        if not _FILES._is_data_entry(entry):
             continue  # markers/sidecars belong to their own version
         src = os.path.join(current_dir, entry)
         dst = os.path.join(staged_dir, entry)
@@ -851,16 +828,10 @@ def _publish_path_snapshot(
                     "(aborted earlier migration?) — repair the table "
                     "manually before writing"
                 )
-            tmp = os.path.join(vroot, f".{_CURRENT}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write("v0")
-            os.replace(tmp, os.path.join(vroot, _CURRENT))
+            _write_current(vroot, "v0")
             os.rename(target, v0)
         _swap_symlink(target, vroot, version)
-        tmp = os.path.join(vroot, f".{_CURRENT}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, os.path.join(vroot, _CURRENT))
+        _write_current(vroot, version)
     return version
 
 
@@ -899,6 +870,9 @@ def write_bucketed(
 # ------------------------------------------------------------------
 # Write-audit-publish: the manifest-commit tier of the writer (S4's
 # remaining ACID gap vs a table format's MERGE — crash atomicity).
+# Every manifest-root commit — publish_overwrite, merge_upsert_published,
+# delete_where and the evolution writers — publishes through
+# `_commit_manifest`.
 
 _CURRENT = "_CURRENT"
 _DELETES = "_deletes"
@@ -1011,10 +985,17 @@ def _commit_manifest(table_root: str, version: str) -> None:
                 f"staged version {staged} disappeared before commit "
                 "(vacuumed by a concurrent process?); retry the publish"
             )
-        tmp = os.path.join(table_root, f".{_CURRENT}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, os.path.join(table_root, _CURRENT))  # commit point
+        _write_current(table_root, version)
+
+
+def _write_current(root: str, version: str) -> None:
+    """Point the `_CURRENT` manifest under `root` at `version`: write a
+    temp file, then one atomic `os.replace` — the commit point. Callers
+    hold the table's commit lock."""
+    tmp = os.path.join(root, f".{_CURRENT}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(version)
+    os.replace(tmp, os.path.join(root, _CURRENT))
 
 
 def read_published(spark: SparkSession, table_root: str) -> DataFrame:
@@ -1071,31 +1052,13 @@ def merge_upsert_published(
         )
     existing = _read_snapshot(spark, cur_dir)
     if partition_by:
-        touched = updates.select(*partition_by).distinct()
-        existing = existing.alias("__e").join(
-            F.broadcast(touched).alias("__t"),
-            functools.reduce(
-                lambda a, b: a & b,
-                [
-                    F.col(f"__e.{c}").eqNullSafe(F.col(f"__t.{c}"))
-                    for c in partition_by
-                ],
-            ),
-            "left_semi",
+        existing = _null_safe_semi(
+            existing, updates.select(*partition_by).distinct(), partition_by
         )
-    if order_by:
-        merged = dedup_latest(
-            updates.unionByName(existing), keys, order_by=order_by
-        )
-    else:
-        merged = dedup_latest(
-            updates.withColumn(_PRECEDENCE, F.lit(1)).unionByName(
-                existing.withColumn(_PRECEDENCE, F.lit(0))
-            ),
-            keys,
-            order_by=[_PRECEDENCE],
-        ).drop(_PRECEDENCE)
-    version = _stage_snapshot(spark, table_root, merged, partition_by)
+    version = _stage_snapshot(
+        spark, table_root, _fold(updates, existing, keys, order_by),
+        partition_by,
+    )
     staged_dir = os.path.join(table_root, version)
     if partition_by:
         _link_untouched(cur_dir, staged_dir)
@@ -1358,29 +1321,10 @@ def delete_where(
             f"missing={sorted(missing)[:3]}, "
             f"inode-mismatch={sorted(relinked)[:3]})"
         )
-    # Delete sets are manifest-scale metadata: audit their read-back
-    # from parquet footers driver-side (r15 — the same physical-
-    # completeness guarantee as the distributed counts this replaces:
-    # a missing/truncated delete file fails the footer parse, a lost
-    # row flips the sum — minus two driver-blocking jobs per delete
-    # commit), falling back to the distributed count past the same
-    # conf'd file limit as _footer_audit.
-    limit = int(
-        spark.conf.get(_FOOTER_AUDIT_LIMIT_CONF, _FOOTER_AUDIT_LIMIT_DEFAULT)
-    )
-
-    def _delete_rows(d: str) -> int:
-        files = _FILES._data_files_relative(d)
-        if len(files) > limit:
-            return spark.read.parquet(d).count()
-        return _footer_rows(os.path.join(d, f) for f in files)
-
-    back = _delete_rows(ddir)
-    prior = (
-        _delete_rows(os.path.join(cur_dir, _DELETES))
-        if _delete_meta(cur_dir) is not None
-        else 0
-    )
+    # Delete sets read back through the shared audit (a version without
+    # a prior delete sidecar has no files there and reads back 0 rows).
+    back, _ = _read_back(spark, ddir)
+    prior, _ = _read_back(spark, os.path.join(cur_dir, _DELETES))
     if back != prior + n_new:
         raise RuntimeError(
             f"audit failed for {staged}: {back} delete rows read back "

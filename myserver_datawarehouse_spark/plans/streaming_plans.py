@@ -259,24 +259,21 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned DataFrame only re-reads the merged parquet target. Its bench
     time is therefore end-to-end streaming wall, not lazy-plan cost.
 
-    The work dir is a FIXED per-sf path (not a fresh mkdtemp): repeated
-    verify/bench runs reuse/overwrite one table copy instead of leaking
-    one per run. Checkpoint and target are cleared up front so a stale
-    previous run can never feed rows into this one."""
-    import hashlib
+    The work dir is keyed per (sf, pid) and removed at exit, so two
+    processes on one SF never share a table and repeated runs in one
+    process reuse one copy. Checkpoint and target are cleared up front
+    so a stale previous run can never feed rows into this one."""
     import os
     import shutil
-    import tempfile
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        "msdw_stream_upsert_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    from myserver_datawarehouse_spark.operators.merge import drop_table
+    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
+
+    work = _pid_tmpdir("msdw_stream_upsert", sf_dir)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     # drop_table, not rmtree: the merged target is a WAP snapshot
-    # symlink since round 7 (rmtree refuses links and would leave the
-    # previous run's snapshots readable through it).
-    from myserver_datawarehouse_spark.operators.merge import drop_table
+    # symlink (rmtree refuses links and would leave the previous run's
+    # snapshots readable through it).
 
     drop_table(os.path.join(work, "target"))
     target = SJ.upsert_merge_stream(spark, sf_dir, work)
@@ -454,19 +451,15 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     A lost delete (resurrected row), a replayed update, or an
     order-dependent apply all shift a class total and flip the hash.
 
-    Eager-execution, fixed per-sf work dir (same conventions as
+    Eager-execution, per-(sf, pid) work dir (same conventions as
     streaming_upsert_merge); the returned frame re-reads the target."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from myserver_datawarehouse_spark.operators.merge import drop_table
+    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        "msdw_stream_cdc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    work = _pid_tmpdir("msdw_stream_cdc", sf_dir)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     drop_table(os.path.join(work, "target"))
     target = SJ.cdc_apply_stream(spark, sf_dir, work)
@@ -510,33 +503,28 @@ STREAMING_CDC_APPLY_SQL = _cdc_apply_sql()
 def streaming_cdc_replication(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """CDC producer→consumer contract, end-to-end (round-8 verdict ask
-    #5): primary publishes v1→v2 via WAP, `table_changes` EXTRACTS the
-    feed, the streaming apply CONSUMES it into a replica, and the
-    adjudicated output proves replica ≡ primary@v2 two ways — the
-    per-event-type rollup of the replica (oracle recomputes v2 from
-    the raw source by the same predicates) and `n_mismatch`, a
-    null-safe full-outer row diff between replica and v2 that must be
-    0 on every row (a lost tombstone, a replayed update, or a dropped
-    insert makes it positive and flips the hash).
+    """CDC producer→consumer contract, end-to-end: primary publishes
+    v1→v2 via WAP, `table_changes` EXTRACTS the feed, the streaming
+    apply CONSUMES it into a replica, and the adjudicated output
+    proves replica ≡ primary@v2 two ways — the per-event-type rollup
+    of the replica (oracle recomputes v2 from the raw source by the
+    same predicates) and `n_mismatch`, a null-safe full-outer row diff
+    between replica and v2 that must be 0 on every row (a lost
+    tombstone, a replayed update, or a dropped insert makes it
+    positive and flips the hash).
 
-    Eager-execution, fixed per-sf work dir (the streaming_upsert_merge
+    Eager-execution, per-(sf, pid) work dir (the streaming_upsert_merge
     convention); the returned frame re-reads both tables."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from myserver_datawarehouse_spark.operators.merge import (
         drop_table,
         read_version,
     )
+    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        "msdw_stream_cdcrep_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    work = _pid_tmpdir("msdw_stream_cdcrep", sf_dir)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     shutil.rmtree(os.path.join(work, "primary"), ignore_errors=True)
     drop_table(os.path.join(work, "replica"))
@@ -628,18 +616,13 @@ def streaming_evolved_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     died by equality-delete sidecar, not a rewrite).
 
     Same eager-at-construction bench note as streaming_upsert_merge;
-    fixed per-sf work dir, cleared up front."""
-    import hashlib
+    per-(sf, pid) work dir, cleared up front."""
     import os
     import shutil
 
-    import tempfile
+    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        "msdw_stream_evolve_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-    )
+    work = _pid_tmpdir("msdw_stream_evolve", sf_dir)
     shutil.rmtree(work, ignore_errors=True)
     from myserver_datawarehouse_spark.operators import evolution as EV
     from myserver_datawarehouse_spark.operators import merge as M

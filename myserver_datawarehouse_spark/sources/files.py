@@ -139,23 +139,27 @@ def _bloom_dir(table_dir: str, column: str) -> str:
     return os.path.join(table_dir, BLOOM_SIDECAR, column)
 
 
+def _is_data_entry(name: str) -> bool:
+    """The one walk rule for snapshot trees, Spark's own: dot- and
+    underscore-named entries are markers and sidecars (`_SUCCESS`,
+    `_deletes`, `_blooms`), except hive partition directories, whose
+    column may itself start with an underscore (`_col=v`)."""
+    return not name.startswith(".") and (
+        "=" in name or not name.startswith("_")
+    )
+
+
 def _data_files_relative(table_dir: str) -> list[str]:
     """Relative paths of every data file under a snapshot dir, sidecar
-    trees (`_blooms`, `_deletes`, dot-dirs) excluded — the same walk
-    contract as operators/merge._data_file_inodes, EXCEPT that
-    `_layout-*` spec subtrees (partition evolution) are data, not
-    sidecars, and are descended into."""
+    trees (`_blooms`, `_deletes`, dot-dirs) excluded, while `_layout-*`
+    spec subtrees (partition evolution) are data and are descended
+    into."""
     import os
 
     out: list[str] = []
     for root, dirs, files in os.walk(table_dir):
         dirs[:] = [
-            d
-            for d in dirs
-            if d.startswith("_layout-")
-            or not (
-                d.startswith(".") or (d.startswith("_") and "=" not in d)
-            )
+            d for d in dirs if d.startswith("_layout-") or _is_data_entry(d)
         ]
         for f in files:
             if not f.startswith((".", "_")):

@@ -991,7 +991,7 @@ def compaction_race_stream(
             # Compaction attempt whose manifest commit crashes: WAP
             # must leave the published snapshot untouched.
             before = M._published_version(root)
-            real = EV._commit_manifest
+            real = M._commit_manifest
 
             class _InjectedCommitCrash(RuntimeError):
                 pass
@@ -1001,19 +1001,20 @@ def compaction_race_stream(
                     "injected compaction-commit crash"
                 )
 
-            # Module-global patch: intentional single-writer scope —
-            # any other table committing through EV in this driver
-            # process during the window would crash too. The dedicated
-            # exception type keeps the except arm from swallowing an
-            # unrelated RuntimeError out of compact_evolved as the
-            # expected injected crash.
-            EV._commit_manifest = _boom
+            # Module-global patch of the one manifest commit every
+            # writer goes through: intentional single-writer scope —
+            # any other table committing in this driver process during
+            # the window would crash too. The dedicated exception type
+            # keeps the except arm from swallowing an unrelated
+            # RuntimeError out of compact_evolved as the expected
+            # injected crash.
+            M._commit_manifest = _boom
             try:
                 EV.compact_evolved(s, root)
             except _InjectedCommitCrash:
                 pass
             finally:
-                EV._commit_manifest = real
+                M._commit_manifest = real
             flags["crash_left_version_intact"] = (
                 M._published_version(root) == before
             )

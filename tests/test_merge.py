@@ -655,6 +655,27 @@ def test_null_partition_rows_survive_partitioned_merge(spark, tmp_path):
     assert rows_of(spark, p) == {(1, "A", None), (3, "c", None), (2, "B", 10)}
 
 
+def test_underscore_partition_column_path_table_merge(spark, tmp_path):
+    """A path table partitioned only by an underscore-named column has
+    nothing but `_col=v` directories at its top level: the merge must
+    still see the table, sniff its layout and carry the untouched
+    partitions."""
+    p = str(tmp_path / "t")
+
+    def rows(data):
+        return spark.createDataFrame(data, "id long, v string, _d int")
+
+    M.merge_upsert(spark, p, rows([(1, "a", 10), (2, "b", 20)]),
+                   keys=["id"], partition_by=["_d"])
+    M.merge_upsert(spark, p, rows([(2, "B", 20), (3, "c", 30)]),
+                   keys=["id"], partition_by=["_d"])
+    assert M._partition_spec(p) == ["_d"]
+    assert {tuple(r) for r in spark.read.parquet(p)
+            .select("id", "v", "_d").collect()} == {
+        (1, "a", 10), (2, "B", 20), (3, "c", 30)
+    }
+
+
 def test_streaming_merge_target_vacuumed_per_batch(spark, tmp_path):
     # Round-7 advice: each foreachBatch commit publishes a new snapshot
     # version; without retention an N-batch stream holds O(N x table).

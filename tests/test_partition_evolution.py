@@ -213,19 +213,113 @@ def test_merge_crash_before_commit_leaves_table_intact(spark, tmp_path):
     bad = spark.createDataFrame(
         [(9, "z", 99, 9.0)], "id long, typ string, day int, v double"
     )
-    real = EV._commit_manifest
+    real = M._commit_manifest
 
     def boom(*a, **k):
         raise RuntimeError("injected crash before manifest commit")
 
-    EV._commit_manifest = boom
+    M._commit_manifest = boom
     try:
         with pytest.raises(RuntimeError, match="injected"):
             EV.evolved_merge(spark, root, bad, keys=["id"])
     finally:
-        EV._commit_manifest = real
+        M._commit_manifest = real
     assert M._published_version(root) == cur
     assert _vals(spark, root) == before
+
+
+def _one_row(spark):
+    return spark.createDataFrame(
+        [(9, "z", 12, 9.0)], "id long, typ string, day int, v double"
+    )
+
+
+# writer name -> (evolve the table first?, the write under test)
+_MANIFEST_COMMITS = {
+    "publish_overwrite": (False, lambda s, r: M.publish_overwrite(
+        s, r, _one_row(s), partition_by=["day"])),
+    "merge_upsert_published": (False, lambda s, r: M.merge_upsert_published(
+        s, r, _one_row(s), keys=["id"], partition_by=["day"])),
+    "delete_where": (False, lambda s, r: M.delete_where(
+        s, r, F.col("id") == 1, keys=["id"])),
+    "evolve_partition_spec": (False, lambda s, r: EV.evolve_partition_spec(
+        s, r, ["day", "typ"])),
+    "evolved_merge": (True, lambda s, r: EV.evolved_merge(
+        s, r, _one_row(s), keys=["id"])),
+    "compact_evolved": (True, lambda s, r: EV.compact_evolved(s, r)),
+    "compact_table": (False, lambda s, r: M.compact_table(s, r)),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_MANIFEST_COMMITS))
+def test_every_manifest_commit_goes_through_commit_manifest(
+    spark, tmp_path, monkeypatch, writer
+):
+    """Each manifest-root writer publishes through the one
+    `merge._commit_manifest`: with it patched to crash, the writer
+    raises and the published version and its rows stay as they were."""
+    evolved, write = _MANIFEST_COMMITS[writer]
+    root = _tbl(spark, tmp_path)
+    if evolved:
+        EV.evolve_partition_spec(spark, root, ["day", "typ"])
+    cur = M._published_version(root)
+    before = _vals(spark, root)
+
+    class InjectedCommitCrash(RuntimeError):
+        pass
+
+    def boom(*a, **k):
+        raise InjectedCommitCrash(writer)
+
+    monkeypatch.setattr(M, "_commit_manifest", boom)
+    with pytest.raises(InjectedCommitCrash):
+        write(spark, root)
+    assert M._published_version(root) == cur
+    assert _vals(spark, root) == before
+
+
+def test_underscore_partition_column_keeps_every_row(spark, tmp_path):
+    """Spark reads `_col=v` partition directories as data, so an evolved
+    table partitioned by an underscore-named column keeps the rows under
+    them through merge carry, append, read and compaction."""
+    schema = "id long, _src string, day int, v double"
+    root = str(tmp_path / "tbl")
+    base = [(i, "ab"[i % 2], 10 + i % 3, float(i)) for i in range(10)]
+    M.publish_overwrite(
+        spark, root, spark.createDataFrame(base, schema), partition_by=["day"]
+    )
+    EV.evolve_partition_spec(spark, root, ["_src"])
+    EV.evolved_merge(
+        spark, root,
+        spark.createDataFrame([(20, "a", 10, 20.0), (21, "c", 11, 21.0)],
+                              schema),
+        keys=["id"],
+    )
+    # Touches _src=b only (id 3 moves out of the legacy layout): the
+    # active layout's _src=a and _src=c partitions are carried.
+    EV.evolved_merge(
+        spark, root,
+        spark.createDataFrame([(22, "b", 12, 22.0), (3, "b", 10, 30.0)],
+                              schema),
+        keys=["id"],
+    )
+    EV.evolved_append(
+        spark, root, spark.createDataFrame([(23, "d", 11, 23.0)], schema)
+    )
+    expected = sorted(
+        [r for r in base if r[0] != 3]
+        + [(3, "b", 10, 30.0), (20, "a", 10, 20.0), (21, "c", 11, 21.0),
+           (22, "b", 12, 22.0), (23, "d", 11, 23.0)]
+    )
+
+    def rows(df):
+        return sorted((r.id, r._src, r.day, r.v) for r in df.collect())
+
+    assert rows(EV.read_evolved(spark, root)) == expected
+    EV.compact_evolved(spark, root)
+    vdir = os.path.join(root, M._published_version(root))
+    assert M._partition_spec(vdir) == ["_src"]
+    assert rows(M.read_published(spark, root)) == expected
 
 
 def test_vacuum_keeps_live_layout_files(spark, tmp_path):

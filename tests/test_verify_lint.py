@@ -3,10 +3,12 @@ fire — a HUGEINT oracle column or a NULL-promoted Spark int column was
 the round-2 failure mode, and the lint is what keeps it from recurring."""
 
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo/tools")
+TOOLS = Path(__file__).resolve().parents[1] / "tools"
+sys.path.insert(0, str(TOOLS))
 
 from verify_local import compare  # noqa: E402
 
@@ -86,7 +88,7 @@ def test_bench_diff_spread_classification_and_mismatch_warning(
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(TOOLS))
     from bench_diff import main as bd_main
 
     old = {
@@ -130,7 +132,7 @@ def test_plan_lint_classifier():
     sanctioned vectorized/literal forms."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(TOOLS))
     from plan_lint import classify
 
     assert "CARTESIAN" in classify("(4) CartesianProduct Inner")
@@ -183,7 +185,7 @@ def test_materialize_allowlist_names_consumers():
 def test_materialize_allowlist_matches_registry():
     """Every allowlisted name is a real registry query (no dead
     entries shielding future queries by name collision)."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(TOOLS))
     from plan_lint import ALLOW
 
     from myserver_datawarehouse_spark import registry

@@ -13,8 +13,10 @@ import contextlib
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from myserver_datawarehouse_spark import registry
 from myserver_datawarehouse_spark.session import get_spark
@@ -115,7 +117,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(ROOT / "PLANS.md", "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -30,8 +30,10 @@ import contextlib
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF = "/root/testdata/sf0.001"
 
@@ -507,7 +509,7 @@ def main() -> int:
                 reason = ALLOW.get(name, {}).get(code, "**NOT ALLOWED**")
                 out.append(f"| {name} | {code}: {ev} | {reason} |")
         out.append("")
-    with open("/root/repo/PLANLINT.md", "w") as fh:
+    with open(ROOT / "PLANLINT.md", "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote PLANLINT.md: {clean}/{len(rows)} clean, "
           f"{new_violations} un-allowlisted violations")

@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from myserver_datawarehouse_spark import registry
 from myserver_datawarehouse_spark.session import get_spark
@@ -86,7 +88,7 @@ def main() -> None:
         "scale — their cost is scan + broadcast only.",
         "",
     ]
-    with open("/root/repo/SHUFFLE.md", "w") as fh:
+    with open(ROOT / "SHUFFLE.md", "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote SHUFFLE.md: total write {_fmt(total_w)}, "
           f"{len(zero)} zero-shuffle queries")

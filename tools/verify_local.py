@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from myserver_datawarehouse_spark import registry
 from myserver_datawarehouse_spark.session import get_spark
