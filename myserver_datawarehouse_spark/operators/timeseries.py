@@ -26,11 +26,13 @@ Design (Spark-first, 100 TB-ready):
   * `interpolate_bracketing` — pure window functions (`last ignorenulls`
     preceding + `first ignorenulls` following + linear blend). Fully
     codegen'd, one sort per group partition, the sane default at scale.
-  * `interpolate_nearest2` — exact reference parity via one
-    `applyInPandas` grouped kernel (the single justified pandas UDF in the
-    engine, SURVEY.md §2.11), vectorized with `np.searchsorted` — the two
-    nearest neighbors of a probe in a sorted array form a contiguous index
-    window, so 4 candidate indices suffice; no per-row Python loop.
+  * `interpolate_nearest2` (bounded grid) and `interpolate_hour_nearest2`
+    (the hourly pipeline's fixed 60-minute grid) — exact reference parity
+    via one `applyInPandas` grouped kernel (the single justified pandas
+    UDF in the engine, SURVEY.md §2.11), vectorized with
+    `np.searchsorted` — the two nearest neighbors of a probe in a sorted
+    array form a contiguous index window, so 4 candidate indices suffice;
+    no per-row Python loop.
 """
 
 from __future__ import annotations
@@ -187,28 +189,6 @@ def _nearest2_schema(keys_schema: StructType) -> StructType:
     )
 
 
-def _nearest2_fill(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Exact reference kernel (fact_gold_price.py:317-351), vectorized.
-
-    For each missing minute take the two nearest actuals by |Δt| — numpy's
-    stable argsort tie-break (earlier time wins on equal distance) is
-    reproduced by candidate order. One-sided extrapolation happens naturally
-    when both nearest actuals lie on the same side; groups with <2 actuals
-    are skipped (missing minutes stay missing); t1==t2 degenerates to y1.
-    """
-    actual = pdf[pdf["value"].notna()].sort_values("minute_epoch")
-    missing = pdf[pdf["value"].isna()]
-    out_actual = actual.assign(is_interpolated=False)
-    if len(actual) < 2 or missing.empty:
-        return out_actual
-    t = actual["minute_epoch"].to_numpy(np.int64)
-    v = actual["value"].to_numpy(np.float64)
-    m = missing["minute_epoch"].to_numpy(np.int64)
-    val = _nearest2_values(t, v, m)
-    out_missing = missing.assign(value=val, is_interpolated=True)
-    return pd.concat([out_actual, out_missing], ignore_index=True)
-
-
 def _nearest2_values(t: np.ndarray, v: np.ndarray, m: np.ndarray) -> np.ndarray:
     """Interpolated values at probe minutes `m` from sorted actuals (t, v).
 
@@ -230,37 +210,25 @@ def _nearest2_values(t: np.ndarray, v: np.ndarray, m: np.ndarray) -> np.ndarray:
     return np.where(same, v1, v1 + (m - t1) * (v2 - v1) / denom)
 
 
-def fill_nearest2(grid_with_values: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Apply the nearest-2 kernel to an already-joined (grid ∪ observed)
-    frame — callers that build non-default grids (e.g. the hourly
-    pipeline's fixed 60-minute grid) enter here."""
-    keys_schema = StructType([grid_with_values.schema[k] for k in keys])
-    return grid_with_values.groupBy(*keys).applyInPandas(
-        _nearest2_fill, schema=_nearest2_schema(keys_schema)
-    )
+def _nearest2_kernel(obs: DataFrame, keys: Sequence[str], grid_of) -> DataFrame:
+    """The one grouped `applyInPandas` behind both nearest-2 modes.
 
-
-def interpolate_nearest2(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """T2 (exact parity mode): the reference's nearest-2 semantics via one
-    grouped `applyInPandas`. Group size is bounded by the grid span (≤1440
-    rows/day-group), so executor memory is flat regardless of total scale.
-
-    The bounded [min, max] grid is generated INSIDE the kernel from the
-    group's own observations (`np.arange`), not joined in Spark: only the
-    actuals shuffle and cross Arrow (the missing minutes never exist JVM-
-    side), saving the grid build + left join — measured ~2x on the sf0.1
-    events grain vs the explicit-grid path. Callers with a grid that is
-    not derivable from the group (the hourly pipeline's fixed hour) use
-    `fill_nearest2` on a pre-joined frame instead."""
+    Only the group's actuals shuffle and cross Arrow; its grid is built
+    inside the kernel by `grid_of(key, t)` from the key tuple and the
+    sorted actual minutes `t` (at least 2 of them), so the missing minutes
+    never exist JVM-side — no grid build, no left join (measured ~2x on
+    the sf0.1 events grain vs an explicit-grid path). `grid_of` returns
+    None to leave the group unfilled. Groups with <2 actuals are skipped
+    (missing minutes stay missing), as in the reference."""
     keys_schema = StructType([obs.schema[k] for k in keys])
 
-    def fill(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fill(key, pdf):  # no hints: partial ones make applyInPandas warn
         actual = pdf.sort_values("minute_epoch")
         out_actual = actual.assign(is_interpolated=False)
         t = actual["minute_epoch"].to_numpy(np.int64)
-        if len(t) < 2:
+        grid = grid_of(key, t) if len(t) >= 2 else None
+        if grid is None:
             return out_actual
-        grid = np.arange(t[0], t[-1] + MINUTE, MINUTE)
         m = grid[~np.isin(grid, t)]
         if m.size == 0:
             return out_actual
@@ -282,29 +250,39 @@ def interpolate_nearest2(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
+def interpolate_nearest2(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """T2 (exact parity mode): the reference's nearest-2 semantics over
+    each group's bounded [min, max] observed grid. Group size is bounded
+    by the grid span (≤1440 rows/day-group), so executor memory is flat
+    regardless of total scale."""
+    return _nearest2_kernel(
+        obs, keys, lambda key, t: np.arange(t[0], t[-1] + MINUTE, MINUTE)
+    )
+
+
+def interpolate_hour_nearest2(
+    obs: DataFrame, keys: Sequence[str], hour_start_epoch: int
+) -> DataFrame:
+    """T1+T2 for one closed hour (fact_gold_price.py:283-351): the fixed
+    60-minute grid of the hour, filled with the nearest-2 kernel from the
+    group's actuals inside the hour. Extrapolation and the <2-actuals skip
+    rule arise with this grid shape; a group with no actual in the hour
+    emits nothing. A group with a NULL key keeps its actuals and is not
+    filled, because the reference's grid is a key-equality join and NULL
+    never matches."""
+    lo = int(hour_start_epoch) // MINUTE * MINUTE
+    hour = np.arange(lo, lo + 60 * MINUTE, MINUTE)
+    in_hour = obs.filter(F.col("minute_epoch").between(lo, lo + 59 * MINUTE))
+    return _nearest2_kernel(
+        in_hour, keys,
+        lambda key, t: None if any(pd.isna(k) for k in key) else hour,
+    )
+
+
 def with_minute_ts(df: DataFrame, col: str = "minute_epoch") -> DataFrame:
     """Convert the internal epoch-second minute key back to a timestamp
     column `minute_ts` at the output edge."""
     return df.withColumn("minute_ts", F.timestamp_seconds(F.col(col)))
-
-
-def hour_grid(
-    spark_groups: DataFrame,
-    keys: Sequence[str],
-    hour_start_epoch: int,
-) -> DataFrame:
-    """T1 grid (fixed-hour form, fact_gold_price.py:283-291): all 60 minutes
-    of one closed hour for every group in `spark_groups` (distinct keys).
-    Used by the flagship hourly pipeline; extrapolation and the <2-actuals
-    skip rule only arise with this grid shape.
-    """
-    lo = int(hour_start_epoch) // MINUTE * MINUTE
-    return spark_groups.select(*keys).distinct().select(
-        "*",
-        F.explode(
-            F.sequence(F.lit(lo), F.lit(lo + 59 * MINUTE), F.lit(MINUTE))
-        ).alias("minute_epoch"),
-    )
 
 
 __all__: Iterable[str] = [
@@ -314,8 +292,7 @@ __all__: Iterable[str] = [
     "gapfill_missing",
     "interpolate_bracketing",
     "interpolate_nearest2",
-    "fill_nearest2",
-    "hour_grid",
+    "interpolate_hour_nearest2",
     "with_minute_ts",
 ]
 

@@ -2,8 +2,8 @@
 
 Mirrors the reference's hourly fact ETL chain
 (`fact_gold_price.py:526`: create → extract → load → interpolate →
-validate) as ONE lazy Spark job instead of five Airflow tasks exchanging
-rows through XCom:
+validate) in Spark plans instead of five Airflow tasks exchanging rows
+through XCom:
 
     closed-hour extract (S2) → key derivation (P2-P7) → broadcast dim join
     (J1/J2) → bulk merge (S4) → hour-grid gap-fill (T1) → nearest-2
@@ -18,21 +18,27 @@ Deviations from the reference, on purpose:
   cross-midnight +240000 hack (fact_gold_price_temp.py:343-346) is
   unnecessary.
 
-Only two driver-side actions exist: the 1-row hour-bound probe and the
-merge write. Everything else is one Catalyst plan.
+A tick's cost scales with the hour, not with the fact table: the
+read-back after the merge takes the batch's schema (no inference job),
+prunes to the hour's `date_id` partition(s) and pushes the hour's `ts`
+window into the scan. Its output (at most 60 rows per group) is computed
+once, eagerly, so a sink and `validate` both read the stored result
+instead of re-running the lineage. The Spark actions a tick runs are the
+1-row hour-bound probe (when no hour is given), the merge write and that
+one materialization.
 """
 
 from __future__ import annotations
 
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.functions import keys as K
 from myserver_datawarehouse_spark.operators import merge as M
-from myserver_datawarehouse_spark.operators import quality as Q
 from myserver_datawarehouse_spark.operators import timeseries as TS
+from myserver_datawarehouse_spark.session import materialize
 from myserver_datawarehouse_spark.sources.tables import load_table
 
 GROUP_KEYS = ["event_type"]
@@ -67,14 +73,19 @@ def busiest_hour(spark: SparkSession, sf_dir: str) -> int:
     return int(row["h"])
 
 
+def _in_hour(hour_start: int) -> Column:
+    """The half-open [H, H+1h) window predicate on `ts`."""
+    lo = F.timestamp_seconds(F.lit(hour_start))
+    hi = F.timestamp_seconds(F.lit(hour_start + 3600))
+    return (F.col("ts") >= lo) & (F.col("ts") < hi)
+
+
 def extract_hour(spark: SparkSession, sf_dir: str, hour_start: int) -> DataFrame:
     """S2 closed-window extract + P3/P4/P7 key derivation. The ts filter
     pushes down to the parquet scan; key expressions stay in codegen."""
-    lo = F.timestamp_seconds(F.lit(hour_start))
-    hi = F.timestamp_seconds(F.lit(hour_start + 3600))
     e = load_table(spark, sf_dir, "events")
     return (
-        e.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
+        e.filter(_in_hour(hour_start))
         .withColumn("date_id", K.date_id("ts"))
         .withColumn("time_id", K.time_id("ts"))
         .withColumn("rounded_time_id", K.rounded_time_id(F.col("time_id")))
@@ -90,7 +101,7 @@ def hourly_pipeline(
     """Run the full chain for one closed hour (default: the busiest hour in
     the data); returns the interpolated minute table (event_type,
     minute_ts, value, is_interpolated, date_id, time_id,
-    rounded_time_id)."""
+    rounded_time_id), already computed (`session.materialize`)."""
     if hour_start is None:
         hour_start = busiest_hour(spark, sf_dir)
     batch = extract_hour(spark, sf_dir, hour_start)
@@ -108,14 +119,20 @@ def hourly_pipeline(
     fact_path = workdir + "/fact_events"
     M.merge_upsert(spark, fact_path, batch, keys=["event_id"],
                    partition_by=["date_id"])
-    fact = spark.read.parquet(fact_path)
+    # Read back only the hour's rows: every output row comes from an actual
+    # inside the hour, so the rest of the table cannot change the result.
+    first, last = (K.date_id(F.timestamp_seconds(F.lit(t)))
+                   for t in (hour_start, hour_start + 3599))
+    fact = (
+        spark.read.schema(batch.schema).parquet(fact_path)
+        .filter(F.col("date_id").between(first, last))
+        .filter(_in_hour(hour_start))
+    )
 
-    # T1/T2: gap-fill the 60-minute hour grid per group and fill missing
-    # minutes with the reference's nearest-2 kernel.
+    # T1/T2: the hour's 60-minute grid per group, filled in-kernel with
+    # the reference's nearest-2 rule.
     obs = TS.minute_observations(fact, GROUP_KEYS)
-    grid = TS.hour_grid(obs, GROUP_KEYS, hour_start)
-    g = grid.join(obs, [*GROUP_KEYS, "minute_epoch"], "left")
-    filled = TS.fill_nearest2(g, GROUP_KEYS)
+    filled = TS.interpolate_hour_nearest2(obs, GROUP_KEYS, hour_start)
 
     out = TS.with_minute_ts(filled).select(
         *GROUP_KEYS,
@@ -126,14 +143,39 @@ def hourly_pipeline(
         K.time_id("minute_ts").alias("time_id"),
         K.rounded_time_id(K.time_id("minute_ts")).alias("rounded_time_id"),
     )
-    return out.orderBy(*GROUP_KEYS, "minute_ts")
+    # At most 60 rows per group: one partition sorts it without a range
+    # exchange, and materializing it lets the caller's sink and validate()
+    # read the stored rows instead of re-running the read-back and kernel.
+    return materialize(out.coalesce(1).orderBy(*GROUP_KEYS, "minute_ts"))
 
 
 def validate(interpolated: DataFrame) -> DataFrame:
-    """V1+V2+V3 in one pass over the pipeline output."""
-    profile = Q.interpolation_profile(interpolated, GROUP_KEYS)
-    completeness = Q.completeness_check(interpolated, GROUP_KEYS, 60)
-    nulls = Q.null_count(interpolated, "value")
-    return profile.crossJoin(
-        completeness.select("expected_records", "is_complete")
-    ).crossJoin(nulls)
+    """V1-V3 in one aggregate over the pipeline output: the stats profile
+    and interpolation rate (fact_gold_price.py:382-431), completeness
+    `total == unique groups × 60` (:433-440) and the null-value count
+    (:443-460)."""
+    interp = F.col("is_interpolated")
+    total = F.count(F.lit(1))
+    n_interp = F.count(F.when(interp, 1))
+    expected = F.lit(60)
+    for k in GROUP_KEYS:
+        expected = expected * F.countDistinct(k)
+    return interpolated.agg(
+        total.alias("total_records"),
+        F.count(F.when(~interp, 1)).alias("actual_records"),
+        n_interp.alias("interpolated_records"),
+        *[F.countDistinct(k).alias(f"unique_{k}") for k in GROUP_KEYS],
+        F.round(
+            F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+            / F.count("value"),
+            6,
+        ).alias("avg_value"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+        F.round(n_interp.cast("double") * 100.0 / total, 2).alias(
+            "interpolation_rate_pct"
+        ),
+        expected.cast("long").alias("expected_records"),
+        (total == expected).alias("is_complete"),
+        F.count(F.when(F.col("value").isNull(), 1)).alias("null_value_count"),
+    )

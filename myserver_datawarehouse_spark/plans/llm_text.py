@@ -7420,7 +7420,7 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     hb = (
-        cand.join(F.broadcast(exact), ["doc_a", "doc_b"])
+        cand.join(exact, ["doc_a", "doc_b"])
         .groupBy("config", band_col)
         .agg(F.count(F.lit(1)).alias("n_cand"))
     )

@@ -1760,10 +1760,12 @@ _CHANGED_SINCE_VERDICT: dict[str, int] = {
     "lsh_recall_audit": 14,
     "minhash_estimator_audit": 14,
     "near_dup_prefix_filter": 14,
-    "lsh_band_tuning": 14,
+    "lsh_band_tuning": 16,
     "ann_recall_audit": 15,
     "embedding_ivfpq_refined": 15,
     "cross_modal_curation": 15,
+    "pipeline_validation": 16,
+    "sheets_export_frame": 16,
 }
 
 _VERDICTS = latest_green_round()

@@ -59,9 +59,7 @@ def test_one_sided_extrapolation_nearest2(spark):
     # Fixed hour grid: actuals only at minutes 0 (100.0) and 1 (160.0);
     # minute 5 extrapolates the slope (one-sided, fact_gold_price.py:317-351).
     obs = obs_df(spark, [("a", "b", BASE, 100.0), ("a", "b", BASE + 60, 160.0)])
-    grid = TS.hour_grid(obs, KEYS, BASE)
-    g = grid.join(obs, [*KEYS, "minute_epoch"], "left")
-    got = as_map(TS.fill_nearest2(g, KEYS))
+    got = as_map(TS.interpolate_hour_nearest2(obs, KEYS, BASE))
     assert got[("a", "b", BASE + 300)] == (100.0 + 5 * 60.0, True)
     assert len(got) == 60
 
@@ -69,9 +67,7 @@ def test_one_sided_extrapolation_nearest2(spark):
 def test_lt2_actuals_group_skipped(spark):
     # one actual only: missing minutes stay missing (skip rule)
     obs = obs_df(spark, [("a", "b", BASE, 100.0)])
-    grid = TS.hour_grid(obs, KEYS, BASE)
-    g = grid.join(obs, [*KEYS, "minute_epoch"], "left")
-    got = as_map(TS.fill_nearest2(g, KEYS))
+    got = as_map(TS.interpolate_hour_nearest2(obs, KEYS, BASE))
     assert got == {("a", "b", BASE): (100.0, False)}
 
 

@@ -46,7 +46,15 @@ _LC = (
     "checkpoint() under spark.msdw.reliableCheckpoint=true (the "
     "cluster profile, where executor loss must not strand loop state)"
 )
+# Queries built on pipeline.hourly_pipeline, which materializes the
+# tick's bounded hour output (at most 60 rows per group).
+_HOURLY = ("flagship_hourly_pipeline", "pipeline_validation",
+           "pipeline_status_alerts", "sheets_export_frame")
 ALLOW: dict[str, dict[str, str]] = {
+    **{name: {"RDD_SCAN": _LC + "; hourly_pipeline's hour output (at "
+              "most 60 rows per group), stored once because an hourly "
+              "tick acts on it twice: the sink write and validate()"}
+       for name in _HOURLY},
     "ann_recall_audit": {
         "RDD_SCAN": _LC + "; the exact top-k yardstick frame "
         "(N_PROBES x RECALL_K rows) shared by the hit semi-join and "
@@ -247,6 +255,9 @@ ALLOW: dict[str, dict[str, str]] = {
 # entry cannot land without naming its consumers — the allowlist can
 # only grow with a machine-checked sharing justification.
 CONSUMERS: dict[str, tuple[str, ...]] = {
+    **{name: ("hour output: the tick's sink write",
+              "hour output: the tick's validate() aggregate")
+       for name in _HOURLY},
     "ann_recall_audit": (
         "exact top-k yardstick: recall hit semi-join",
         "exact top-k yardstick: method comparison grid",
