@@ -4,12 +4,13 @@ addendum; the reference's only text op is the MD5 color hash at
 populate_sources_dag.py:62-72 — everything here generalizes that
 hash-as-a-column discipline to document processing).
 
-Everything is built from higher-order array functions (`transform`,
-`aggregate`, `filter`) over one tokenized column — zero Python UDFs, zero
-explodes in the signature path. At 100 TB this matters twice over: the
-whole signature computation stays inside WholeStageCodegen with no
-shuffle, and the only shuffles in the dedup pipeline are the band-bucket
-join and the final pair dedup, both on short synthetic keys.
+The column kernels are higher-order array functions (`transform`,
+`aggregate`, `filter`) over one tokenized column — zero Python UDFs. The
+MinHash signature itself is a codegen'd aggregate over shingle-hash rows
+(plans/llm_text._minhash_signature); this module owns its hash family
+(`minhash_params`), the LSH band keys and the candidate-pair self-join
+(`doc_pairs`), whose band-bucket key is the dedup pipeline's one
+all-to-all shuffle.
 
 Cross-engine determinism: the shared 60-bit hash primitive is
 md5(seed|value) -> first 15 hex chars -> BIGINT, verified bit-identical
@@ -18,6 +19,9 @@ between Spark (`conv(..., 16, 10)`) and DuckDB (`('0x' || ...)::BIGINT`).
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -131,39 +135,6 @@ def minhash_params(n_hashes: int) -> list[tuple[int, int]]:
     return [(_mh_const("a", s), _mh_const("b", s)) for s in range(n_hashes)]
 
 
-def minhash_signature_from_hashes(
-    base_hashes: Column | str, n_hashes: int = 16
-) -> Column:
-    """MinHash signature (array<bigint>, length n_hashes) over a
-    PRE-MATERIALIZED array of per-shingle hash60 values.
-
-    sig[s] = min over shingles of (a_s * (h mod P) + b_s) mod P. Pure
-    array math per row; the signature for a 10 KB document is 128 bytes
-    regardless of document size, which is what makes LSH join-able at
-    100 TB. Materializing the base hashes as a real column matters: each
-    slot references them, and Catalyst re-inlines cheap-looking aliases
-    into every consumer (see simhash_from_hashes).
-    """
-    base = _c(base_hashes)
-    p = F.lit(MINHASH_P)
-
-    # closure factory, NOT default-arg lambdas (PySpark reads extra
-    # defaulted params as (element, index) lambda arity)
-    def _slot(a: int, b: int) -> Column:
-        return F.array_min(F.transform(base, lambda x: (F.lit(a) * (x % p) + b) % p))
-
-    return F.array(*[_slot(a, b) for a, b in minhash_params(n_hashes)])
-
-
-def minhash_signature(shingle_col: Column | str, n_hashes: int = 16) -> Column:
-    """Convenience form over raw shingle strings (tests / small data);
-    query plans should materialize `transform(sh, hash60)` and call
-    minhash_signature_from_hashes."""
-    return minhash_signature_from_hashes(
-        F.transform(_c(shingle_col), lambda x: hash60(x)), n_hashes
-    )
-
-
 def lsh_band_keys(
     sig: Column | str, bands: int, rows: int, tag: str = ""
 ) -> Column:
@@ -191,6 +162,19 @@ def lsh_band_keys(
             )
             for b in range(bands)
         ]
+    )
+
+
+def doc_pairs(frame: DataFrame, *on: str) -> DataFrame:
+    """The candidate-pair self-join every near-dup tier runs: `frame`
+    aliased `a` and `b`, joined on equal `on` keys with a.doc_id <
+    b.doc_id, so each unordered pair meets once per shared key row and
+    no doc pairs with itself (a NULL key never matches). Callers
+    select, distinct or aggregate the aliased columns themselves: a
+    rename here would move into a Project under their aggregates."""
+    keys = reduce(operator.and_, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in on])
+    return frame.alias("a").join(
+        frame.alias("b"), keys & (F.col("a.doc_id") < F.col("b.doc_id"))
     )
 
 

@@ -1086,7 +1086,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-probe map-only scan, and the recall join is
     probe-count-sized — the audit adds nothing super-linear, so it can
     run continuously as a data-quality monitor next to the index build."""
-    from myserver_datawarehouse_spark.session import materialize
+    from myserver_datawarehouse_spark.session import materialize, parallel_actions
 
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
@@ -1094,20 +1094,16 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize(): the exact top-k is the shared yardstick for every
     # method below (the hit semi-join AND the query grid) — without the
     # lineage cut the brute-force gemm plan would re-execute once per
-    # consumer (6x before the round-8 restructure). N_PROBES x RECALL_K
-    # rows, executor-side.
+    # consumer. N_PROBES x RECALL_K rows, executor-side.
     #
     # The exact yardstick and the IVFPQ candidate pipeline are
-    # INDEPENDENT eager chains — materialized from a 2-thread pool so
-    # the gemm pass back-fills cores the Lloyd chain's stage tails
-    # leave idle (guide §2.6); each chain's internal order is
-    # unchanged. One candidate pipeline at the sweep's max nprobe;
-    # every sweep point (and the refined leg's shortlist) is a
-    # probe_rank / est_raw cut over this single materialized frame —
-    # training runs ONCE, so the nprobe curve costs filters, not
-    # re-trainings.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # INDEPENDENT eager chains — materialized concurrently so the gemm
+    # pass back-fills cores the Lloyd chain's stage tails leave idle;
+    # each chain's internal order is unchanged. One candidate pipeline
+    # at the sweep's max nprobe; every sweep point (and the refined
+    # leg's shortlist) is a probe_rank / est_raw cut over this single
+    # materialized frame — training runs ONCE, so the nprobe curve
+    # costs filters, not re-trainings.
     def _exact():
         return materialize(
             embedding_topk_gemm(spark, sf_dir)
@@ -1121,9 +1117,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ivfpq_candidates(spark, sf_dir, max(RECALL_NPROBE_SWEEP))
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact, f_cand4 = pool.submit(_exact), pool.submit(_cand4)
-        exact, cand4 = f_exact.result(), f_cand4.result()
+    exact, cand4 = parallel_actions(_exact, _cand4)
     ivf = embedding_ann_ivf(spark, sf_dir).select("query_id", "vec_id")
     w_adc = Window.partitionBy("query_id").orderBy("est_raw", "vec_id")
 

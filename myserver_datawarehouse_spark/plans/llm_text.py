@@ -157,16 +157,14 @@ def _shingle_hash_frame(d: DataFrame) -> DataFrame:
     return materialize(_shingle_hashes(d))
 
 
-def _minhash_signature_bands(
-    hs: DataFrame, *band_cols: Column
-) -> tuple[DataFrame, DataFrame]:
-    """((doc_id, n, sig), (doc_id, bk, *band_cols)) over a (doc_id, h)
-    shingle-hash frame: the MINHASH_N MinHash slots as codegen'd MIN
-    aggregates (map-side partials, not higher-order array folds) with
-    the shingle-set size n riding along in the same groupBy, then one
-    row per LSH band key (LSH_BANDS bands of LSH_ROWS rows)."""
+def _minhash_signature(hs: DataFrame) -> DataFrame:
+    """(doc_id, n, sig) over a (doc_id, h) shingle-hash frame: the
+    MINHASH_N MinHash slots as codegen'd MIN aggregates (map-side
+    partials, not higher-order array folds) with the shingle-set size n
+    riding along in the same groupBy. A caller that selects only `sig`
+    pays no count: Spark prunes it from the aggregate."""
     p = F.lit(TX.MINHASH_P)
-    sig = (
+    return (
         hs.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -181,6 +179,14 @@ def _minhash_signature_bands(
             F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
         )
     )
+
+
+def _minhash_signature_bands(
+    hs: DataFrame, *band_cols: Column
+) -> tuple[DataFrame, DataFrame]:
+    """((doc_id, n, sig), (doc_id, bk, *band_cols)): the signature frame
+    and one row per LSH band key (LSH_BANDS bands of LSH_ROWS rows)."""
+    sig = _minhash_signature(hs)
     bands = sig.select(
         "doc_id",
         F.explode(TX.lsh_band_keys("sig", LSH_BANDS, LSH_ROWS)).alias("bk"),
@@ -202,9 +208,8 @@ def _minhash_band_candidates(
     computes the identical rounded jaccard — the filter can only drop
     pairs the exact side already excludes."""
     sig, bands = _minhash_signature_bands(hs)
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        TX.doc_pairs(bands, "bk")
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
@@ -217,7 +222,7 @@ def _minhash_pairs_for(d: DataFrame, hs: DataFrame | None = None) -> DataFrame:
     corpus build. Pass `hs` (the materialized distinct (doc_id, h)
     shingle-hash frame) to share it with another tier in the same
     query (lsh_recall_audit shares it with the prefix filter); default
-    builds it, plan-identical to pre-round-11."""
+    builds it."""
     # Everything runs over ROW-wise hashed shingles (one codegen'd md5 per
     # position — see operators/text.shingle_rows; the array-HOF form costs
     # ~10s/pass at sf0.1 on Spark's interpreted lambda path):
@@ -368,14 +373,8 @@ def near_dup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "simhash",
         F.posexplode(TX.simhash_chunks("simhash", SIMHASH_CHUNKS)).alias("c", "cv"),
     )
-    a, b = chunks.alias("a"), chunks.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(chunks, "c", "cv")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -433,11 +432,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps it so. The production path at 100 TB is near_dup_minhash_lsh.
     """
     d = _docs(spark, sf_dir).filter(F.col("doc_id") % SAMPLE_MOD == 0)
-    # Per-pair cost is what kills an O(n^2) baseline: intersect 60-bit
-    # shingle HASHES (long arrays — far cheaper than string compares) and
-    # derive the union size as na + nb - inter instead of materializing
-    # the union. Hash values are the shared md5 primitive, so the oracle
-    # sees identical sets (collisions, if any, collapse identically).
     # Distributed set-similarity join: explode each doc's distinct shingle
     # HASHES and equi-join on the hash value — a pair's match count IS its
     # intersection size, so no per-pair array intersect ever runs and the
@@ -454,12 +448,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sizes = h.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
-        h.alias("a")
-        .join(
-            h.alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(h, "h")
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
@@ -4834,13 +4823,12 @@ def near_dup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _prefix_filter_pairs(d: DataFrame, hs: DataFrame | None = None) -> DataFrame:
     """The PPJoin pair plan over any (doc_id, text) frame; pass `hs`
     (the materialized distinct shingle-hash frame) to share it with
-    the LSH tier inside lsh_recall_audit. Default builds it —
-    plan-identical to the pre-round-11 inline form."""
+    the LSH tier inside lsh_recall_audit. Default builds it."""
     # The prefix frame and the per-doc hash arrays each consume h on
     # BOTH sides of their joins — the shared materialized frame keeps
     # the df join + ranking window to one shingle pass.
     h = hs if hs is not None else _shingle_hash_frame(d)
-    # NOTE (r14, measured and rejected): deriving `sizes` as a
+    # NOTE (measured and rejected): deriving `sizes` as a
     # projection of the materialized `sets` frame below (sets already
     # aggregates the same n) removes this groupBy from the plan but
     # made the query ~1 s SLOWER at sf0.1 — the broadcast build then
@@ -4865,12 +4853,7 @@ def _prefix_filter_pairs(d: DataFrame, hs: DataFrame | None = None) -> DataFrame
         .select("doc_id", "h")
     )
     cand = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(pref, "h")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -5501,20 +5484,7 @@ def minhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _lsh_audit_docs(_docs(spark, sf_dir))
     hs = _shingle_hash_frame(d)
     exact = _prefix_filter_pairs(d, hs=hs)
-    p = F.lit(TX.MINHASH_P)
-    sig = (
-        hs.groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-            ]
-        )
-        .select(
-            "doc_id",
-            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-        )
-    )
+    sig = _minhash_signature(hs).select("doc_id", "sig")
     pairs = (
         exact.join(
             sig.select(
@@ -5699,12 +5669,7 @@ def simhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(F.sum(F.col("n") * F.col("n")).cast("double")).alias("nrm")
     )
     dot = (
-        tc.alias("a")
-        .join(
-            tc.alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(tc, "h")
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -7352,7 +7317,7 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits between).
 
     Scale: ONE shingle pass (the shared materialized hash frame), ONE
-    signature pass, ONE exact-yardstick pair plan, and since r14 ONE
+    signature pass, ONE exact-yardstick pair plan, and ONE
     band-key explode + ONE bucket self-join for the WHOLE sweep: every
     config's keys carry a "<b>x<r>|" namespace tag, so a single tagged
     frame holds all 28 keys/doc and a single equi-join yields every
@@ -7368,30 +7333,10 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = materialize(
         _prefix_filter_pairs(d, hs=hs).select("doc_a", "doc_b", "jaccard")
     )
-    p = F.lit(TX.MINHASH_P)
     # consumed by: both sides of the one tagged band-key self-join
-    sig = materialize(
-        hs.groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(a) * (F.col("h") % p) + b) % p).alias(f"s{i}")
-                for i, (a, b) in enumerate(TX.minhash_params(MINHASH_N))
-            ],
-        )
-        .select(
-            "doc_id",
-            F.array(*[f"s{i}" for i in range(MINHASH_N)]).alias("sig"),
-        )
-    )
+    sig = materialize(_minhash_signature(hs).select("doc_id", "sig"))
     band_col = F.floor(F.col("jaccard") * J_BAND_W).cast("int").alias("j_band")
     eb = exact.groupBy(band_col).agg(F.count(F.lit(1)).alias("n_exact"))
-    # ONE tagged band-key explode + ONE bucket self-join for the whole
-    # sweep (r14, guide §2.4): each config's keys carry a "<b>x<r>|"
-    # namespace tag, so one exploded frame holds all 28 keys/doc and
-    # one equi-join on the tagged key replaces three per-config
-    # self-joins + distincts + semi-joins — identical candidate sets
-    # per config (tags cannot collide across configs), one Exchange
-    # where the loop form paid one per config on each side.
     bands = sig.select(
         "doc_id",
         F.explode(
@@ -7405,13 +7350,8 @@ def lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bk"),
     )
-    a, b2 = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b2,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(bands, "bk")
         .select(
             F.substring_index(F.col("a.bk"), "|", 1).alias("config"),
             F.col("a.doc_id").alias("doc_a"),

@@ -114,8 +114,7 @@ def _image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-banded pHash candidate pairs with exact Hamming verify —
     shared by `near_dup_image_phash` (its presentation surface) and,
     via `_image_phash_pairs_from`, `cross_modal_curation` (the image
-    edge set over the fused one-pass fingerprint frame). Identical op
-    graph to the pre-round-11 inline form."""
+    edge set over the fused one-pass fingerprint frame)."""
     docs = load_table(spark, sf_dir, "documents")
     media = MM.with_fake_payload(docs)
     return _image_phash_pairs_from(MM.image_phash(media))
@@ -132,14 +131,8 @@ def _image_phash_pairs_from(ph: DataFrame) -> DataFrame:
             "c", "cv"
         ),
     )
-    a, b = chunks.alias("a"), chunks.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(chunks, "c", "cv")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -269,8 +262,7 @@ def _video_frame_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified frame-set near-dup pairs (doc_a, doc_b, matched,
     n_frames_a, n_frames_b) frame — shared by `near_dup_video_frames`
     (its presentation surface, which adds the survivor pick) and
-    `cross_modal_curation` (the video edge set). Identical op graph to
-    the pre-round-12 inline form."""
+    `cross_modal_curation` (the video edge set)."""
     from myserver_datawarehouse_spark.session import materialize
 
     docs = load_table(spark, sf_dir, "documents")
@@ -291,14 +283,8 @@ def _video_frame_pairs_from(fp: DataFrame) -> DataFrame:
             "c", "cv"
         ),
     )
-    a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(chunks, "c", "cv")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -478,7 +464,7 @@ def _audio_fingerprint_pairs(media) -> DataFrame:
     n_segs_a, n_segs_b) over any media frame — shared by
     `near_dup_audio_fingerprint` (its presentation surface, over the
     clip-augmented corpus) and `cross_modal_curation` (the audio edge
-    set over the raw corpus). Identical op graph to the inline form."""
+    set over the raw corpus)."""
     from myserver_datawarehouse_spark.session import materialize
 
     # materialize: the fingerprint frame feeds the chunk explode AND
@@ -499,14 +485,8 @@ def _audio_fingerprint_pairs_from(fp: DataFrame) -> DataFrame:
             "c", "cv"
         ),
     )
-    a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        TX.doc_pairs(chunks, "c", "cv")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -703,7 +683,7 @@ def cross_modal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = LTX._docs(spark, sf_dir)
     tpairs = LTX._minhash_pairs_for(docs).select("doc_a", "doc_b")
     # ONE fused fingerprint pass over the corpus for all three media
-    # arms (r15, guide §2.4/§4): the per-modality kernels each scanned
+    # arms: the per-modality kernels each scanned
     # the full corpus to fingerprint their disjoint doc_id % 3 subset —
     # three Python corpus passes (the image one twice, unmaterialized on
     # both self-join sides) for one corpus' worth of kernel work. The

@@ -6600,6 +6600,7 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from myserver_datawarehouse_spark.operators import evolution as EV
     from myserver_datawarehouse_spark.operators import merge as M
+    from myserver_datawarehouse_spark.session import parallel_actions
 
     def _data_inodes(base: str) -> dict[str, int]:
         out = {}
@@ -6658,26 +6659,20 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sum_value"),
     ]
     # Pre-compaction rollup pinned to the published version dir, then
-    # collected CONCURRENTLY with the compaction rewrite (r15, guide
-    # §2.6): both read the same immutable v3 snapshot — the pin makes
-    # that explicit (no read-through-manifest race), and the rollup's
-    # tasks back-fill the rewrite's stage tails. ~12 driver-blocking
-    # jobs of rollup+compact previously ran strictly serialized.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # collected CONCURRENTLY with the compaction rewrite: both read the
+    # same immutable v3 snapshot — the pin makes that explicit (no
+    # read-through-manifest race), and the rollup's tasks back-fill the
+    # rewrite's stage tails.
     v3_pre = os.path.join(root, M._published_version(root))
-    before_rows = (
+    rollup = (
         EV.read_snapshot_dir(spark, v3_pre)
         .groupBy("event_type")
         .agg(*rollup_cols)
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_before = pool.submit(before_rows.collect)
-        f_compact = pool.submit(EV.compact_evolved, spark, root)
-        before = {
-            r.event_type: (r.n_rows, r.sum_value) for r in f_before.result()
-        }
-        f_compact.result()
+    before_rows, _ = parallel_actions(
+        rollup.collect, lambda: EV.compact_evolved(spark, root)
+    )
+    before = {r.event_type: (r.n_rows, r.sum_value) for r in before_rows}
     after = {
         r.event_type: (r.n_rows, r.sum_value)
         for r in M.read_published(spark, root)

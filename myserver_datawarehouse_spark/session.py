@@ -15,6 +15,8 @@ Centralizes the configuration that the whole engine depends on:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -125,3 +127,20 @@ def materialize(df: DataFrame) -> DataFrame:
     # the directory is cleaned — the standard Spark trade for state
     # that must survive executor loss.
     return df.checkpoint(eager=True)
+
+
+def parallel_actions(*thunks: Callable[[], Any]) -> list[Any]:
+    """Run independent driver-blocking Spark actions concurrently and
+    return their results in argument order. Small actions cost mostly
+    per-job fixed overhead (schedule, commit) and their task tails leave
+    cores idle, so a small pool lets one action's tasks back-fill
+    another's. Barrier: returns only once every thunk has finished, so
+    callers can order a write before a probe, and the first exception
+    (in argument order) propagates."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]

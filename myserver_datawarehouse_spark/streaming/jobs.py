@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from myserver_datawarehouse_spark.session import parallel_actions
+
 # events.parquet carries TIMESTAMP(NANOS); depending on the Spark build
 # the scan yields either a long of nanos (legacy nanosAsLong path) or a
 # native TIMESTAMP_NTZ truncated to micros. The streaming source needs an
@@ -1109,10 +1111,10 @@ def outer_attribution_stream(
         base.filter(cond).coalesce(1).write.parquet(stages[k])
 
     # The per-batch extracts are independent jobs over disjoint time
-    # slices — pooled (guide §2.6, the _stage_ordered_inputs pattern);
-    # the mtime stamping that encodes replay order stays sequential
-    # after the barrier.
-    _parallel_actions(
+    # slices — pooled (the _stage_ordered_inputs pattern); the mtime
+    # stamping that encodes replay order stays sequential after the
+    # barrier.
+    parallel_actions(
         *[(lambda k=k: _extract(k)) for k in range(OUTER_ATTR_BATCHES)]
     )
     mtime = 1_700_000_000
@@ -1267,20 +1269,13 @@ def bloom_maintained_stream(
     ]
     keep, _total = FS.bloom_prune_files(spark, final, "event_id", probes)
     # The pruned-read count and the full-scan count are independent
-    # jobs over the same snapshot — pooled (guide §2.6).
-    counts: dict[str, int] = {}
-    _parallel_actions(
-        lambda: counts.__setitem__(
-            "pruned",
-            spark.read.parquet(*keep)
-            .filter(F.col("event_id").isin(*probes))
-            .count(),
-        ),
-        lambda: counts.__setitem__(
-            "full", table.filter(F.col("event_id").isin(*probes)).count()
-        ),
+    # jobs over the same snapshot — pooled.
+    pruned_n, full_n = parallel_actions(
+        lambda: spark.read.parquet(*keep)
+        .filter(F.col("event_id").isin(*probes))
+        .count(),
+        lambda: table.filter(F.col("event_id").isin(*probes)).count(),
     )
-    pruned_n, full_n = counts["pruned"], counts["full"]
     flags = {
         "bloom_carried": bool(carried),
         "zero_false_negatives": bool(pruned_n == full_n and full_n > 0),
@@ -1483,9 +1478,9 @@ def _near_dup_ingest_one(
     hs, sz, bd = _near_dup_index_frames(one, bno)
     # index first (self-inclusive probe); idempotent per-batch
     # overwrite. The three writes are independent jobs over O(batch)
-    # rows — run them pooled (guide §2.6); the barrier inside
-    # _parallel_actions keeps the write-before-probe ordering.
-    _parallel_actions(
+    # rows — run them pooled; the barrier inside parallel_actions
+    # keeps the write-before-probe ordering.
+    parallel_actions(
         lambda: bd.write.mode("overwrite").parquet(
             os.path.join(bands_dir, sub)
         ),
@@ -1519,24 +1514,7 @@ def _near_dup_verified_pairs(
     IDENTICAL candidate + verify path."""
     from myserver_datawarehouse_spark.plans.llm_text import JACCARD_TAU
 
-    idx_bands = _read_tree(sp, bands_dir)
-    cand = (
-        bd.select(
-            F.col("doc_id").alias("doc_new"),
-            "bk",
-            F.col("batch_no").alias("bno_new"),
-        )
-        .join(idx_bands.alias("ix"), "bk")
-        .filter(
-            (F.col("ix.batch_no") < F.col("bno_new"))
-            | (
-                (F.col("ix.batch_no") == F.col("bno_new"))
-                & (F.col("ix.doc_id") < F.col("doc_new"))
-            )
-        )
-        .select("doc_new", F.col("ix.doc_id").alias("doc_partner"))
-        .distinct()
-    )
+    cand = _precedence_candidates(bd, _read_tree(sp, bands_dir), ["bk"])
     idx_h = _read_tree(sp, hashes_dir)
     idx_n = _read_tree(sp, sizes_dir)
     inter = (
@@ -1587,25 +1565,6 @@ def _read_tree(sp: SparkSession, root: str) -> DataFrame:
     )
 
 
-def _parallel_actions(*thunks) -> None:
-    """Run independent driver-blocking Spark actions concurrently
-    (guide §2.6, overlap independent jobs): a micro-batch's index
-    writes are separate jobs over a few hundred rows each, so their
-    per-job fixed cost (schedule, commit) dominates and their task
-    tails leave almost every core idle — a small pool lets the next
-    write's tasks back-fill. BARRIER semantics: returns only when
-    every action finished (callers rely on all-indexes-written-before-
-    probe ordering), and the first exception propagates."""
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        for f in [pool.submit(t) for t in thunks]:
-            f.result()
-
-
 def _stage_ordered_inputs(
     arrivals: DataFrame, work_dir: str, input_dir: str, n_batches: int
 ) -> None:
@@ -1613,8 +1572,8 @@ def _stage_ordered_inputs(
     repo's ordered-file-source pattern, cf. watermark_audit_stream):
     the precedence rule needs batch k indexed before batch k+1 probes.
     The per-batch extract writes are independent jobs over disjoint
-    doc slices — pooled (guide §2.6); the mtime stamping that encodes
-    ingest order stays sequential after the barrier."""
+    doc slices — pooled; the mtime stamping that encodes ingest order
+    stays sequential after the barrier."""
     import os
     import shutil
 
@@ -1624,7 +1583,7 @@ def _stage_ordered_inputs(
     ]
     for s in stages:
         shutil.rmtree(s, ignore_errors=True)
-    _parallel_actions(
+    parallel_actions(
         *[
             (
                 lambda k=k, s=s: arrivals.filter(F.col("batch_no") == k)
@@ -1690,10 +1649,9 @@ def near_dup_ingest_stream(
     is_arrival = F.pmod(F.col("doc_id"), F.lit(INCR_MOD)) == 0
 
     # Seed the standing index (batch_no -1, the pre-stream corpus).
-    # Three independent writes off one persisted shingle frame — pooled
-    # (guide §2.6).
+    # Three independent writes off one persisted shingle frame — pooled.
     hs0, sz0, bd0 = _near_dup_index_frames(docs.filter(~is_arrival), -1)
-    _parallel_actions(
+    parallel_actions(
         lambda: bd0.write.mode("overwrite").parquet(
             os.path.join(bands_dir, "b_base")
         ),
@@ -1944,8 +1902,7 @@ def _media_index_build(
 
 def _media_rows_write(d: dict, one: DataFrame, bno: int, sub: str) -> None:
     """The fused fingerprint store write alone — independent of the
-    text-arm index writes, so callers can pool it with them
-    (guide §2.6)."""
+    text-arm index writes, so callers can pool it with them."""
     import os
 
     from myserver_datawarehouse_spark.operators import multimodal as MM
@@ -2005,22 +1962,20 @@ def _media_chunks_build(
 
 
 def _precedence_candidates(
-    bd_chunks: DataFrame, idx_chunks: DataFrame
+    batch: DataFrame, idx: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """(doc_new, doc_partner) distinct candidates: the batch's chunk
-    rows probing the (self-inclusive) index under the shared partner-
-    precedence rule — base (-1) < earlier batch < same batch with a
-    smaller doc_id — the near-dup ingest rule generalized to the
-    media chunk indexes, which is what makes the ledger independent
-    of trigger boundaries."""
+    """(doc_new, doc_partner) distinct candidates: the batch's
+    (doc_id, *keys, batch_no) rows probing the (self-inclusive) index on
+    equal `keys` under the shared partner-precedence rule — base (-1) <
+    earlier batch < same batch with a smaller doc_id — which is what
+    makes every near-dup ledger independent of trigger boundaries."""
     return (
-        bd_chunks.select(
+        batch.select(
             F.col("doc_id").alias("doc_new"),
-            "c",
-            "cv",
+            *keys,
             F.col("batch_no").alias("bno_new"),
         )
-        .join(idx_chunks.alias("ix"), ["c", "cv"])
+        .join(idx.alias("ix"), keys)
         .filter(
             (F.col("ix.batch_no") < F.col("bno_new"))
             | (
@@ -2130,10 +2085,10 @@ def _curation_one(sp: SparkSession, d: dict, one: DataFrame, bno: int) -> None:
     sub = f"b{bno}"
     # Index writes first (self-inclusive probes): the three text-arm
     # writes AND the fused media fingerprint write are independent jobs
-    # over O(batch) rows — all four pooled (guide §2.6); the barrier
+    # over O(batch) rows — all four pooled; the barrier
     # keeps the write-before-probe ordering.
     hs, sz, bd = _near_dup_index_frames(one, bno)
-    _parallel_actions(
+    parallel_actions(
         lambda: bd.write.mode("overwrite").parquet(
             os.path.join(d["tbands"], sub)
         ),
@@ -2160,6 +2115,7 @@ def _curation_one(sp: SparkSession, d: dict, one: DataFrame, bno: int) -> None:
             idx_chunks_all.filter(F.col("modality") == m).drop(
                 "modality"
             ),
+            ["c", "cv"],
         )
         idx_rows = idx_rows_all.filter(F.col("modality") == m).select(
             "doc_id", F.col("mhash").alias(hcol)
@@ -2279,13 +2235,13 @@ def curation_ledger_stream(
     is_arrival = F.pmod(F.col("doc_id"), F.lit(INCR_MOD)) == 0
 
     # Seed every index from the standing corpus (batch_no -1). Text
-    # writes pooled off the persisted shingle frame (guide §2.6); all
-    # three media modalities fingerprint + index in ONE fused pass
-    # (r15, _media_index_build) — the seed now scans the standing
-    # corpus twice (text shingles + fused media kernel) instead of 4x.
+    # writes pooled off the persisted shingle frame; all three media
+    # modalities fingerprint + index in ONE fused pass
+    # (_media_index_build), so the seed scans the standing corpus
+    # twice (text shingles + fused media kernel).
     standing = docs.filter(~is_arrival)
     hs0, sz0, bd0 = _near_dup_index_frames(standing, -1)
-    _parallel_actions(
+    parallel_actions(
         lambda: bd0.write.mode("overwrite").parquet(
             os.path.join(d["tbands"], "b_base")
         ),

@@ -1,11 +1,13 @@
-"""Text-kernel unit tests: normalization, hashing, shingles, MinHash,
-SimHash, winnowing (operators/text.py)."""
+"""Text-kernel unit tests: normalization, hashing, shingles, the
+candidate-pair self-join, SimHash, winnowing (operators/text.py), and the
+production MinHash signature and LSH bands (plans/llm_text.py)."""
 
 import hashlib
 
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.operators import text as TX
+from myserver_datawarehouse_spark.plans import llm_text as LT
 
 
 def one(spark, text, expr):
@@ -40,32 +42,64 @@ def test_hash60_matches_md5_prefix(spark):
     assert 0 <= expected < (1 << 60)
 
 
+def _production_signatures(spark, rows):
+    """The (sig, bands) frames of the production LSH path
+    (plans/llm_text: k=3 shingle hashes, MINHASH_N slots,
+    LSH_BANDS x LSH_ROWS banding) over (doc_id, text) rows."""
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    return LT._minhash_signature_bands(LT._shingle_hashes(df))
+
+
 def test_minhash_identical_docs_equal_signatures(spark):
-    df = spark.createDataFrame([("t1", "a b c d e f"), ("t2", "a b c d e f")],
-                               "id string, text string")
-    sigs = df.select(
-        TX.minhash_signature(TX.shingles(TX.tokenize("text"), 3), 8).alias("sig")
-    ).collect()
-    assert sigs[0].sig == sigs[1].sig and len(sigs[0].sig) == 8
+    sig, _ = _production_signatures(
+        spark, [(1, "a b c d e f"), (2, "a b c d e f")]
+    )
+    sigs = {r.doc_id: r.sig for r in sig.collect()}
+    assert LT.MINHASH_N == 16
+    assert sigs[1] == sigs[2] and len(sigs[1]) == LT.MINHASH_N
 
 
 def test_lsh_bands_near_dups_collide(spark):
-    df = spark.createDataFrame(
-        [("d1", "w1 w2 w3 w4 w5 w6 w7 w8"), ("d2", "w1 w2 w3 w4 w5 w6 w7 zz")],
-        "id string, text string",
+    _, bands = _production_signatures(
+        spark, [(1, "w1 w2 w3 w4 w5 w6 w7 w8"), (2, "w1 w2 w3 w4 w5 w6 w7 zz")]
     )
-    bands = df.select(
-        F.col("id"),
-        F.explode(
-            TX.lsh_band_keys(
-                TX.minhash_signature(TX.shingles(TX.tokenize("text"), 3), 16), 8, 2
-            )
-        ).alias("bk"),
-    ).collect()
-    k1 = {r.bk for r in bands if r.id == "d1"}
-    k2 = {r.bk for r in bands if r.id == "d2"}
-    assert len(k1) == 8
+    rows = bands.collect()
+    k1 = {r.bk for r in rows if r.doc_id == 1}
+    k2 = {r.bk for r in rows if r.doc_id == 2}
+    assert (LT.LSH_BANDS, LT.LSH_ROWS) == (8, 2)
+    assert len(k1) == LT.LSH_BANDS
     assert k1 & k2  # high-overlap docs share at least one band
+
+
+def test_doc_pairs_contract(spark):
+    """Each unordered pair once with doc_a < doc_b, all `on` keys equal,
+    NULL keys never pair, no self-pairs."""
+    df = spark.createDataFrame(
+        [
+            (1, "x", 1),
+            (2, "x", 1),
+            (3, "x", 1),
+            (4, "x", 2),  # shares k1 with 1-3 but not k2
+            (5, None, 1),
+            (6, None, 1),  # NULL k1 never matches, not even another NULL
+            (7, "y", 1),  # alone on its key: no pair, and not with itself
+        ],
+        "doc_id int, k1 string, k2 int",
+    )
+    got = [
+        (r.doc_a, r.doc_b)
+        for r in TX.doc_pairs(df, "k1", "k2")
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .collect()
+    ]
+    assert sorted(got) == [(1, 2), (1, 3), (2, 3)]
+    one_key = {
+        (r.doc_a, r.doc_b)
+        for r in TX.doc_pairs(df, "k1")
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .collect()
+    }
+    assert one_key == {(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)}
 
 
 def test_simhash_range_and_identity(spark):

@@ -192,3 +192,40 @@ def test_materialize_allowlist_matches_registry():
 
     names = {s.name for s in registry.specs()}
     assert set(ALLOW) <= names, sorted(set(ALLOW) - names)
+
+
+def test_recurring_shapes_have_one_owner():
+    """The candidate-pair self-join, the pooled-action thread pool, the
+    MinHash signature aggregate and the partner-precedence probe are each
+    written once, in their owner; every other module calls the owner
+    (`operators/text.doc_pairs`, `session.parallel_actions`,
+    `plans/llm_text._minhash_signature`,
+    `streaming/jobs._precedence_candidates`)."""
+    import re
+
+    pkg = Path(__file__).resolve().parents[1] / "myserver_datawarehouse_spark"
+    shapes = {
+        "oriented doc-pair predicate": (
+            re.compile(r'F\.col\("\w+\.doc_id"\)\s*<\s*F\.col\("\w+\.doc_id"\)'),
+            {"operators/text.py": 1},
+        ),
+        "ThreadPoolExecutor": (
+            re.compile(r"\bThreadPoolExecutor\b"),
+            {"session.py": 2},
+        ),
+        "MinHash signature slot": (
+            re.compile(r'F\.min\(\(F\.lit\(a\) \* \(F\.col\("h"\) % p\)'),
+            {"plans/llm_text.py": 1},
+        ),
+        "partner-precedence rule": (
+            re.compile(r'F\.col\("ix\.doc_id"\)\s*<\s*F\.col\("doc_new"\)'),
+            {"streaming/jobs.py": 1},
+        ),
+    }
+    for shape, (pat, owners) in shapes.items():
+        found = {}
+        for path in sorted(pkg.rglob("*.py")):
+            n = len(pat.findall(path.read_text()))
+            if n:
+                found[path.relative_to(pkg).as_posix()] = n
+        assert found == owners, f"{shape}: {found}"
