@@ -6,10 +6,24 @@ oracle — the streaming/batch unification Spark promises, made testable.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 from myserver_datawarehouse_spark.streaming import jobs as SJ
+
+
+def _fresh_work(prefix: str, sf_dir: str) -> str:
+    """The query's per-(sf, pid) work dir (atexit-cleaned), emptied:
+    a second plan construction in one process must replay the whole
+    stream, not resume a consumed checkpoint."""
+    work = _pid_tmpdir(prefix, sf_dir)
+    shutil.rmtree(work, ignore_errors=True)
+    return work
 
 
 def streaming_minute_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,8 +92,8 @@ def streaming_gap_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     stream = SJ.events_stream(spark, sf_dir)
-    out = SJ.run_update_available_now(
-        SJ.gap_state_query(stream), spark, "streaming_gap_state_sink"
+    out = SJ.run_available_now(
+        SJ.gap_state_query(stream), spark, "streaming_gap_state_sink", "update"
     )
     w = Window.partitionBy("event_type").orderBy(F.col("n_events").desc())
     return (
@@ -263,18 +277,13 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     processes on one SF never share a table and repeated runs in one
     process reuse one copy. Checkpoint and target are cleared up front
     so a stale previous run can never feed rows into this one."""
-    import os
-    import shutil
-
     from myserver_datawarehouse_spark.operators.merge import drop_table
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
     work = _pid_tmpdir("msdw_stream_upsert", sf_dir)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     # drop_table, not rmtree: the merged target is a WAP snapshot
     # symlink (rmtree refuses links and would leave the previous run's
     # snapshots readable through it).
-
     drop_table(os.path.join(work, "target"))
     target = SJ.upsert_merge_stream(spark, sf_dir, work)
     return (
@@ -298,18 +307,16 @@ FROM ranked WHERE rn = 1 ORDER BY user_id, event_type
 def streaming_restart_exactly_once(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """§2.12 checkpoint-restart exactly-once, driver-adjudicated (the
-    round-5 VERDICT ask): half the events drain under a checkpoint, the
-    query STOPS, the other half arrives, and a new query restarts from
-    the same checkpoint. The final sink rollup must equal the plain
-    batch rollup over ALL events — a replayed batch doubles a count, a
-    lost batch drops one, and either flips the hash against the oracle.
+    """§2.12 checkpoint-restart exactly-once, driver-adjudicated: half
+    the events drain under a checkpoint, the query STOPS, the other half
+    arrives, and a new query restarts from the same checkpoint. The
+    final sink rollup must equal the plain batch rollup over ALL events
+    — a replayed batch doubles a count, a lost batch drops one, and
+    either flips the hash against the oracle.
 
     Eager-execution note: like streaming_upsert_merge, the two drains
     run at plan-construction time into a fixed per-(sf, pid) work dir,
     cleared up front so reruns are idempotent."""
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
-
     work = _pid_tmpdir("msdw_stream_restart", sf_dir)
     sink = SJ.restart_exactly_once_stream(spark, sf_dir, work)
     return (
@@ -341,15 +348,14 @@ ORDER BY event_type
 
 
 def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.12 watermark late-data accounting as a driver verdict (the
-    round-5 VERDICT ask): events replay in three deterministic
-    interleaved batches (event_id mod 3, file order pinned by mtime),
-    so batches 1-2 deliver heavily late rows against an advanced
-    watermark. The output is the audit summary — windows emitted,
-    rows emitted, rows REFUSED by the watermark (observed via
-    numRowsDroppedByWatermark), rows total — and the oracle recomputes
-    all four from the calibrated two-watermark model Spark actually
-    implements (verified empirically, see below):
+    """§2.12 watermark late-data accounting as a driver verdict: events
+    replay in three deterministic interleaved batches (event_id mod 3,
+    file order pinned by mtime), so batches 1-2 deliver heavily late
+    rows against an advanced watermark. The output is the audit
+    summary — windows emitted, rows emitted, rows REFUSED by the
+    watermark (observed via numRowsDroppedByWatermark), rows total — and
+    the oracle recomputes all four from the calibrated two-watermark
+    model Spark actually implements (verified empirically, see below):
 
       m_k      = max event time in batch k
       W_k      = max(m_0..m_{k-1}) − delay   (in effect during batch k)
@@ -374,7 +380,6 @@ def streaming_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the drop counter's grain flips a counter and fails the hash.
     Eager-execution note: the replay runs at plan-construction time in
     a per-(sf, pid) work dir (atexit-cleaned)."""
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
     from myserver_datawarehouse_spark.sources.tables import load_table
 
     work = _pid_tmpdir("msdw_stream_wm_audit", sf_dir)
@@ -453,11 +458,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Eager-execution, per-(sf, pid) work dir (same conventions as
     streaming_upsert_merge); the returned frame re-reads the target."""
-    import os
-    import shutil
-
     from myserver_datawarehouse_spark.operators.merge import drop_table
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
     work = _pid_tmpdir("msdw_stream_cdc", sf_dir)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
@@ -515,14 +516,10 @@ def streaming_cdc_replication(
 
     Eager-execution, per-(sf, pid) work dir (the streaming_upsert_merge
     convention); the returned frame re-reads both tables."""
-    import os
-    import shutil
-
     from myserver_datawarehouse_spark.operators.merge import (
         drop_table,
         read_version,
     )
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
     work = _pid_tmpdir("msdw_stream_cdcrep", sf_dir)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
@@ -617,35 +614,16 @@ def streaming_evolved_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same eager-at-construction bench note as streaming_upsert_merge;
     per-(sf, pid) work dir, cleared up front."""
-    import os
-    import shutil
-
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
-
-    work = _pid_tmpdir("msdw_stream_evolve", sf_dir)
-    shutil.rmtree(work, ignore_errors=True)
     from myserver_datawarehouse_spark.operators import evolution as EV
     from myserver_datawarehouse_spark.operators import merge as M
 
+    work = _fresh_work("msdw_stream_evolve", sf_dir)
     root = SJ.evolved_upsert_stream(spark, sf_dir, work)
-
-    def _seed_inodes(vdir: str) -> dict[str, int]:
-        out = {}
-        l0 = EV._layout_dir(vdir, 0)
-        for r, dirs, files in os.walk(l0):
-            dirs[:] = [d for d in dirs if not d.startswith("_")]
-            for f in files:
-                if f.endswith(".parquet"):
-                    out[f] = os.stat(os.path.join(r, f)).st_ino
-        return out
-
-    import json
-
-    versions, current = M.published_versions(root)
+    _versions, current = M.published_versions(root)
     vdir = os.path.join(root, current)
     with open(os.path.join(work, "seed_inodes.json")) as fh:
         seed_before = {k: int(v) for k, v in json.load(fh).items()}
-    seed_after = _seed_inodes(vdir)
+    seed_after = SJ._seed_inodes(vdir)
     has_sidecar = os.path.isdir(
         os.path.join(EV._layout_dir(vdir, 0), "_deletes")
     )
@@ -677,8 +655,8 @@ FROM ranked WHERE rn = 1 ORDER BY user_id, event_type
 def streaming_compaction_race(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Compaction racing a live stream (15th §2.12 variant, the
-    round-9 verdict's ask #5): foreachBatch evolved-merge ingest with
+    """Compaction racing a live stream (15th §2.12 variant):
+    foreachBatch evolved-merge ingest with
     an injected-CRASH compaction after batch 1, a REAL mid-stream
     compaction after batch 2, and state-routed plain-path merges after
     it (streaming/jobs.compaction_race_stream). Adjudicated output =
@@ -692,18 +670,9 @@ def streaming_compaction_race(
 
     Same eager-at-construction bench note as streaming_upsert_merge;
     per-(sf, pid) work dir."""
-    import json
-    import os
-
     from myserver_datawarehouse_spark.operators import merge as M
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
-    work = _pid_tmpdir("msdw_stream_race", sf_dir)
-    # Re-entrant within a process: a second plan construction must
-    # replay the whole lifecycle, not resume a consumed checkpoint.
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
+    work = _fresh_work("msdw_stream_race", sf_dir)
     root = SJ.compaction_race_stream(spark, sf_dir, work)
     with open(os.path.join(work, "race_flags.json")) as fh:
         flags = json.load(fh)
@@ -754,8 +723,6 @@ def streaming_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Eager-execution note: the replay runs at plan construction in a
     per-(sf, pid) work dir."""
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
-
     work = _pid_tmpdir("msdw_stream_outer_attr", sf_dir)
     out = SJ.outer_attribution_stream(spark, sf_dir, work)
     # buy_id rides as STRING: a nullable bigint degrades to float64
@@ -836,15 +803,9 @@ def streaming_bloom_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same eager-at-construction bench note as streaming_upsert_merge;
     per-(sf, pid) work dir."""
-    import json
-    import os
-    import shutil
-
     from myserver_datawarehouse_spark.operators import merge as M
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
-    work = _pid_tmpdir("msdw_stream_bloom", sf_dir)
-    shutil.rmtree(work, ignore_errors=True)
+    work = _fresh_work("msdw_stream_bloom", sf_dir)
     root = SJ.bloom_maintained_stream(spark, sf_dir, work)
     with open(os.path.join(work, "bloom_flags.json")) as fh:
         flags = json.load(fh)
@@ -892,16 +853,12 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     data column, not the trigger id) — what makes this adjudicable
     against the batch oracle below. Same eager-at-construction bench
     note as streaming_upsert_merge; per-(sf, pid) work dir."""
-    import shutil
-
     from myserver_datawarehouse_spark.plans.embeddings import (
         INGEST_BATCH_MOD,
         IVF_CENTS,
     )
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
 
-    work = _pid_tmpdir("msdw_stream_ivf", sf_dir)
-    shutil.rmtree(work, ignore_errors=True)
+    work = _fresh_work("msdw_stream_ivf", sf_dir)
     cells = SJ.ivf_ingest_stream(
         spark, sf_dir, work, cents=IVF_CENTS, batch_mod=INGEST_BATCH_MOD
     )
@@ -920,7 +877,7 @@ def _streaming_ivf_ingest_sql() -> str:
     # The assignment CTEs (e / cent_a / cent_b / asn_a / asn_b) are the
     # SHARED fragment from plans/embeddings — one source for the exact
     # rounding and tie-break rules, so this oracle and the batch
-    # audit's can never drift (review finding, round 12).
+    # audit's can never drift.
     from myserver_datawarehouse_spark.plans.embeddings import (
         IVF_ASSIGN_CTES_SQL,
     )
@@ -969,12 +926,7 @@ def streaming_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream adjudicable against the batch oracle below. Same
     eager-at-construction bench note as streaming_upsert_merge;
     per-(sf, pid) work dir."""
-    import shutil
-
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
-
-    work = _pid_tmpdir("msdw_stream_neardup", sf_dir)
-    shutil.rmtree(work, ignore_errors=True)
+    work = _fresh_work("msdw_stream_neardup", sf_dir)
     ledger = SJ.near_dup_ingest_stream(spark, sf_dir, work)
     return (
         SJ._read_tree(spark, ledger)
@@ -1055,12 +1007,7 @@ def streaming_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjudicates against the batch oracle below. Same
     eager-at-construction bench note as streaming_upsert_merge;
     per-(sf, pid) work dir."""
-    import shutil
-
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
-
-    work = _pid_tmpdir("msdw_stream_mixdrift", sf_dir)
-    shutil.rmtree(work, ignore_errors=True)
+    work = _fresh_work("msdw_stream_mixdrift", sf_dir)
     ledger = SJ.mix_drift_stream(spark, sf_dir, work)
     return (
         SJ._read_tree(spark, ledger)
@@ -1161,12 +1108,7 @@ def streaming_curation_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label collapse — the survivor is always the earliest-indexed
     member). Same eager-at-construction bench note as
     streaming_upsert_merge; per-(sf, pid) work dir."""
-    import shutil
-
-    from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
-
-    work = _pid_tmpdir("msdw_stream_curation", sf_dir)
-    shutil.rmtree(work, ignore_errors=True)
+    work = _fresh_work("msdw_stream_curation", sf_dir)
     ledger = SJ.curation_ledger_stream(spark, sf_dir, work)
     return (
         SJ._read_tree(spark, ledger)

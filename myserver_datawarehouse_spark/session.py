@@ -26,13 +26,27 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 BUSINESS_TZ = "Asia/Tehran"
 
 
+def _default_driver_memory() -> str:
+    """The local driver heap cap: a quarter of the host's physical
+    memory, at most 16g (16g where the host does not report it). A local
+    driver's heap grows toward its cap, so a fixed 16g lets a few
+    concurrent Spark processes exhaust a small host."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{min(16 * 1024, phys // 4 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "myserver-datawarehouse-spark",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism. On a real cluster the
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism and
+    ``SPARK_GRAFT_DRIVER_MEM`` for the local driver heap (default: a
+    quarter of physical memory, at most 16g). On a real cluster the
     master/memory settings come from spark-submit; everything set here is
     master-agnostic semantics (timezone, AQE, Arrow) plus local defaults.
 
@@ -68,7 +82,8 @@ def get_spark(
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -60,3 +60,63 @@ def test_parallel_actions_first_exception_propagates_after_all_finish():
     with pytest.raises(ValueError, match="first"):
         parallel_actions(boom("first"), slow_ok, boom("second"))
     assert finished.is_set()
+
+
+class _RecordingBuilder:
+    """Stands in for `SparkSession.builder`: records the conf that
+    `get_spark` sets and returns it instead of starting a JVM."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, _name):
+        return self
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+def test_default_driver_memory_is_a_quarter_of_the_host_capped_at_16g(
+    monkeypatch,
+):
+    import os
+
+    from myserver_datawarehouse_spark import session
+
+    def host(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+
+    host(16)
+    assert session._default_driver_memory() == "4096m"
+    host(15)
+    assert session._default_driver_memory() == "3840m"
+    host(128)
+    assert session._default_driver_memory() == "16384m"
+
+    def unknown(name):
+        raise ValueError(name)
+
+    monkeypatch.setattr(os, "sysconf", unknown)
+    assert session._default_driver_memory() == "16g"
+
+    # get_spark uses the sized default unless SPARK_GRAFT_DRIVER_MEM is set.
+    host(16)
+    monkeypatch.setattr(
+        session.SparkSession, "getActiveSession", staticmethod(lambda: None)
+    )
+    monkeypatch.delenv("SPARK_GRAFT_ON_CLUSTER", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    assert session.get_spark()["spark.driver.memory"] == "4096m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    assert session.get_spark()["spark.driver.memory"] == "3g"

@@ -102,8 +102,8 @@ def test_gap_state_carries_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .load(src)
     )
-    out = SJ.run_update_available_now(
-        SJ.gap_state_query(stream), spark, "t_gap_state"
+    out = SJ.run_available_now(
+        SJ.gap_state_query(stream), spark, "t_gap_state", mode="update"
     )
     # last update per key = final state
     final = (
@@ -513,3 +513,40 @@ def test_cdc_apply_order_independent(spark, tmp_path):
     rev = apply_order(reversed(range(6)), str(tmp_path / "rev"))
     assert fwd == rev
     assert {r[0] for r in fwd} == {1}  # 2 and 3 deleted, 1 survives
+
+
+def test_drain_files_takes_the_schema_from_the_staged_frame(spark, tmp_path):
+    """The file-source drain reads the staged files with the staged
+    frame's own schema: non-nullable literal columns (the CDC log shape)
+    drain to the same rows a plain parquet read returns, and no schema
+    read-back job runs outside the micro-batches."""
+    input_dir = str(tmp_path / "input")
+    log = spark.range(40).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 3).alias("user_id"),
+        F.lit("I").alias("op"),
+        F.lit(1).alias("seq"),
+    )
+    assert not log.schema["op"].nullable and not log.schema["seq"].nullable
+    log.repartition(4).write.mode("overwrite").parquet(input_dir)
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    got, batch_jobs = [], []
+
+    def collect(batch, _batch_id):
+        lo = int(dag.nextJobId())
+        got.extend(tuple(r) for r in batch.collect())
+        batch_jobs.append(int(dag.nextJobId()) - lo)
+
+    lo = int(dag.nextJobId())
+    SJ._drain_files(log, input_dir, 2, collect, str(tmp_path))
+    drain_jobs = int(dag.nextJobId()) - lo
+
+    want = sorted(tuple(r) for r in spark.read.parquet(input_dir).collect())
+    assert len(want) == 40 and sorted(got) == want
+    assert len(batch_jobs) == 2  # 4 files, 2 per trigger
+    assert drain_jobs == sum(batch_jobs)
+    # what the drain does not pay: reading the schema back is a job
+    lo = int(dag.nextJobId())
+    spark.read.parquet(input_dir).schema
+    assert int(dag.nextJobId()) - lo == 1

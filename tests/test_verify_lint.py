@@ -196,11 +196,15 @@ def test_materialize_allowlist_matches_registry():
 
 def test_recurring_shapes_have_one_owner():
     """The candidate-pair self-join, the pooled-action thread pool, the
-    MinHash signature aggregate and the partner-precedence probe are each
-    written once, in their owner; every other module calls the owner
+    MinHash signature aggregate, the partner-precedence probe, the
+    streaming file source, the foreachBatch drain, the memory-sink drain
+    and the mtime-ordered replay staging are each written once, in their
+    owner; every other module calls the owner
     (`operators/text.doc_pairs`, `session.parallel_actions`,
     `plans/llm_text._minhash_signature`,
-    `streaming/jobs._precedence_candidates`)."""
+    `streaming/jobs._precedence_candidates`, `streaming/jobs._file_stream`,
+    `streaming/jobs._drain_files`, `streaming/jobs.run_available_now`,
+    `streaming/jobs._stage_ordered_inputs`)."""
     import re
 
     pkg = Path(__file__).resolve().parents[1] / "myserver_datawarehouse_spark"
@@ -219,6 +223,22 @@ def test_recurring_shapes_have_one_owner():
         ),
         "partner-precedence rule": (
             re.compile(r'F\.col\("ix\.doc_id"\)\s*<\s*F\.col\("doc_new"\)'),
+            {"streaming/jobs.py": 1},
+        ),
+        "file source batch size": (
+            re.compile(r'\.option\(\s*"maxFilesPerTrigger"'),
+            {"streaming/jobs.py": 1},
+        ),
+        "foreachBatch drain": (
+            re.compile(r"\.foreachBatch\("),
+            {"streaming/jobs.py": 1},
+        ),
+        "memory sink": (
+            re.compile(r'\.format\(\s*"memory"\s*\)'),
+            {"streaming/jobs.py": 1},
+        ),
+        "replay-order mtime stamp": (
+            re.compile(r"\bos\.utime\("),
             {"streaming/jobs.py": 1},
         ),
     }

@@ -2,8 +2,10 @@
 queries through the bench's noop-sink protocol and report, for each,
 
   - wall seconds (median of reps, after a warm rep),
-  - Spark job count / stage count / task count / summed task time
-    (from the status tracker, scoped by job group),
+  - Spark job count / stage count / task count per rep, attributed by
+    job-ID window (perfbench/measure.SparkJobs), so jobs submitted from
+    pooled threads (`session.parallel_actions`) count too — a job group
+    is thread-local and misses them,
   - Exchange / BroadcastExchange / *EvalPython node counts and the join
     strategies in the FINAL executed plan (via explain after AQE),
 
@@ -25,11 +27,13 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "perfbench"))
 
-from myserver_datawarehouse_spark import registry
-from myserver_datawarehouse_spark.session import get_spark
-from bench import _cpu_ticks, _steal_pct
+import measure  # noqa: E402
+from myserver_datawarehouse_spark import registry  # noqa: E402
+from myserver_datawarehouse_spark.session import get_spark  # noqa: E402
 
 
 def plan_counts(df) -> dict:
@@ -53,39 +57,26 @@ def plan_counts(df) -> dict:
 
 
 def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
-    sc = spark.sparkContext
     for _ in range(warm):
         spec.spark(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-    group = f"profile_{spec.name}"
+    jobs = measure.SparkJobs(spark)
     times = []
     steals = []
-    sc.setJobGroup(group, spec.name)
-    t_jobs0 = set(sc.statusTracker().getJobIdsForGroup(group))
+    lo = jobs.next_job_id()
     for _ in range(reps):
-        c0 = _cpu_ticks()
+        c0 = measure.cpu_ticks()
         t0 = time.perf_counter()
         df = spec.spark(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         times.append(time.perf_counter() - t0)
-        steals.append(_steal_pct(c0, _cpu_ticks()))
-    tracker = sc.statusTracker()
-    job_ids = [
-        j for j in tracker.getJobIdsForGroup(group) if j not in t_jobs0
-    ]
-    n_stages = 0
-    n_tasks = 0
-    for j in job_ids:
-        ji = tracker.getJobInfo(j)
-        if ji is None:
-            continue
-        for st in ji.stageIds:
-            si = tracker.getStageInfo(st)
-            if si is not None:
-                n_stages += 1
-                n_tasks += si.numTasks
-    sc.setJobGroup(None, None)
+        steals.append(round(measure.steal_pct(c0, measure.cpu_ticks()), 2))
+    hi = jobs.next_job_id()
+    # the status store is fed by the listener bus: drain it first
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs.refresh(lo, hi)
+    census = jobs.window(lo, hi)
     # plan shape of the (lazily rebuilt) frame
     try:
         counts = plan_counts(spec.spark(spark, sf_dir))
@@ -99,11 +90,11 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
         "name": spec.name,
         "wall_med": round(med, 3),
         "reps": [round(t, 3) for t in times],
-        "jobs_per_rep": round(len(job_ids) / max(1, reps), 1),
-        "stages_per_rep": round(n_stages / max(1, reps), 1),
-        "tasks_per_rep": round(n_tasks / max(1, reps), 1),
+        "jobs_per_rep": round(census["jobs"] / max(1, reps), 1),
+        "stages_per_rep": round(census["stages"] / max(1, reps), 1),
+        "tasks_per_rep": round(census["tasks"] / max(1, reps), 1),
         # hypervisor steal% per rep: >2-3% means the rep is a host
-        # phase, not the plan (see bench.py:_cpu_ticks).
+        # phase, not the plan (see perfbench/measure.cpu_ticks).
         "steal_pct": steals,
         **counts,
     }
