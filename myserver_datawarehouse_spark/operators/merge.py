@@ -122,11 +122,17 @@ def merge_upsert(
     values must be STABLE (a function of the key, like date_id of an
     event's fixed timestamp). An update that moves a key to a new
     partition is outside the contract — the old partition is untouched
-    by construction (that's what makes the merge O(batch partitions)),
-    so the stale row would survive beside the new one. Every partition-
-    scoped merge engine shares this contract (dynamic partition
-    overwrite, Hive exchange-partition pipelines); a key-mobile table
-    must merge unpartitioned or delete-then-insert.
+    by construction (that's what makes the merge's writes O(batch
+    partitions)), so the stale row would survive beside the new one.
+    Every partition-scoped merge engine shares this contract (dynamic
+    partition overwrite, Hive exchange-partition pipelines); a
+    key-mobile table must merge unpartitioned or delete-then-insert.
+
+    Cost: O(batch partitions) written, but O(table) read. The touched-
+    partition prune is a null-safe (``<=>``) semi-join, and Spark's
+    dynamic partition pruning fires only on ``=`` conjuncts, so the
+    existing side plans as a full scan of the table (no partition
+    filters) before the semi-join drops the untouched partitions.
 
     Commit protocol: the merge is WRITE → AUDIT → PUBLISH, same as
     `publish_overwrite`, so there is no instant at which a reader (or a
@@ -156,7 +162,11 @@ def merge_upsert(
     link_untouched = bool(partition_by)
     existing = None
     if _table_exists(target_path):
-        existing = spark.read.parquet(target_path)
+        # The committed schema sidecar spares a schema-inference job per
+        # merge; a legacy plain directory (no sidecar) is inferred.
+        schema = _sidecar_schema(target_path)
+        existing = (spark.read.parquet(target_path) if schema is None
+                    else spark.read.schema(schema).parquet(target_path))
         existing_spec = _partition_spec(target_path)
         if existing_spec and partition_by and list(partition_by) != existing_spec:
             # Committing a snapshot whose partition dirs disagree with
@@ -186,10 +196,11 @@ def merge_upsert(
             # the partitioned layout for every later merge.
             link_untouched = False
         elif link_untouched:
-            # Only the partitions the batch touches participate: partition
-            # pruning on the existing side + copy-on-write hardlinks for
-            # everything else. An hourly batch rewrites O(batch dates), not
-            # O(table). A null partition value is a touched partition
+            # Only the partitions the batch touches participate: the
+            # semi-join drops the rest from the existing side and
+            # copy-on-write hardlinks carry them. An hourly batch rewrites
+            # O(batch dates), not O(table) (it still scans the table; see
+            # the docstring). A null partition value is a touched partition
             # too (__HIVE_DEFAULT_PARTITION__), hence the null-safe prune.
             existing = _null_safe_semi(
                 existing, updates.select(*partition_by).distinct(),
@@ -644,14 +655,21 @@ def _read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
     try:
         df = spark.read.parquet(snapshot_dir)
     except Exception:
-        sidecar = os.path.join(snapshot_dir, "_SCHEMA.json")
-        if os.path.isfile(sidecar):
-            with open(sidecar) as fh:
-                schema = StructType.fromJson(json.load(fh))
-            df = spark.read.schema(schema).parquet(snapshot_dir)
-        else:
+        schema = _sidecar_schema(snapshot_dir)
+        if schema is None:
             raise
+        df = spark.read.schema(schema).parquet(snapshot_dir)
     return _apply_deletes(spark, snapshot_dir, df)
+
+
+def _sidecar_schema(snapshot_dir: str) -> StructType | None:
+    """The schema `_stage_snapshot` committed beside a snapshot's data
+    (`_SCHEMA.json`), or None for a directory written without one."""
+    sidecar = os.path.join(snapshot_dir, "_SCHEMA.json")
+    if not os.path.isfile(sidecar):
+        return None
+    with open(sidecar) as fh:
+        return StructType.fromJson(json.load(fh))
 
 
 def _delete_meta(snapshot_dir: str) -> dict | None:

@@ -10,8 +10,8 @@ The classic two-phase plan every distributed sort-rank uses:
    boundary when the order is total).
 2. Count rows per partition (a #partitions-row aggregate — the one
    driver-side object, KB-sized at any data scale), turn the counts into
-   cumulative offsets, broadcast them back, and add each partition's
-   offset to its local ``row_number``.
+   cumulative offsets, broadcast them back as a local relation, and add
+   each partition's offset to its local ``row_number``.
 
 The ranked frame is materialized once (sanctioned lineage cut) so the
 count pass and the rank pass share the range exchange instead of
@@ -56,7 +56,15 @@ def global_rank(
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    off = df.sparkSession.createDataFrame(offsets, f"{_PID} int, {_OFFSET} long")
+    # VALUES literal, not createDataFrame: the latter ships the rows
+    # through a Python RDD, which starts Python workers inside an
+    # otherwise all-JVM plan. An empty input has no partitions to shift;
+    # partition 0's offset (always 0) keeps the literal non-empty.
+    values = ", ".join(f"({pid}, {acc})" for pid, acc in offsets or [(0, 0)])
+    off = df.sparkSession.sql(
+        f"SELECT CAST(pid AS INT) {_PID}, CAST(acc AS BIGINT) {_OFFSET} "
+        f"FROM (VALUES {values}) AS t(pid, acc)"
+    )
     local = F.row_number().over(Window.partitionBy(_PID).orderBy(*order_cols))
     return (
         ranged.join(F.broadcast(off), _PID)

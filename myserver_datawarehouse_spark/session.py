@@ -10,6 +10,19 @@ Centralizes the configuration that the whole engine depends on:
   the shuffle-heavy operators (grouped interpolation, LSH bucket joins).
 - shuffle.partitions sized for the local harness; on a real cluster this
   is overridden (or left to AQE's coalescing with a high initial value).
+- Local ``file:`` I/O through Hadoop's raw local filesystem, and
+  streaming checkpoints through the FileSystem-based checkpoint manager
+  (local sessions only; see `LOCAL_IO_CONF`). Without libhadoop, the
+  default checksummed local filesystem writes a ``.crc`` twin beside
+  every file and forks a ``chmod`` for each twin too, and the default
+  FileContext checkpoint manager forks a ``readlink`` for every rename
+  of a metadata or state file and of its twin. Each fork blocks its
+  thread for milliseconds, on the stream execution thread or inside
+  state-store tasks. The raw filesystem writes no twins; the
+  FileSystem-based manager commits with one atomic POSIX ``rename(2)``.
+  Parquet footers and the writers' ``_read_back`` audit still check
+  every commit. A cluster session (``SPARK_GRAFT_ON_CLUSTER``) keeps
+  Spark's defaults for its own filesystems.
 """
 
 from __future__ import annotations
@@ -24,6 +37,19 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 # Business timezone of the reference deployment (fact_gold_price.py:61).
 BUSINESS_TZ = "Asia/Tehran"
+
+
+# Local-only I/O settings (see the module docstring): no `.crc` twins
+# (nor their forked `chmod`s) and no forked `readlink` per checkpoint
+# rename.
+LOCAL_IO_CONF = {
+    "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl":
+        "org.apache.hadoop.fs.local.RawLocalFs",
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+}
 
 
 def _default_driver_memory() -> str:
@@ -48,7 +74,8 @@ def get_spark(
     ``SPARK_GRAFT_DRIVER_MEM`` for the local driver heap (default: a
     quarter of physical memory, at most 16g). On a real cluster the
     master/memory settings come from spark-submit; everything set here is
-    master-agnostic semantics (timezone, AQE, Arrow) plus local defaults.
+    master-agnostic semantics (timezone, AQE, Arrow) plus local defaults
+    (master, heap and `LOCAL_IO_CONF`).
 
     A session already active in this thread is returned as it is:
     ``getOrCreate`` would re-apply every option below to it, resetting
@@ -85,6 +112,8 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
+        for k, v in LOCAL_IO_CONF.items():
+            builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1,6 +1,8 @@
 """Merge/upsert writer semantics (S4-S7): idempotency, update-wins,
 partition-scoped rewrite, idempotent DDL."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.operators import merge as M
@@ -887,3 +889,35 @@ def test_delete_where_null_partition_value(spark, tmp_path):
     # data files unchanged (MOR), including the null partition's
     assert M.data_file_count(root) == n_before
     assert M.read_version(spark, root, v1).count() == 3
+
+
+def test_merge_reads_the_committed_schema_without_inference(spark, tmp_path):
+    """A merge into a committed table takes the existing side's schema
+    from its `_SCHEMA.json` sidecar: one job fewer than the same merge
+    into a legacy plain directory, whose schema is still inferred."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(action):
+        lo = int(dag.nextJobId())
+        action()
+        return int(dag.nextJobId()) - lo
+
+    rows = [(1, "a", 10), (2, "b", 20)]
+    committed, legacy = str(tmp_path / "committed"), str(tmp_path / "legacy")
+    M.merge_upsert(spark, committed, batch(spark, rows), keys=["id"],
+                   partition_by=["d"])
+    assert os.path.isfile(os.path.join(committed, "_SCHEMA.json"))
+    batch(spark, rows).write.partitionBy("d").parquet(legacy)
+    assert not os.path.isfile(os.path.join(legacy, "_SCHEMA.json"))
+    # Inferring a parquet directory's schema costs one job.
+    assert jobs(lambda: spark.read.parquet(legacy)) == 1
+
+    def merge(path):
+        return jobs(lambda: M.merge_upsert(
+            spark, path, batch(spark, [(2, "B", 20), (3, "c", 30)]),
+            keys=["id"], partition_by=["d"],
+        ))
+
+    assert merge(legacy) == merge(committed) + 1
+    expected = {(1, "a", 10), (2, "B", 20), (3, "c", 30)}
+    assert rows_of(spark, committed) == rows_of(spark, legacy) == expected

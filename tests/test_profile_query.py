@@ -30,3 +30,25 @@ def test_profile_counts_jobs_of_pooled_actions(spark):
     assert r["jobs_per_rep"] == want
     assert r["stages_per_rep"] >= want
     assert r["tasks_per_rep"] > 0
+
+
+def test_profile_counts_jvm_process_spawns(spark):
+    import shutil
+
+    import pytest
+
+    if not (shutil.which("jcmd") and shutil.which("jfr")):
+        pytest.skip("JDK tools (jcmd, jfr) not on PATH")
+
+    def forks_once(sp, _sf_dir):
+        gw = sp.sparkContext._gateway
+        cmd = gw.new_array(gw.jvm.String, 1)
+        cmd[0] = "true"
+        gw.jvm.java.lang.Runtime.getRuntime().exec(cmd).waitFor()
+        return sp.range(1)
+
+    spec = SimpleNamespace(name="fork_stub", spark=forks_once)
+    r = profile_one(spark, spec, "", reps=2, warm=0)
+    assert len(r["jvm_spawns"]) == 2
+    assert all(n >= 1 for n in r["jvm_spawns"])
+    assert r["jvm_spawn_cmds"]["true"] == 2

@@ -120,3 +120,68 @@ def test_default_driver_memory_is_a_quarter_of_the_host_capped_at_16g(
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
     assert session.get_spark()["spark.driver.memory"] == "3g"
+
+
+def test_local_session_serves_file_io_raw_and_cluster_keeps_defaults(
+    monkeypatch,
+):
+    from myserver_datawarehouse_spark import session
+
+    local_io = {
+        "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl":
+            "org.apache.hadoop.fs.local.RawLocalFs",
+        "spark.sql.streaming.checkpointFileManagerClass":
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+    }
+    monkeypatch.setattr(
+        session.SparkSession, "getActiveSession", staticmethod(lambda: None)
+    )
+    monkeypatch.delenv("SPARK_GRAFT_ON_CLUSTER", raising=False)
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    conf = session.get_spark()
+    assert {k: conf.get(k) for k in local_io} == local_io
+
+    monkeypatch.setenv("SPARK_GRAFT_ON_CLUSTER", "1")
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    conf = session.get_spark()
+    assert not set(local_io) & set(conf)
+    assert "master" not in conf
+
+
+def test_local_commits_and_checkpoints_write_no_crc_files(spark, tmp_path):
+    """A merge commit and a checkpointed, stateful availableNow drain into
+    a file sink leave no Hadoop checksum twin (`.<file>.crc`) anywhere:
+    the local session writes through the raw local filesystem. The
+    state store's own content checksums (`<n>.delta.crc`, no leading
+    dot) are Spark's, not the filesystem's, and stay."""
+    import os
+
+    from myserver_datawarehouse_spark.operators import merge as M
+
+    M.merge_upsert(
+        spark, str(tmp_path / "t"),
+        spark.range(6).selectExpr("id", "CAST(id % 2 AS INT) AS d"),
+        keys=["id"], partition_by=["d"],
+    )
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    spark.range(6).selectExpr("id", "id % 3 AS k").write.parquet(src)
+    q = (
+        spark.readStream.schema("id long, k long").parquet(src)
+        .dropDuplicates(["k"])
+        .writeStream.format("parquet")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start(out)
+    )
+    q.awaitTermination()
+    assert spark.read.parquet(out).count() == 3
+    assert os.path.isdir(tmp_path / "ckpt" / "state")
+    crc = [
+        os.path.join(d, f)
+        for d, _, files in os.walk(tmp_path)
+        for f in files
+        if f.startswith(".") and f.endswith(".crc")
+    ]
+    assert crc == []

@@ -8,6 +8,13 @@ queries through the bench's noop-sink protocol and report, for each,
     is thread-local and misses them,
   - Exchange / BroadcastExchange / *EvalPython node counts and the join
     strategies in the FINAL executed plan (via explain after AQE),
+  - processes the driver JVM forked per rep (`jvm_spawns`, with the
+    forked programs counted in `jvm_spawn_cmds`), from a JFR
+    `jdk.ProcessStart` recording started and stopped through `jcmd`
+    around each rep; null when the JDK tools (`jcmd`, `jfr`) are not on
+    PATH. Each fork blocks the thread that made it (a local filesystem
+    without libhadoop shells out per file), so this is driver time the
+    job census cannot show,
 
 so an optimization can be judged by plan shape + scheduler load, not
 wall-clock alone (guide §1: measure first; §7.2: read the plan).
@@ -24,8 +31,12 @@ import io
 import json
 import os
 import re
+import shutil
+import subprocess
 import sys
+import tempfile
 import time
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -56,22 +67,70 @@ def plan_counts(df) -> dict:
     return counts
 
 
+_SPAWN_JFC = """<?xml version="1.0" encoding="UTF-8"?>
+<configuration version="2.0">
+  <event name="jdk.ProcessStart">
+    <setting name="enabled">true</setting>
+    <setting name="stackTrace">false</setting>
+  </event>
+</configuration>
+"""
+
+
+@contextlib.contextmanager
+def jvm_spawns(pid: int):
+    """Count the processes the JVM `pid` forks inside the block: a JFR
+    recording of `jdk.ProcessStart` alone, started and stopped through
+    `jcmd`. The yielded Counter holds the forked programs' basenames
+    once the block exits."""
+    counts: Counter = Counter()
+    with tempfile.TemporaryDirectory(prefix="msdw_jfr_") as tmp:
+        jfc, rec = os.path.join(tmp, "spawns.jfc"), os.path.join(tmp, "spawns.jfr")
+        with open(jfc, "w") as fh:
+            fh.write(_SPAWN_JFC)
+
+        def jcmd(*args: str) -> None:
+            subprocess.run(["jcmd", str(pid), *args], check=True,
+                           capture_output=True, text=True)
+
+        jcmd("JFR.start", "name=msdw_spawns", f"settings={jfc}")
+        try:
+            yield counts
+        finally:
+            jcmd("JFR.stop", "name=msdw_spawns", f"filename={rec}")
+        out = subprocess.run(
+            ["jfr", "print", "--json", "--events", "jdk.ProcessStart", rec],
+            check=True, capture_output=True, text=True).stdout
+        counts.update(
+            os.path.basename(e["values"]["command"].split()[0])
+            for e in json.loads(out)["recording"]["events"]
+        )
+
+
 def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
     for _ in range(warm):
         spec.spark(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
     jobs = measure.SparkJobs(spark)
+    jvm = spark.sparkContext._gateway.proc.pid
+    jdk_tools = bool(shutil.which("jcmd") and shutil.which("jfr"))
     times = []
     steals = []
+    spawn_counts = []
+    spawn_cmds: Counter = Counter()
     lo = jobs.next_job_id()
     for _ in range(reps):
-        c0 = measure.cpu_ticks()
-        t0 = time.perf_counter()
-        df = spec.spark(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
-        steals.append(round(measure.steal_pct(c0, measure.cpu_ticks()), 2))
+        with (jvm_spawns(jvm) if jdk_tools else contextlib.nullcontext()) as cmds:
+            c0 = measure.cpu_ticks()
+            t0 = time.perf_counter()
+            df = spec.spark(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            times.append(time.perf_counter() - t0)
+            steals.append(round(measure.steal_pct(c0, measure.cpu_ticks()), 2))
+        if cmds is not None:
+            spawn_counts.append(sum(cmds.values()))
+            spawn_cmds.update(cmds)
     hi = jobs.next_job_id()
     # the status store is fed by the listener bus: drain it first
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
@@ -96,6 +155,8 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
         # hypervisor steal% per rep: >2-3% means the rep is a host
         # phase, not the plan (see perfbench/measure.cpu_ticks).
         "steal_pct": steals,
+        "jvm_spawns": spawn_counts if jdk_tools else None,
+        "jvm_spawn_cmds": dict(spawn_cmds) if jdk_tools else None,
         **counts,
     }
 
