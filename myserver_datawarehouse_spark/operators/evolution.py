@@ -379,11 +379,15 @@ def evolved_merge(
 
         from myserver_datawarehouse_spark.session import materialize
 
-        # Stage the batch once: it feeds the fold, the broadcast key set,
-        # the touched-partition prune and each legacy layout's delete
-        # probe and sidecar rewrite, which would otherwise each re-run
-        # the caller's full batch lineage.
-        updates = materialize(updates)
+        # Stage the batch once: it feeds the fold, the broadcast key set
+        # and each legacy layout's delete probe and sidecar rewrite, which
+        # would otherwise each re-run the caller's full batch lineage.
+        # The ACTIVE layout merges with touched-partition carry, its
+        # existing side pruned to the touched partitions; with an
+        # UNPARTITIONED active spec there is no prune (and nothing to
+        # hardlink-carry), same as merge_upsert without partition_by.
+        existing = _read_layout(spark, cur_dir, active["id"], schema)
+        updates, existing = M._stage_touched(updates, existing, partition_by)
         # Legacy lookup: the batch keys' current rows in every legacy
         # layout enter the precedence fold (a newer legacy row beats a
         # stale replay under order_by).
@@ -395,15 +399,6 @@ def evolved_merge(
                 legacy_hits[spec_l["id"]] = M._null_safe_semi(
                     lr, batch_keys, keys
                 )
-        # ACTIVE layout: merge with touched-partition carry. With an
-        # UNPARTITIONED active spec there is no prune (and nothing to
-        # hardlink-carry), same as merge_upsert without partition_by.
-        existing = _read_layout(spark, cur_dir, active["id"], schema)
-        if existing is not None and partition_by:
-            existing = M._null_safe_semi(
-                existing, updates.select(*partition_by).distinct(),
-                partition_by,
-            )
         # Legacy hits join the fold WHOLE: their partition values under
         # the ACTIVE spec may differ from where they sit in the legacy
         # layout, so the touched-partition prune does not apply to them.

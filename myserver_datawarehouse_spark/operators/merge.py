@@ -57,8 +57,10 @@ def dedup_latest(
 # ------------------------------------------------------------------
 # The merge core every upsert shares (merge_upsert,
 # merge_upsert_published, evolution.evolved_merge): `_fold` owns the
-# precedence rule and `_null_safe_semi` the broadcast null-safe prune
-# (touched partitions, legacy-layout key lookups).
+# precedence rule, `_stage_touched` stages the batch once and prunes the
+# existing side to the partitions it touches with a literal partition
+# predicate, and `_null_safe_semi` is the broadcast null-safe key lookup
+# of evolved_merge's legacy layouts.
 
 
 def _fold(
@@ -80,13 +82,66 @@ def _fold(
     return dedup_latest(both, keys, order_by=[_PRECEDENCE]).drop(_PRECEDENCE)
 
 
+def _stage_touched(
+    updates: DataFrame,
+    existing: DataFrame | None,
+    partition_by: Sequence[str],
+) -> tuple[DataFrame, DataFrame | None]:
+    """Stage `updates` once (`session.materialize`) and prune `existing`
+    to the partitions the batch touches. The distinct partition tuples
+    are observed on the staging job itself, so no probe job re-reads
+    the batch, and the prune is a literal predicate on the partition
+    columns: the existing side's scan carries it as a static partition
+    filter and lists and reads only the touched partitions. Returns the
+    staged batch and the pruned existing side (None stays None)."""
+    from pyspark.sql import Observation
+
+    from myserver_datawarehouse_spark import session
+
+    if not partition_by:
+        return session.materialize(updates), existing
+    obs = Observation()
+    staged = session.materialize(updates.observe(
+        obs, F.collect_set(F.struct(*partition_by)).alias("touched")
+    ))
+    if existing is None:
+        return staged, None
+    # Sorted: the predicate, and so the plan, must not depend on the
+    # order in which the set was collected.
+    touched = sorted(obs.get["touched"],
+                     key=lambda t: [(v is None, v) for v in t])
+    types = {f.name: f.dataType for f in existing.schema.fields}
+
+    def lit(c, v):
+        return F.lit(v).cast(types[c])
+
+    if not touched:
+        keep = F.lit(False)
+    elif len(partition_by) == 1:
+        # A null partition value (__HIVE_DEFAULT_PARTITION__) is a
+        # touched partition too; `IN` never matches it.
+        (c,) = partition_by
+        values = [v for (v,) in touched]
+        keep = F.col(c).isin([lit(c, v) for v in values if v is not None])
+        if None in values:
+            keep = keep | F.col(c).isNull()
+    else:
+        keep = functools.reduce(lambda a, b: a | b, [
+            functools.reduce(lambda a, b: a & b, [
+                F.col(c).eqNullSafe(lit(c, v)) for c, v in zip(partition_by, t)
+            ])
+            for t in touched
+        ])
+    return staged, existing.filter(keep)
+
+
 def _null_safe_semi(
     df: DataFrame, probe: DataFrame, cols: Sequence[str]
 ) -> DataFrame:
     """Rows of `df` whose `cols` match some row of the small, broadcast
     `probe` under NULL-SAFE equality. A plain equi-join never matches
-    null = null, so rows in a null partition (or with a null key) would
-    be neither merged nor carried and would vanish from the snapshot."""
+    null = null, so rows with a null key would be neither merged nor
+    carried and would vanish from the snapshot."""
     return df.alias("__e").join(
         F.broadcast(probe).alias("__t"),
         functools.reduce(
@@ -128,11 +183,14 @@ def merge_upsert(
     partition overwrite, Hive exchange-partition pipelines); a
     key-mobile table must merge unpartitioned or delete-then-insert.
 
-    Cost: O(batch partitions) written, but O(table) read. The touched-
-    partition prune is a null-safe (``<=>``) semi-join, and Spark's
-    dynamic partition pruning fires only on ``=`` conjuncts, so the
-    existing side plans as a full scan of the table (no partition
-    filters) before the semi-join drops the untouched partitions.
+    Cost: O(touched partitions) read and written. A merge into an
+    existing partitioned table stages the batch once
+    (`session.materialize`), which also observes the partition tuples
+    the batch touches; the existing side is then read with a literal
+    predicate on those values (a static partition filter on its scan),
+    so only the touched partitions are listed and read, and the batch
+    lineage runs once. An unpartitioned merge reads and rewrites the
+    whole table.
 
     Commit protocol: the merge is WRITE → AUDIT → PUBLISH, same as
     `publish_overwrite`, so there is no instant at which a reader (or a
@@ -197,15 +255,10 @@ def merge_upsert(
             link_untouched = False
         elif link_untouched:
             # Only the partitions the batch touches participate: the
-            # semi-join drops the rest from the existing side and
-            # copy-on-write hardlinks carry them. An hourly batch rewrites
-            # O(batch dates), not O(table) (it still scans the table; see
-            # the docstring). A null partition value is a touched partition
-            # too (__HIVE_DEFAULT_PARTITION__), hence the null-safe prune.
-            existing = _null_safe_semi(
-                existing, updates.select(*partition_by).distinct(),
-                partition_by,
-            )
+            # partition filter drops the rest from the existing side and
+            # copy-on-write hardlinks carry them. An hourly batch reads
+            # and rewrites O(batch dates), not O(table).
+            updates, existing = _stage_touched(updates, existing, partition_by)
     # The merged lineage reads target_path (the OLD snapshot) while the
     # write lands in a fresh version directory — disjoint paths, so no
     # materialization is needed.
@@ -1070,9 +1123,7 @@ def merge_upsert_published(
         )
     existing = _read_snapshot(spark, cur_dir)
     if partition_by:
-        existing = _null_safe_semi(
-            existing, updates.select(*partition_by).distinct(), partition_by
-        )
+        updates, existing = _stage_touched(updates, existing, partition_by)
     version = _stage_snapshot(
         spark, table_root, _fold(updates, existing, keys, order_by),
         partition_by,

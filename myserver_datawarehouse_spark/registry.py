@@ -1766,6 +1766,7 @@ _CHANGED_SINCE_VERDICT: dict[str, int] = {
     "cross_modal_curation": 15,
     "pipeline_validation": 16,
     "sheets_export_frame": 16,
+    "streaming_compaction_race": 16,
 }
 
 _VERDICTS = latest_green_round()

@@ -23,6 +23,14 @@ Centralizes the configuration that the whole engine depends on:
   Parquet footers and the writers' ``_read_back`` audit still check
   every commit. A cluster session (``SPARK_GRAFT_ON_CLUSTER``) keeps
   Spark's defaults for its own filesystems.
+- DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``, local and
+  cluster). With it on, PySpark wraps every Column and DataFrame call
+  to send the Python call site to the JVM: a few py4j round trips per
+  call, over half of a small query's driver chatter. PySpark provides
+  the switch to "reduce performance slowdown". Errors keep their error
+  class and SQL context; they lose only the Python call-site fragment
+  (the file and line of the DataFrame call that failed).
 """
 
 from __future__ import annotations
@@ -106,6 +114,8 @@ def get_spark(
         # its frame is garbage-collected instead of accumulating one
         # copy per materialized intermediate for the session's lifetime.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # No per-call Python call-site capture (see the module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cpus}]").config(

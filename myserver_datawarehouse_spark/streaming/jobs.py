@@ -25,7 +25,9 @@ repeating it:
 - `run_available_now`: a memory-sink drain (and its progress log);
 - `_file_stream` / `_drain_files`: the parquet file source and its
   checkpointed foreachBatch drain, with the staged frame's schema;
-- `_stage_ordered_inputs`: one file per replay batch, ordered by mtime;
+- `_stage_files` / `_stage_ordered_inputs`: the staged input files
+  (`repartition` part files, or one file per replay batch), with
+  mtimes stamped in order by `_stamp_mtimes`;
 - `_seed_target` / `_seed_inodes`: the seeded upsert target and the
   inode map of its pre-evolution files;
 - `_per_batch_no`: the per-`batch_no` fan-out of a micro-batch;
@@ -239,6 +241,29 @@ def _drain_files(
     )
 
 
+def _stamp_mtimes(paths: list[str]) -> None:
+    """Give `paths` strictly increasing mtimes in list order. The file
+    source orders its files, and so composes its micro-batches, by
+    modification time; files written by parallel tasks share
+    millisecond mtimes, and ties fall back to directory-listing order,
+    which differs run to run."""
+    mtime = 1_700_000_000
+    for p in paths:
+        mtime += 10
+        os.utime(p, (mtime, mtime))
+
+
+def _stage_files(frame: DataFrame, input_dir: str, n: int, *cols) -> None:
+    """Stage `frame` in `input_dir` as the part files of
+    `repartition(n, *cols)`, with mtimes ascending in part-file order, so
+    the file source composes the same micro-batches on every run."""
+    frame.repartition(n, *cols).write.mode("overwrite").parquet(input_dir)
+    _stamp_mtimes(sorted(
+        os.path.join(input_dir, f) for f in os.listdir(input_dir)
+        if f.startswith("part-")
+    ))
+
+
 def _stage_ordered_inputs(
     frames: list[DataFrame], work_dir: str, input_dir: str
 ) -> None:
@@ -259,14 +284,13 @@ def _stage_ordered_inputs(
             for f, s in zip(frames, stages)
         ]
     )
-    mtime = 1_700_000_000
-    for k, s in enumerate(stages):
+    dests = [os.path.join(input_dir, f"batch_{k}.parquet")
+             for k in range(len(frames))]
+    for s, dest in zip(stages, dests):
         (name,) = [f for f in os.listdir(s) if f.endswith(".parquet")]
-        dest = os.path.join(input_dir, f"batch_{k}.parquet")
         os.replace(os.path.join(s, name), dest)
         shutil.rmtree(s, ignore_errors=True)
-        mtime += 10
-        os.utime(dest, (mtime, mtime))
+    _stamp_mtimes(dests)
 
 
 def _per_batch_no(fn):
@@ -494,7 +518,7 @@ def upsert_merge_stream(
     # Arrival simulation: split the (ts-normalized) events table into N
     # parquet files; the file source lists them incrementally.
     events = load_table(spark, sf_dir, "events")
-    events.repartition(n_input_files).write.mode("overwrite").parquet(input_dir)
+    _stage_files(events, input_dir, n_input_files)
 
     def _merge(batch: DataFrame, _batch_id: int) -> None:
         # The WAP-committed merge writer makes every micro-batch merge
@@ -688,9 +712,7 @@ def cdc_apply_stream(
         F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) == 0
     ).select("*", F.lit("D").alias("op"), F.lit(3).alias("seq"))
     cdc = base.unionByName(updates).unionByName(deletes)
-    cdc.repartition(CDC_APPLY_FILES).write.mode("overwrite").parquet(
-        input_dir
-    )
+    _stage_files(cdc, input_dir, CDC_APPLY_FILES)
     _drain_files(
         cdc, input_dir, CDC_APPLY_FILES_PER_TRIGGER, _cdc_applier(target), work_dir
     )
@@ -811,7 +833,7 @@ def cdc_replicate_stream(
         "*", F.lit("I").alias("op"), F.lit(1).alias("seq")
     )
     log = base.unionByName(ops)
-    log.repartition(CDC_APPLY_FILES).write.mode("overwrite").parquet(input_dir)
+    _stage_files(log, input_dir, CDC_APPLY_FILES)
 
     # --- consumer: drain the log into the replica (order-independent)
     _drain_files(
@@ -908,7 +930,7 @@ def _seed_target(
     if evolve:
         EV.evolve_partition_spec(spark, root, ["event_type"])
     odd = ev.filter(F.col("event_id") % 2 == 1)
-    odd.repartition(n_input_files).write.mode("overwrite").parquet(input_dir)
+    _stage_files(odd, input_dir, n_input_files)
     return odd
 
 
@@ -1329,9 +1351,7 @@ def ivf_ingest_stream(
         .cast("int")
         .alias("batch_no"),
     )
-    arrivals.repartition(IVF_INGEST_BATCHES, "batch_no").write.mode(
-        "overwrite"
-    ).parquet(input_dir)
+    _stage_files(arrivals, input_dir, IVF_INGEST_BATCHES, "batch_no")
 
     def _ingest(batch: DataFrame, _batch_id: int) -> None:
         vecs = batch.select(
@@ -1634,9 +1654,7 @@ def mix_drift_stream(
             f"CAST((doc_id DIV {INCR_MOD}) % {MIX_DRIFT_BATCHES} AS INT)"
         ).alias("batch_no"),
     )
-    arrivals.repartition(MIX_DRIFT_BATCHES, "batch_no").write.mode(
-        "overwrite"
-    ).parquet(input_dir)
+    _stage_files(arrivals, input_dir, MIX_DRIFT_BATCHES, "batch_no")
     spark.createDataFrame(
         [],
         "batch_no int, lang string, batch_tokens long,"

@@ -2,7 +2,9 @@
 partition-scoped rewrite, idempotent DDL."""
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.operators import merge as M
@@ -637,7 +639,8 @@ def test_null_partition_rows_survive_partitioned_merge(spark, tmp_path):
     # __HIVE_DEFAULT_PARTITION__ (marking that directory touched, so the
     # hardlink carry skips it), but a plain equi-join semi-join never
     # matches null = null — existing null-partition rows were neither
-    # merged nor carried. The null-safe semi-join keeps them.
+    # merged nor carried. The touched-partition prune matches a null
+    # partition value with IS NULL and keeps them.
     p = str(tmp_path / "t")
     M.merge_upsert(
         spark, p, batch(spark, [(1, "a", None), (2, "b", 10)]),
@@ -921,3 +924,114 @@ def test_merge_reads_the_committed_schema_without_inference(spark, tmp_path):
     assert merge(legacy) == merge(committed) + 1
     expected = {(1, "a", 10), (2, "B", 20), (3, "c", 30)}
     assert rows_of(spark, committed) == rows_of(spark, legacy) == expected
+
+
+def _merge_executions(spark, action):
+    """Run `action`; return (jobs it ran, physical plans of the SQL
+    executions it started)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        xs = store.executionsList()
+        return {xs.apply(i).executionId(): xs.apply(i).physicalPlanDescription()
+                for i in range(xs.size())}
+
+    seen = executions()
+    lo = int(dag.nextJobId())
+    action()
+    jobs = int(dag.nextJobId()) - lo
+    return jobs, [p for i, p in sorted(executions().items()) if i not in seen]
+
+
+def _parquet_batch(spark, tmp_path, name, rows, schema="id long, v string, d int"):
+    """A batch read from parquet, as a tick's extract is: its partition
+    values reach the merge only at run time (no constant propagation)."""
+    src = str(tmp_path / name)
+    spark.createDataFrame(rows, schema).write.parquet(src)
+    return src, spark.read.parquet(src)
+
+
+def test_partitioned_merge_reads_only_the_touched_partitions(spark, tmp_path):
+    """The existing side of a partitioned merge scans with a static
+    partition filter on the touched values: only the touched
+    partition's files are listed and read, not the whole table."""
+    p = str(tmp_path / "t")
+    M.merge_upsert(spark, p, batch(spark, [(i, "a", i % 4) for i in range(8)]),
+                   keys=["id"], partition_by=["d"])
+    _, b = _parquet_batch(spark, tmp_path, "b", [(1, "B", 1), (9, "n", 1)])
+    _, plans = _merge_executions(spark, lambda: M.merge_upsert(
+        spark, p, b, keys=["id"], partition_by=["d"]))
+    scans = [blk for plan in plans for blk in plan.split("\n\n")
+             if "Scan parquet" in blk and f"file:{p}]" in blk]
+    assert scans, plans
+    for blk in scans:
+        (filters,) = re.findall(r"PartitionFilters: \[(.*)\]", blk)
+        assert re.search(r"\(d#\d+ = 1\)", filters), blk
+    assert rows_of(spark, p) == (
+        {(i, "a", i % 4) for i in range(8) if i != 1} | {(1, "B", 1), (9, "n", 1)}
+    )
+
+
+def test_partitioned_merge_runs_the_batch_once_in_three_jobs(spark, tmp_path):
+    """A merge into an existing partitioned table runs three jobs: the
+    batch staging (which also observes the touched partitions), the
+    dedup shuffle's map stage and the write. The batch's source is
+    scanned once."""
+    p = str(tmp_path / "t")
+    M.merge_upsert(spark, p, batch(spark, [(1, "a", 10), (2, "b", 20)]),
+                   keys=["id"], partition_by=["d"])
+    src, b = _parquet_batch(spark, tmp_path, "b", [(2, "B", 20), (3, "c", 30)])
+    jobs, plans = _merge_executions(spark, lambda: M.merge_upsert(
+        spark, p, b, keys=["id"], partition_by=["d"]))
+    assert jobs == 3
+    batch_scans = sum(plan.count(f"file:{src}]") for plan in plans)
+    assert batch_scans == 1, plans
+    assert rows_of(spark, p) == {(1, "a", 10), (2, "B", 20), (3, "c", 30)}
+
+
+@pytest.mark.parametrize("reliable", ["false", "true"])
+def test_touched_partition_prune_edge_cases(spark, tmp_path, reliable):
+    """Null partition values, multi-column partitions and 0-row batches
+    merge correctly under both `session.materialize` profiles."""
+    from myserver_datawarehouse_spark.session import RELIABLE_CHECKPOINT_CONF
+
+    spark.conf.set(RELIABLE_CHECKPOINT_CONF, reliable)
+    try:
+        # one column, null partition touched and untouched
+        p = str(tmp_path / "one")
+        M.merge_upsert(spark, p, batch(spark, [(1, "a", None), (2, "b", 10),
+                                               (3, "c", 20)]),
+                       keys=["id"], partition_by=["d"])
+        _, b = _parquet_batch(spark, tmp_path, "b1",
+                              [(1, "A", None), (4, "d", 10)])
+        M.merge_upsert(spark, p, b, keys=["id"], partition_by=["d"])
+        assert rows_of(spark, p) == {(1, "A", None), (2, "b", 10),
+                                     (3, "c", 20), (4, "d", 10)}
+
+        # two columns, a null in either position
+        schema = "id long, v string, d int, e string"
+        q = str(tmp_path / "two")
+        seed = [(1, "a", 1, "x"), (2, "b", 1, None), (3, "c", None, "x"),
+                (4, "d", 2, "y")]
+        M.merge_upsert(spark, q, spark.createDataFrame(seed, schema),
+                       keys=["id"], partition_by=["d", "e"])
+        _, b = _parquet_batch(spark, tmp_path, "b2",
+                              [(2, "B", 1, None), (3, "C", None, "x"),
+                               (5, "e", 1, "x")], schema)
+        M.merge_upsert(spark, q, b, keys=["id"], partition_by=["d", "e"])
+        got = {tuple(r) for r in
+               spark.read.parquet(q).select("id", "v", "d", "e").collect()}
+        assert got == {(1, "a", 1, "x"), (2, "B", 1, None),
+                       (3, "C", None, "x"), (4, "d", 2, "y"), (5, "e", 1, "x")}
+
+        # a 0-row batch touches nothing and keeps every row
+        before = rows_of(spark, p)
+        _, b = _parquet_batch(spark, tmp_path, "b3", [(9, "z", 10)])
+        M.merge_upsert(spark, p, b.filter("id < 0"), keys=["id"],
+                       partition_by=["d"])
+        assert rows_of(spark, p) == before
+    finally:
+        spark.conf.unset(RELIABLE_CHECKPOINT_CONF)

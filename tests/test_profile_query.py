@@ -1,5 +1,6 @@
 """tools/profile_query.py attributes jobs by job-ID window, so jobs that
-`session.parallel_actions` submits from its pool threads count too."""
+`session.parallel_actions` submits from its pool threads count too, and
+records the driver's py4j round trips per rep."""
 
 import sys
 from pathlib import Path
@@ -52,3 +53,23 @@ def test_profile_counts_jvm_process_spawns(spark):
     assert len(r["jvm_spawns"]) == 2
     assert all(n >= 1 for n in r["jvm_spawns"])
     assert r["jvm_spawn_cmds"]["true"] == 2
+
+
+def test_profile_counts_py4j_round_trips(spark):
+    def plain(sp, _sf_dir):
+        return sp.range(1)
+
+    def chatty(sp, _sf_dir):
+        system = sp.sparkContext._jvm.java.lang.System
+        for _ in range(50):
+            system.nanoTime()
+        return sp.range(1)
+
+    base = profile_one(spark, SimpleNamespace(name="plain_stub", spark=plain),
+                       "", reps=2, warm=1)
+    more = profile_one(spark, SimpleNamespace(name="chatty_stub", spark=chatty),
+                       "", reps=2, warm=1)
+    assert len(base["py4j_calls"]) == len(more["py4j_calls"]) == 2
+    assert all(n > 0 for n in base["py4j_calls"])
+    for b, m in zip(base["py4j_calls"], more["py4j_calls"]):
+        assert m - b >= 50

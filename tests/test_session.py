@@ -150,6 +150,26 @@ def test_local_session_serves_file_io_raw_and_cluster_keeps_defaults(
     assert "master" not in conf
 
 
+def test_local_and_cluster_sessions_switch_off_call_site_capture(
+    monkeypatch,
+):
+    """Both session kinds set PySpark's DataFrame debugging switch off,
+    so Column and DataFrame calls send no Python call site to the JVM."""
+    from myserver_datawarehouse_spark import session
+
+    monkeypatch.setattr(
+        session.SparkSession, "getActiveSession", staticmethod(lambda: None)
+    )
+    for cluster in (False, True):
+        if cluster:
+            monkeypatch.setenv("SPARK_GRAFT_ON_CLUSTER", "1")
+        else:
+            monkeypatch.delenv("SPARK_GRAFT_ON_CLUSTER", raising=False)
+        monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+        conf = session.get_spark()
+        assert conf["spark.python.sql.dataFrameDebugging.enabled"] == "false"
+
+
 def test_local_commits_and_checkpoints_write_no_crc_files(spark, tmp_path):
     """A merge commit and a checkpointed, stateful availableNow drain into
     a file sink leave no Hadoop checksum twin (`.<file>.crc`) anywhere:

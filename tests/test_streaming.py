@@ -2,6 +2,8 @@
 queries must equal their batch equivalents on the bounded source
 (SURVEY.md §2.12)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.sources.tables import load_table
@@ -550,3 +552,28 @@ def test_drain_files_takes_the_schema_from_the_staged_frame(spark, tmp_path):
     lo = int(dag.nextJobId())
     spark.read.parquet(input_dir).schema
     assert int(dag.nextJobId()) - lo == 1
+
+
+def test_staged_files_replay_in_part_order(spark, tmp_path):
+    """`_stage_files` stamps strictly ascending mtimes in part-file
+    order, so the file source composes the same micro-batches on every
+    run: with two files per trigger, batch k holds parts 2k and 2k+1."""
+    input_dir = str(tmp_path / "input")
+    frame = spark.range(40).select(F.col("id").alias("event_id"))
+    SJ._stage_files(frame, input_dir, 4)
+    parts = sorted(
+        os.path.join(input_dir, f) for f in os.listdir(input_dir)
+        if f.startswith("part-")
+    )
+    assert len(parts) == 4
+    mtimes = [os.stat(p).st_mtime for p in parts]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    ids = [{r[0] for r in spark.read.parquet(p).collect()} for p in parts]
+
+    got = []
+    SJ._drain_files(
+        frame, input_dir, 2,
+        lambda batch, _id: got.append({r[0] for r in batch.collect()}),
+        str(tmp_path),
+    )
+    assert got == [ids[0] | ids[1], ids[2] | ids[3]]

@@ -197,14 +197,15 @@ def test_materialize_allowlist_matches_registry():
 def test_recurring_shapes_have_one_owner():
     """The candidate-pair self-join, the pooled-action thread pool, the
     MinHash signature aggregate, the partner-precedence probe, the
-    streaming file source, the foreachBatch drain, the memory-sink drain
-    and the mtime-ordered replay staging are each written once, in their
+    streaming file source, the foreachBatch drain, the memory-sink drain,
+    the mtime-ordered replay staging and the touched-partition
+    observation of a partitioned merge are each written once, in their
     owner; every other module calls the owner
     (`operators/text.doc_pairs`, `session.parallel_actions`,
     `plans/llm_text._minhash_signature`,
     `streaming/jobs._precedence_candidates`, `streaming/jobs._file_stream`,
     `streaming/jobs._drain_files`, `streaming/jobs.run_available_now`,
-    `streaming/jobs._stage_ordered_inputs`)."""
+    `streaming/jobs._stamp_mtimes`, `operators/merge._stage_touched`)."""
     import re
 
     pkg = Path(__file__).resolve().parents[1] / "myserver_datawarehouse_spark"
@@ -240,6 +241,10 @@ def test_recurring_shapes_have_one_owner():
         "replay-order mtime stamp": (
             re.compile(r"\bos\.utime\("),
             {"streaming/jobs.py": 1},
+        ),
+        "touched-partition observation": (
+            re.compile(r"F\.collect_set\(F\.struct\("),
+            {"operators/merge.py": 1},
         ),
     }
     for shape, (pat, owners) in shapes.items():

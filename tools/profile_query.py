@@ -15,6 +15,11 @@ queries through the bench's noop-sink protocol and report, for each,
     PATH. Each fork blocks the thread that made it (a local filesystem
     without libhadoop shells out per file), so this is driver time the
     job census cannot show,
+  - the driver's py4j round trips per rep (`py4j_calls`): every command
+    the Python side sends the JVM (a DataFrame or Column call, a conf
+    read, a job submission) goes through
+    `py4j.clientserver.ClientServerConnection.send_command`, counted
+    around each rep on every thread,
 
 so an optimization can be judged by plan shape + scheduler load, not
 wall-clock alone (guide §1: measure first; §7.2: read the plan).
@@ -107,6 +112,29 @@ def jvm_spawns(pid: int):
         )
 
 
+@contextlib.contextmanager
+def py4j_calls():
+    """Count the py4j commands the driver sends to the JVM inside the
+    block, from any thread. The yielded list holds the count once the
+    block exits."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    sent = []
+
+    def counted(self, command):
+        sent.append(1)  # list.append is atomic under the GIL
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    total: list[int] = []
+    try:
+        yield total
+    finally:
+        ClientServerConnection.send_command = send
+        total.append(len(sent))
+
+
 def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
     for _ in range(warm):
         spec.spark(spark, sf_dir).write.format("noop").mode(
@@ -118,16 +146,19 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
     times = []
     steals = []
     spawn_counts = []
+    calls = []
     spawn_cmds: Counter = Counter()
     lo = jobs.next_job_id()
     for _ in range(reps):
         with (jvm_spawns(jvm) if jdk_tools else contextlib.nullcontext()) as cmds:
             c0 = measure.cpu_ticks()
             t0 = time.perf_counter()
-            df = spec.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            with py4j_calls() as n_calls:
+                df = spec.spark(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
             steals.append(round(measure.steal_pct(c0, measure.cpu_ticks()), 2))
+            calls += n_calls
         if cmds is not None:
             spawn_counts.append(sum(cmds.values()))
             spawn_cmds.update(cmds)
@@ -155,6 +186,7 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
         # hypervisor steal% per rep: >2-3% means the rep is a host
         # phase, not the plan (see perfbench/measure.cpu_ticks).
         "steal_pct": steals,
+        "py4j_calls": calls,
         "jvm_spawns": spawn_counts if jdk_tools else None,
         "jvm_spawn_cmds": dict(spawn_cmds) if jdk_tools else None,
         **counts,
