@@ -2,8 +2,8 @@
 reference walks pandas dtypes into a dict to push DataFrames through
 Airflow XCom). Spark-first, the exchange format is the schema itself:
 a stable, sorted JSON walk of any StructType — nested structs, arrays,
-maps included — round-trippable for cross-job contracts and
-schema-drift diffs."""
+maps included — byte-equal for equal schemas, so cross-job contracts
+compare as strings."""
 
 from __future__ import annotations
 
@@ -34,54 +34,3 @@ def schema_to_json(schema: StructType) -> str:
     """Deterministic JSON serialization (sorted keys, no whitespace
     drift) — equal schemas always produce byte-equal strings."""
     return json.dumps(_walk(schema), sort_keys=True, separators=(",", ":"))
-
-
-def schema_from_json(text: str) -> StructType:
-    """Inverse of schema_to_json via Spark's own fromJson after reshaping
-    the walk back to Spark's schema-JSON dialect."""
-
-    def rebuild(node):
-        if isinstance(node, str):
-            return {"type": node} if False else node
-        t = node["type"]
-        if t == "struct":
-            return {
-                "type": "struct",
-                "fields": [
-                    {
-                        "name": f["name"],
-                        "nullable": f["nullable"],
-                        "metadata": {},
-                        "type": rebuild(f["dtype"]),
-                    }
-                    for f in node["fields"]
-                ],
-            }
-        if t == "array":
-            return {
-                "type": "array",
-                "elementType": rebuild(node["element"]),
-                "containsNull": True,
-            }
-        if t == "map":
-            return {
-                "type": "map",
-                "keyType": rebuild(node["key"]),
-                "valueType": rebuild(node["value"]),
-                "valueContainsNull": True,
-            }
-        raise ValueError(f"unknown node type {t!r}")
-
-    return StructType.fromJson(rebuild(json.loads(text)))
-
-
-def schema_diff(a: StructType, b: StructType) -> dict[str, list[str]]:
-    """Field-level drift report between two schemas (the guarded
-    evolution probe's decision input, S8)."""
-    fa = {f.name: f.dataType.simpleString() for f in a.fields}
-    fb = {f.name: f.dataType.simpleString() for f in b.fields}
-    return {
-        "added": sorted(set(fb) - set(fa)),
-        "removed": sorted(set(fa) - set(fb)),
-        "retyped": sorted(n for n in set(fa) & set(fb) if fa[n] != fb[n]),
-    }

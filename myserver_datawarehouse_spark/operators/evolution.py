@@ -57,7 +57,6 @@ from myserver_datawarehouse_spark.operators import merge as M
 from myserver_datawarehouse_spark.sources import files as _FS
 
 _SPECS = "_SPECS.json"
-_SCHEMA = "_SCHEMA.json"
 
 
 def _layout_dir(version_dir: str, spec_id: int) -> str:
@@ -70,11 +69,6 @@ def _specs(version_dir: str) -> list[dict] | None:
         return None
     with open(p) as fh:
         return json.load(fh)
-
-
-def _snapshot_schema(version_dir: str) -> StructType:
-    with open(os.path.join(version_dir, _SCHEMA)) as fh:
-        return StructType.fromJson(json.load(fh))
 
 
 def _current_dir(table_root: str) -> str:
@@ -105,7 +99,7 @@ def read_snapshot_dir(spark: SparkSession, version_dir: str) -> DataFrame:
     merge._read_snapshot dispatches through, which makes time travel
     and table_changes evolution-aware)."""
     specs = _specs(version_dir)
-    schema = _snapshot_schema(version_dir)
+    schema = M._sidecar_schema(version_dir, required=True)
     parts = [
         d
         for s in specs
@@ -146,11 +140,9 @@ def evolve_partition_spec(
     version name."""
     cur_dir = _current_dir(table_root)
     specs = _specs(cur_dir)
-    schema = (
-        _snapshot_schema(cur_dir)
-        if os.path.isfile(os.path.join(cur_dir, _SCHEMA))
-        else M.read_published(spark, table_root).schema
-    )
+    schema = M._sidecar_schema(cur_dir)
+    if schema is None:
+        schema = M.read_published(spark, table_root).schema
     missing = [c for c in new_partition_by if c not in schema.fieldNames()]
     if missing:
         raise ValueError(f"partition columns {missing} not in table schema")
@@ -214,8 +206,7 @@ def _write_spec_manifest(
 ) -> None:
     with open(os.path.join(staged, _SPECS), "w") as fh:
         json.dump(specs, fh)
-    with open(os.path.join(staged, _SCHEMA), "w") as fh:
-        fh.write(schema.json())
+    M._write_schema_sidecar(staged, schema)
 
 
 def _carry_root_blooms(
@@ -369,7 +360,7 @@ def evolved_merge(
             f"{table_root} has no partition-spec manifest; use "
             "merge.merge_upsert or evolve_partition_spec first"
         )
-    schema = _snapshot_schema(cur_dir)
+    schema = M._sidecar_schema(cur_dir, required=True)
     active = specs[-1]
     partition_by = list(active["partition_by"])
     version = M._claim_next_version(table_root)
@@ -590,7 +581,7 @@ def evolved_append(
             f"{table_root} has no partition-spec manifest; use "
             "merge.append or evolve_partition_spec first"
         )
-    schema = _snapshot_schema(cur_dir)
+    schema = M._sidecar_schema(cur_dir, required=True)
     active = specs[-1]
     partition_by = list(active["partition_by"])
     version = M._claim_next_version(table_root)

@@ -38,12 +38,6 @@ def _deletions(c: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def delete1_variants(col: Column | str) -> Column:
-    """Distinct delete-1 neighborhood of a string column: the string
-    itself plus every one-character deletion (array<string>)."""
-    return deletek_variants(col, 1)
-
-
 def deletek_variants(col: Column | str, k: int) -> Column:
     """Distinct delete-≤k neighborhood: the string plus every way of
     deleting up to k characters (array<string>), built by k rounds of

@@ -668,8 +668,7 @@ def _stage_snapshot(
     # listing): lets a 0-row snapshot — a legitimate state, e.g. an
     # erasure that removes every row — read back without parquet schema
     # inference, which fails when no part files exist.
-    with open(os.path.join(staged, "_SCHEMA.json"), "w") as fh:
-        fh.write(df.schema.json())
+    _write_schema_sidecar(staged, df.schema)
     if audit:
         expected = obs.get["rows_written"]
         if expected == 0:
@@ -715,11 +714,22 @@ def _read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
     return _apply_deletes(spark, snapshot_dir, df)
 
 
-def _sidecar_schema(snapshot_dir: str) -> StructType | None:
-    """The schema `_stage_snapshot` committed beside a snapshot's data
-    (`_SCHEMA.json`), or None for a directory written without one."""
-    sidecar = os.path.join(snapshot_dir, "_SCHEMA.json")
-    if not os.path.isfile(sidecar):
+def _write_schema_sidecar(snapshot_dir: str, schema: StructType) -> None:
+    """Commit `schema` beside a snapshot's data (`_SCHEMA.json`): the
+    one writer of the sidecar, for plain and evolved snapshots."""
+    with open(os.path.join(snapshot_dir, _SCHEMA_SIDECAR), "w") as fh:
+        fh.write(schema.json())
+
+
+def _sidecar_schema(
+    snapshot_dir: str, required: bool = False
+) -> StructType | None:
+    """The schema committed beside a snapshot's data (`_SCHEMA.json`).
+    A directory written without one gives None, or raises
+    FileNotFoundError when `required` (every evolved snapshot has
+    one)."""
+    sidecar = os.path.join(snapshot_dir, _SCHEMA_SIDECAR)
+    if not required and not os.path.isfile(sidecar):
         return None
     with open(sidecar) as fh:
         return StructType.fromJson(json.load(fh))
@@ -947,6 +957,7 @@ def write_bucketed(
 
 _CURRENT = "_CURRENT"
 _DELETES = "_deletes"
+_SCHEMA_SIDECAR = "_SCHEMA.json"
 
 
 def _published_version(table_root: str) -> str | None:
@@ -1338,10 +1349,11 @@ def delete_where(
     # Carry: every data file and prior delete file, by hardlink (inode
     # refcount keeps them alive if the old version is vacuumed).
     _link_all_files(cur_dir, staged)
-    for sidecar in ("_SCHEMA.json",):
-        src = os.path.join(cur_dir, sidecar)
-        if os.path.isfile(src):
-            shutil.copy(src, os.path.join(staged, sidecar))
+    if os.path.isfile(os.path.join(cur_dir, _SCHEMA_SIDECAR)):
+        shutil.copy(
+            os.path.join(cur_dir, _SCHEMA_SIDECAR),
+            os.path.join(staged, _SCHEMA_SIDECAR),
+        )
     # The bloom parquet rows were hardlink-carried above (same relative
     # paths, same files); the per-column _META.json is dot/underscore-
     # filtered by the walk, so carry it explicitly — without it the

@@ -115,17 +115,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_image(payload: bytes, width: int, height: int):  # pragma: no cover
-    """STUB: real resize needs PIL; single seam like decode_media."""
-    if _HAVE_PIL:
-        import io
-
-        return Image.open(io.BytesIO(payload)).resize((width, height))
-    raise NotImplementedError(
-        "image resize requires PIL, not present in this environment"
-    )
-
-
 PHASH_BITS = 60
 PHASH_WINDOW = 8
 PHASH_SCHEMA = "doc_id long, phash long"

@@ -1,17 +1,12 @@
 """Skew mitigation primitives: deterministic salting for hot keys.
 
 AQE's skew-join handling (on in session.py) splits oversized sort-merge
-join partitions at runtime, but two shapes still need explicit salting at
-100 TB:
-
-- **Aggregation skew**: a hash aggregate over a hot key funnels that
-  key's entire final-merge state through ONE reducer task. Partial (map-
-  side) aggregation amortizes plain sums/counts, but per-group state that
-  doesn't partial-combine cheaply (exact distinct counts, collected sets)
-  concentrates on the hot key's single final partition.
-- **Join skew where the small side can't broadcast**: replicating the
-  unskewed side n ways and salting the skewed side spreads the hot key
-  over n tasks at the cost of n copies of the other side's rows.
+join partitions at runtime, but aggregation skew still needs explicit
+salting at 100 TB: a hash aggregate over a hot key funnels that key's
+entire final-merge state through ONE reducer task. Partial (map-side)
+aggregation amortizes plain sums/counts, but per-group state that
+doesn't partial-combine cheaply (exact distinct counts, collected sets)
+concentrates on the hot key's single final partition.
 
 Salts are DETERMINISTIC (hash of named columns, never rand()): the
 engine's reproducibility policy — identical inputs give identical plans,
@@ -39,38 +34,6 @@ def add_salt(
         salt_col,
         F.pmod(F.xxhash64(*entropy), F.lit(n_salts)).cast("int"),
     )
-
-
-def replicate_salts(
-    df: DataFrame, n_salts: int, salt_col: str = "_salt"
-) -> DataFrame:
-    """Cross the frame with salt ids 0..n_salts-1 (the build-side twin of
-    `add_salt` for a salted join: n copies, one per salt)."""
-    return df.withColumn(
-        salt_col,
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))),
-    )
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: Sequence[str],
-    n_salts: int,
-    entropy: Sequence[str | Column],
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the skewed side salted and the other side replicated
-    n_salts times. Same result set as a plain join on `on`; the shuffle
-    key becomes (on..., salt) so a hot key spreads over n_salts tasks.
-
-    Cost model: other side's shuffle volume × n_salts — use when `other`
-    is too big to broadcast and one key dominates `skewed`. For
-    sort-merge-join skew, AQE's split usually suffices; this is the
-    explicit fallback (shuffle-hash joins, AQE off, extreme skew)."""
-    a = add_salt(skewed, n_salts, entropy)
-    b = replicate_salts(other, n_salts)
-    return a.join(b, [*on, "_salt"], how).drop("_salt")
 
 
 def salted_distinct_count(

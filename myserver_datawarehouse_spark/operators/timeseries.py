@@ -85,19 +85,6 @@ def minute_observations(
     )
 
 
-def bounded_minute_grid(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """T1 grid (bounded form, rebuild_all_time_interpolation.py:74-99): per
-    group, every minute in [min observed, max observed] inclusive."""
-    return (
-        obs.groupBy(*keys)
-        .agg(F.min("minute_epoch").alias("t0"), F.max("minute_epoch").alias("t1"))
-        .select(
-            *keys,
-            F.explode(F.sequence("t0", "t1", F.lit(MINUTE))).alias("minute_epoch"),
-        )
-    )
-
-
 def _lead_gaps(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Per observed row, the run of missing minutes up to (exclusive) the
     next observation in its group, plus both bracketing observations.
@@ -287,7 +274,6 @@ def with_minute_ts(df: DataFrame, col: str = "minute_epoch") -> DataFrame:
 
 __all__: Iterable[str] = [
     "minute_observations",
-    "bounded_minute_grid",
     "gap_runs",
     "gapfill_missing",
     "interpolate_bracketing",

@@ -20,7 +20,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.operators import vectors as V
@@ -159,6 +159,15 @@ def embedding_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket"),
         F.col("nrm").alias("na"),
     )
+    return _bucket_topk(a, e, "bucket")
+
+
+def _bucket_topk(a: DataFrame, e: DataFrame, *extra: str) -> DataFrame:
+    """Top-{BUCKET_TOP_K} cosine neighbors per query over a sign-bucket
+    join: `a` is the query side (vec_id, q, na, bucket — a probed bucket
+    for multiprobe), `e` the corpus (vec_id, embedding, bucket, nrm).
+    Returns (vec_id, neighbor_id, *extra, cosine) ordered by query,
+    cosine desc, neighbor id; `extra` carries query-side columns."""
     b = e.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("v"),
@@ -172,19 +181,14 @@ def embedding_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         a.join(b, "bucket")
         .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            "bucket",
-            F.round(cos, 6).alias("cosine"),
-        )
+        .select("vec_id", "neighbor_id", *extra, F.round(cos, 6).alias("cosine"))
         .filter(F.col("cosine").isNotNull())
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= BUCKET_TOP_K)
-        .select("vec_id", "neighbor_id", "bucket", "cosine")
+        .select("vec_id", "neighbor_id", *extra, "cosine")
         .orderBy("vec_id", F.col("cosine").desc(), "neighbor_id")
     )
 
@@ -282,7 +286,7 @@ ORDER BY label
 NEAR_DUP_TAU = 0.35
 IVF_CENTS = 48  # FIXED centroid budget: cells grow in SIZE with the
                 # corpus, never in COUNT, so assignment is O(N x K).
-                # The round-9 5x/10x probe showed the previous
+                # A 5x/10x scale probe showed a
                 # %-mod rule (centroid count ~ N/37) going quadratic —
                 # ratio@10x 12.9 for the IVF scan alone, 36.8 composed
                 # with PQ. A deployment picks k at index build (often
@@ -367,6 +371,45 @@ def near_dup_embedding_cosine_gemm(spark: SparkSession, sf_dir: str) -> DataFram
 NEAR_DUP_EMBEDDING_COSINE_GEMM_SQL = NEAR_DUP_EMBEDDING_COSINE_SQL
 
 
+def _ivf_centroids(e: DataFrame, keep: Column) -> DataFrame:
+    """The fixed IVF quantizer: the (vec_id, embedding, nrm) rows that
+    `keep` selects, as centroids (cid, c, nc)."""
+    return e.filter(keep).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("c"),
+        F.col("nrm").alias("nc"),
+    )
+
+
+def _ivf_ranker(e: DataFrame, dp: int | None = None):
+    """The broadcast IVF assignment of the vectors `e` (vec_id,
+    embedding, nrm): returns `ranked(cent, *cols)`, every (vector,
+    centroid) pair of a centroid table with the kept columns `cols` of
+    `e`, the cosine `cent_cos` (rounded to `dp` places when given; NULL
+    for a zero vector) and its rank `rn` among the vector's centroids
+    (cosine desc, NULLs last, cid tie-break): rn 1 is the vector's
+    cell, rn <= nprobe its probe list. One cosine expression serves
+    every centroid table ranked."""
+    cos = F.when(
+        (F.col("nrm") > 0) & (F.col("nc") > 0),
+        V.dot("embedding", "c") / (F.col("nrm") * F.col("nc")),
+    )
+    if dp is not None:
+        cos = F.round(cos, dp)
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("cent_cos").desc_nulls_last(), F.col("cid")
+    )
+
+    def ranked(cent: DataFrame, *cols) -> DataFrame:
+        return (
+            e.join(F.broadcast(cent))
+            .select(*cols, "cid", cos.alias("cent_cos"))
+            .withColumn("rn", F.row_number().over(w))
+        )
+
+    return ranked
+
+
 def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: deterministic coarse quantizer ({IVF_CENTS} fixed
     centroids — cells grow in size with the corpus, never in count),
@@ -382,23 +425,8 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", V.norm2("embedding").alias("nrm")
     )
-    cent = e.filter(F.col("vec_id") < IVF_CENTS).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c"),
-        F.col("nrm").alias("nc"),
-    )
-    cos_cent = F.when(
-        (F.col("nrm") > 0) & (F.col("nc") > 0),
-        V.dot("embedding", "c") / (F.col("nrm") * F.col("nc")),
-    )
-    w_asn = Window.partitionBy("vec_id").orderBy(
-        F.col("cent_cos").desc_nulls_last(), F.col("cid")
-    )
-    asn = (
-        e.join(F.broadcast(cent))
-        .select("vec_id", "embedding", "nrm", "cid", cos_cent.alias("cent_cos"))
-        .withColumn("rn", F.row_number().over(w_asn))
-    )
+    cent = _ivf_centroids(e, F.col("vec_id") < IVF_CENTS)
+    asn = _ivf_ranker(e)(cent, "vec_id", "embedding", "nrm")
     cells = asn.filter(F.col("rn") == 1).select(
         "vec_id", "embedding", "nrm", F.col("cid").alias("cell")
     )
@@ -667,31 +695,40 @@ KMEANS_ITERS = 2
 KMEANS_DP = 9  # centroid / distance rounding: kills cross-engine ulp drift
 
 
-def _kmeans_assign(vx: DataFrame, cents: DataFrame) -> DataFrame:
-    """One Lloyd assignment pass: each vx row (vec_id, x, xx, ...) gets
-    its nearest centroid by the dot-product identity d2 = xx − 2·x·c +
-    cc, rounded to {KMEANS_DP} dp, ties broken on cid. Shared by
-    `kmeans_ivf_clusters` and `ivf_recluster_audit` — one source for
-    the assignment rounding/tie-break rules."""
-    cc = cents.select("cid", "c", V.dot("c", "c").alias("cc"))
+def _kmeans_assign(
+    vx: DataFrame, cents: DataFrame, col: str = "x", by: tuple = ()
+) -> DataFrame:
+    """One Lloyd assignment pass: each vx row (vec_id, *by, col, xx,
+    ...) gets its nearest centroid by the dot-product identity d2 = xx
+    − 2·x·c + cc, rounded to {KMEANS_DP} dp, ties broken on cid. `by`
+    names the key both sides share (`sub` for product quantization's
+    per-subspace codebooks); without it every centroid is a candidate.
+    The one source for the assignment rounding/tie-break rules."""
+    cc = cents.select(*by, "cid", "c", V.dot("c", "c").alias("cc"))
     d2 = F.round(
-        F.col("xx") - 2 * V.dot("x", "c") + F.col("cc"), KMEANS_DP
+        F.col("xx") - 2 * V.dot(col, "c") + F.col("cc"), KMEANS_DP
     )
-    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
+    w = Window.partitionBy("vec_id", *by).orderBy("d2", "cid")
+    paired = (
+        vx.join(F.broadcast(cc), list(by))
+        if by
+        else vx.crossJoin(F.broadcast(cc))
+    )
     return (
-        vx.crossJoin(F.broadcast(cc))
-        .select("vec_id", "x", "xx", "cid", d2.alias("d2"))
+        paired.select("vec_id", *by, col, "xx", "cid", d2.alias("d2"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
 
 
-def _kmeans_update(assigned: DataFrame) -> DataFrame:
-    """One Lloyd update pass: per-(cid, pos) decimal means, rounded to
-    {KMEANS_DP} dp, re-assembled into centroid vectors."""
-    el = assigned.select("cid", F.posexplode("x").alias("pos", "val"))
-    means = el.groupBy("cid", "pos").agg(
+def _kmeans_update(
+    assigned: DataFrame, col: str = "x", by: tuple = ()
+) -> DataFrame:
+    """One Lloyd update pass: per-(*by, cid, pos) decimal means, rounded
+    to {KMEANS_DP} dp, re-assembled into centroid vectors."""
+    el = assigned.select(*by, "cid", F.posexplode(col).alias("pos", "val"))
+    means = el.groupBy(*by, "cid", "pos").agg(
         F.round(
             F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
             / F.count(F.lit(1)),
@@ -699,10 +736,50 @@ def _kmeans_update(assigned: DataFrame) -> DataFrame:
         ).alias("m")
     )
     return (
-        means.groupBy("cid")
+        means.groupBy(*by, "cid")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("sm"))
-        .select("cid", F.expr("transform(sm, s -> s.m)").alias("c"))
+        .select(*by, "cid", F.expr("transform(sm, s -> s.m)").alias("c"))
     )
+
+
+def _pq_train(
+    sx: DataFrame, col: str, seed: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Product-quantization training and encoding over a (vec_id, sub,
+    col, xx) subspace frame: PQ_ITERS Lloyd rounds per subspace from
+    the `seed` codebook (sub, cid, c), trained jointly. Returns the
+    materialized codebook, its dense per-subspace renumber (sub, cid,
+    dcid) and every vector's code array (vec_id, codes), codes ordered
+    by subspace."""
+    from myserver_datawarehouse_spark.session import materialize
+
+    cents = seed
+    for _ in range(PQ_ITERS):
+        cents = _kmeans_update(
+            _kmeans_assign(sx, cents, col, ("sub",)), col, ("sub",)
+        )
+    # materialize: the trained codebook (<= M*K rows) feeds encoding,
+    # the dense renumber AND every probe LUT — without the cut each
+    # consumer would re-run the whole training lineage.
+    cents = materialize(cents)
+    wsub = Window.partitionBy("sub").orderBy("cid")
+    dense = cents.select("sub", "cid").withColumn(
+        "dcid", F.row_number().over(wsub) - 1
+    )
+    codes = (
+        _kmeans_assign(sx, cents, col, ("sub",))
+        .join(F.broadcast(dense), ["sub", "cid"])
+        .groupBy("vec_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("sub", "dcid"))
+            ).alias("sc")
+        )
+        .select(
+            "vec_id", F.expr("transform(sc, s -> s.dcid)").alias("codes")
+        )
+    )
+    return cents, dense, codes
 
 
 def kmeans_ivf_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -962,31 +1039,7 @@ def embedding_ann_multiprobe_join(
         "vec_id", "q", "na",
         F.col("bucket").bitwiseXOR(F.col("mask")).alias("bucket"),
     )
-    b = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("v"),
-        F.col("bucket"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.when(
-        (F.col("na") > 0) & (F.col("nb") > 0),
-        V.dot("q", "v") / (F.col("na") * F.col("nb")),
-    )
-    scored = (
-        a.join(b, "bucket")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select("vec_id", "neighbor_id", F.round(cos, 6).alias("cosine"))
-        .filter(F.col("cosine").isNotNull())
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= BUCKET_TOP_K)
-        .select("vec_id", "neighbor_id", "cosine")
-        .orderBy("vec_id", F.col("cosine").desc(), "neighbor_id")
-    )
+    return _bucket_topk(a, e)
 
 
 _XOR_MASKS = ", ".join(str(1 << i) for i in range(BUCKET_BITS))
@@ -1060,7 +1113,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Measured recall (this audit's own output): bucket mean ≈ 0.04,
     ivf mean ≈ 0.29–0.37, multiprobe mean ≈ 0.6 across sf0.001–sf0.1.
-    The round-10 sweep rows measure ivfpq_refined ≈ 0.83 (the exact
+    The sweep rows measure ivfpq_refined ≈ 0.83 (the exact
     re-rank recovers the full coarse-tier recall — compression loss
     bought back for {REFINE_R} exact distances/query) while the nprobe
     curve is FLAT on this fixture (np1 = np2 = np4): every ADC top-k
@@ -1569,69 +1622,12 @@ def embedding_pq_adc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sx = subs.select(
         "vec_id", "sub", "xs", V.dot("xs", "xs").alias("xx")
     )
-    cents = subs.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("cid"), F.col("xs").alias("c")
-    )
-
-    def assign(cents: DataFrame) -> DataFrame:
-        cc = cents.select("sub", "cid", "c", V.dot("c", "c").alias("cc"))
-        d2 = F.round(
-            F.col("xx") - 2 * V.dot("xs", "c") + F.col("cc"), KMEANS_DP
-        )
-        w = Window.partitionBy("vec_id", "sub").orderBy("d2", "cid")
-        return (
-            sx.join(F.broadcast(cc), "sub")
-            .select("vec_id", "sub", "xs", "xx", "cid", d2.alias("d2"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        el = assigned.select(
-            "sub", "cid", F.posexplode("xs").alias("pos", "val")
-        )
-        means = el.groupBy("sub", "cid", "pos").agg(
-            F.round(
-                F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
-                / F.count(F.lit(1)),
-                KMEANS_DP,
-            ).alias("m")
-        )
-        return (
-            means.groupBy("sub", "cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("sm")
-            )
-            .select(
-                "sub", "cid", F.expr("transform(sm, s -> s.m)").alias("c")
-            )
-        )
-
-    for _ in range(PQ_ITERS):
-        cents = update(assign(cents))
-    # materialize: the trained codebook (<= M*K rows) feeds encoding,
-    # the dense renumber AND the LUT — without the cut each consumer
-    # would re-run the whole training lineage.
-    cents = materialize(cents)
-    wsub = Window.partitionBy("sub").orderBy("cid")
-    dense = cents.select("sub", "cid").withColumn(
-        "dcid", F.row_number().over(wsub) - 1
-    )
-    codes = (
-        assign(cents)
-        .join(F.broadcast(dense), ["sub", "cid"])
-        .groupBy("vec_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("sub", "dcid"))
-            ).alias("sc")
-        )
-        .select(
-            "vec_id", F.expr("transform(sc, s -> s.dcid)").alias("codes")
-        )
+    cents, dense, codes = _pq_train(
+        sx,
+        "xs",
+        subs.filter(F.col("vec_id") < PQ_K).select(
+            "sub", F.col("vec_id").alias("cid"), F.col("xs").alias("c")
+        ),
     )
     qs = subs.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("query_id"), "sub", F.col("xs").alias("q")
@@ -1927,75 +1923,19 @@ def _ivfpq_candidates(
         "vec_id",
         F.posexplode(F.expr(sub_slices)).alias("sub", "rs"),
     )
-    # materialize: every Lloyd round's assign() and the final encoding
-    # assign() fold over the same residual-subspace frame.
+    # materialize: every Lloyd round's assignment and the final encoding
+    # fold over the same residual-subspace frame.
     sx = materialize(
         rsub.select(
             "vec_id", "sub", "rs", V.dot("rs", "rs").alias("xx")
         )
     )
-    cb = sx.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("cid"), F.col("rs").alias("c")
-    )
-
-    def assign(cb: DataFrame) -> DataFrame:
-        cc = cb.select("sub", "cid", "c", V.dot("c", "c").alias("cc"))
-        d2 = F.round(
-            F.col("xx") - 2 * V.dot("rs", "c") + F.col("cc"), KMEANS_DP
-        )
-        w = Window.partitionBy("vec_id", "sub").orderBy("d2", "cid")
-        return (
-            sx.join(F.broadcast(cc), "sub")
-            .select("vec_id", "sub", "rs", "xx", "cid", d2.alias("d2"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        el = assigned.select(
-            "sub", "cid", F.posexplode("rs").alias("pos", "val")
-        )
-        means = el.groupBy("sub", "cid", "pos").agg(
-            F.round(
-                F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
-                / F.count(F.lit(1)),
-                KMEANS_DP,
-            ).alias("m")
-        )
-        return (
-            means.groupBy("sub", "cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("sm")
-            )
-            .select(
-                "sub", "cid", F.expr("transform(sm, s -> s.m)").alias("c")
-            )
-        )
-
-    for _ in range(PQ_ITERS):
-        cb = update(assign(cb))
-    # materialize: the trained residual codebook feeds encoding, the
-    # dense renumber AND every probe LUT (see embedding_pq_adc_audit).
-    cb = materialize(cb)
-    wsub = Window.partitionBy("sub").orderBy("cid")
-    dense = cb.select("sub", "cid").withColumn(
-        "dcid", F.row_number().over(wsub) - 1
-    )
-    codes = (
-        assign(cb)
-        .join(F.broadcast(dense), ["sub", "cid"])
-        .groupBy("vec_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("sub", "dcid"))
-            ).alias("sc")
-        )
-        .select(
-            "vec_id", F.expr("transform(sc, s -> s.dcid)").alias("codes")
-        )
+    cb, dense, codes = _pq_train(
+        sx,
+        "rs",
+        sx.filter(F.col("vec_id") < PQ_K).select(
+            "sub", F.col("vec_id").alias("cid"), F.col("rs").alias("c")
+        ),
     )
     probe_cells = asn.filter(
         (F.col("vec_id") < N_PROBES) & (F.col("rn") <= nprobe)
@@ -2032,11 +1972,11 @@ def _ivfpq_candidates(
     slots = spark.range(PQ_M * PQ_K).select(
         F.col("id").cast("int").alias("slot")
     )
-    # NOT materialized (r15): the LUT frame is consumed exactly once,
+    # NOT materialized: the LUT frame is consumed exactly once,
     # as the hinted broadcast below — folding it into the consumer's
     # BroadcastExchange builds it inside that one job, where the old
     # eager localCheckpoint paid ~12 driver-blocking AQE/broadcast jobs
-    # per pipeline construction for the same work (guide §1.2/§5).
+    # per pipeline construction for the same work.
     lut_arr = (
         probe_cells.select("query_id", "cell", "probe_rank")
         .crossJoin(F.broadcast(slots))
@@ -2075,7 +2015,7 @@ def _ivfpq_candidates(
 
 def embedding_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ — the two ANN halves composed into the genuine FAISS
-    shape (the round-8 verdict's ask): a COARSE quantizer (deterministic
+    shape: a COARSE quantizer (deterministic
     FIXED-BUDGET centroid pick — {nc} cells regardless of corpus size,
     so assignment is O(N·K) and cells grow in size, the deployment
     model — with L2 assignment: residual geometry is Euclidean)
@@ -2542,8 +2482,8 @@ CLUSTERED_NPROBE_SWEEP = (1, 2, 4)
 
 
 def ann_nprobe_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The nprobe recall/cost TRADEOFF on a CLUSTERED fixture — the
-    round-10 verdict's watch item closed: `ann_recall_audit`'s sweep is
+    """The nprobe recall/cost TRADEOFF on a CLUSTERED fixture:
+    `ann_recall_audit`'s sweep is
     honestly FLAT on the near-isotropic synthetic embeddings (its
     docstring discloses why), so this query derives a clustered
     embedding table IN-PLAN — deterministically, from existing columns,
@@ -2828,38 +2768,15 @@ def ivf_incremental_ingest_audit(
     )
     is_batch = (F.col("vec_id") % INGEST_BATCH_MOD) >= 8
     # Base-trained quantizer: the first IVF_CENTS ids PRESENT IN BASE.
-    cent_a = e.filter(
-        (F.col("vec_id") < IVF_CENTS) & ~is_batch
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c"),
-        F.col("nrm").alias("nc"),
-    )
+    cent_a = _ivf_centroids(e, (F.col("vec_id") < IVF_CENTS) & ~is_batch)
     # 'Retrained' quantizer: the full corpus's first IVF_CENTS ids —
     # a superset (batch ids < IVF_CENTS become new centroid candidates).
-    cent_b = e.filter(F.col("vec_id") < IVF_CENTS).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c"),
-        F.col("nrm").alias("nc"),
-    )
-    cos_cent = F.when(
-        (F.col("nrm") > 0) & (F.col("nc") > 0),
-        V.dot("embedding", "c") / (F.col("nrm") * F.col("nc")),
-    )
-    w_asn = Window.partitionBy("vec_id").orderBy(
-        F.col("cent_cos").desc_nulls_last(), F.col("cid")
-    )
+    cent_b = _ivf_centroids(e, F.col("vec_id") < IVF_CENTS)
+    ranked = _ivf_ranker(e, 6)
 
     def assign(cent):
         return (
-            e.join(F.broadcast(cent))
-            .select(
-                "vec_id",
-                is_batch.alias("is_batch"),
-                "cid",
-                F.round(cos_cent, 6).alias("cent_cos"),
-            )
-            .withColumn("rn", F.row_number().over(w_asn))
+            ranked(cent, "vec_id", is_batch.alias("is_batch"))
             .filter(F.col("rn") == 1)
             .select("vec_id", "is_batch", "cid", "cent_cos")
         )
@@ -2982,7 +2899,7 @@ ORDER BY cell
 # -------------------------------------------- IVF batch re-cluster audit
 
 # The batch complement of streaming_ivf_ingest's `n_would_move` drift
-# monitor (round-13 verdict ask #4): when the drift number says
+# monitor: when the drift number says
 # "retrain", a production ANN service runs exactly this job — retrain
 # the coarse quantizer on seed+ingested corpus, then quantify what the
 # retrain bought (reassignment volume, cell balance, quantization
@@ -3046,19 +2963,24 @@ def ivf_recluster_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair_d2 = F.round(
         F.col("qxx") - 2 * V.dot("q", "x") + F.col("xx"), KMEANS_DP
     )
-    exact_topk = materialize(
-        vx.join(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", pair_d2.alias("d2"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("d2", "vec_id")
-            ),
+
+    def top_by_d2(cand: DataFrame) -> DataFrame:
+        # (query_id, vec_id) of each probe's RECLUSTER_TOP_K nearest
+        # candidates by rounded squared distance, vec_id tie-break.
+        return (
+            cand.filter(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", "vec_id", pair_d2.alias("d2"))
+            .withColumn(
+                "rn",
+                F.row_number().over(
+                    Window.partitionBy("query_id").orderBy("d2", "vec_id")
+                ),
+            )
+            .filter(F.col("rn") <= RECLUSTER_TOP_K)
+            .select("query_id", "vec_id")
         )
-        .filter(F.col("rn") <= RECLUSTER_TOP_K)
-        .select("query_id", "vec_id")
-    )
+
+    exact_topk = materialize(top_by_d2(vx.join(F.broadcast(probes))))
 
     def phase_stats(asn: DataFrame) -> DataFrame:
         cells = asn.groupBy("cid").agg(
@@ -3091,19 +3013,10 @@ def ivf_recluster_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") <= RECLUSTER_NPROBE)
             .select("query_id", "q", "qxx", "cid")
         )
-        topk = (
-            asn.select("cid", "vec_id", "x", "xx")
-            .join(F.broadcast(pcells), "cid")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id", pair_d2.alias("d2"))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy("d2", "vec_id")
-                ),
+        topk = top_by_d2(
+            asn.select("cid", "vec_id", "x", "xx").join(
+                F.broadcast(pcells), "cid"
             )
-            .filter(F.col("rn") <= RECLUSTER_TOP_K)
-            .select("query_id", "vec_id")
         )
         return (
             topk.join(
@@ -3293,7 +3206,7 @@ IVF_RECLUSTER_AUDIT_SQL = _recluster_sql()
 # vector-store operator reads before choosing the serving width.
 MRL_PREFIX_DIMS = [8, 16, 32, 64]  # 64 = full width, recall-1.0 self-check
 
-# MRL-structured fixture (round-12 verdict #3): the synthetic embeddings
+# MRL-structured fixture: the synthetic embeddings
 # are isotropic — every dimension carries equal energy — so prefix
 # retrieval on the RAW vectors sits at the chance floor and the audit
 # can't show the width/recall tradeoff it exists to measure.  A trained

@@ -216,6 +216,42 @@ def _minhash_band_candidates(
     return cand, sig.select("doc_id", "n")
 
 
+def _jaccard_verified(
+    pairs: DataFrame,
+    keys: tuple[str, str] = ("doc_a", "doc_b"),
+    sizes: tuple[DataFrame, DataFrame] | None = None,
+    lead: tuple = (),
+    size_prune: bool = False,
+) -> DataFrame:
+    """The exact-Jaccard verify of counted candidate pairs: `pairs`
+    carries the two doc keys and the shared-shingle count `inter`;
+    jaccard = inter / (na + nb - inter), rounded to 6 dp, kept at >=
+    JACCARD_TAU. `sizes` are the two sides' (doc_id, n) set-size
+    frames, joined (broadcast) onto the keys as na and nb; pass None
+    when `pairs` already carries them. `size_prune` first drops pairs
+    whose size ratio alone rules out tau. Returns (*lead, *keys,
+    jaccard)."""
+    if sizes is not None:
+        for key, n, sz in zip(keys, ("na", "nb"), sizes):
+            pairs = pairs.join(
+                F.broadcast(
+                    sz.select(F.col("doc_id").alias(key), F.col("n").alias(n))
+                ),
+                key,
+            )
+    if size_prune:
+        pairs = pairs.filter(
+            F.least("na", "nb").cast("double")
+            >= JACCARD_TAU * F.greatest("na", "nb")
+        )
+    jac = F.col("inter").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("inter")
+    ).cast("double")
+    return pairs.select(
+        *lead, *keys, F.round(jac, 6).alias("jaccard")
+    ).filter(F.col("jaccard") >= JACCARD_TAU)
+
+
 def _minhash_pairs_for(d: DataFrame, hs: DataFrame | None = None) -> DataFrame:
     """The LSH pair plan over any (doc_id, text) frame — the corpus for
     the standalone queries, the curation survivors for the composed
@@ -251,25 +287,7 @@ def _minhash_pairs_for(d: DataFrame, hs: DataFrame | None = None) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-            ),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_TAU)
-    )
+    return _jaccard_verified(inter, sizes=(sizes, sizes))
 
 
 def near_dup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,6 +347,23 @@ ORDER BY doc_a, doc_b
 """
 
 
+def _simhash_pack(votes: DataFrame) -> DataFrame:
+    """(doc_id, simhash) from per-doc bit votes v0, v1, ...: bit i is
+    set where vote vi is positive, packed as a sum of long powers of
+    two. The votes themselves (unweighted or count-weighted) are the
+    caller's."""
+    bit_terms = [
+        F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        for i in range(TX.SIMHASH_BITS)
+    ]
+    total = bit_terms[0]
+    for t in bit_terms[1:]:
+        total = total + t
+    return votes.select("doc_id", total.alias("simhash"))
+
+
 def near_dup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs: 60-bit signatures, 4x15-bit chunk
     banding, hamming distance <= 3 (the pigeonhole-complete radius).
@@ -358,16 +393,7 @@ def near_dup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(TX.SIMHASH_BITS)
         ]
     )
-    bit_terms = [
-        F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for i in range(TX.SIMHASH_BITS)
-    ]
-    total = bit_terms[0]
-    for t in bit_terms[1:]:
-        total = total + t
-    sim = votes.select("doc_id", total.alias("simhash"))
+    sim = _simhash_pack(votes)
     chunks = sim.select(
         "doc_id",
         "simhash",
@@ -454,32 +480,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Size prune (J <= min-size/max-size) on the counted pairs — same
     # surviving set as the oracle's join-condition prune.
-    sized = (
-        inter.join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-            ),
-            "doc_b",
-        )
-        .filter(
-            F.least("na", "nb").cast("double")
-            >= JACCARD_TAU * F.greatest("na", "nb")
-        )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        sized.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_TAU)
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_verified(
+        inter, sizes=(sizes, sizes), size_prune=True
+    ).orderBy("doc_a", "doc_b")
 
 
 NGRAM_JACCARD_PAIRS_SQL = f"""
@@ -1161,20 +1164,13 @@ ORDER BY m.doc_id
 # ratio < 1/2.
 
 
-def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repetition-based quality gates per (lang, source): the
-    duplicate-text heuristics every corpus-curation pipeline runs
-    (most-common token share, most-common bigram share, type/token
-    ratio), with flag thresholds evaluated as cross-multiplied integers —
-    no float compares in the decision path.
-
-    Shape: explode tokens -> two stacked hash-aggregates (doc×token then
-    doc) + the bigram twin over shingle_rows -> per-doc flags -> tiny
-    rollup. All shuffles key on doc_id or (doc_id, gram): uniform keys,
-    map-side partials, no skew risk at 100 TB.
-    """
-    d = _docs(spark, sf_dir)
-    tok = d.select("doc_id", F.explode(TX.tokenize("text")).alias("t"))
+def _repetition_counts(
+    d: DataFrame, tok: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The repetition gates' inputs: per-doc token counts (doc_id,
+    n_tokens, n_distinct, top_token_n) over the (doc_id, t) token rows
+    `tok`, and per-doc bigram counts (doc_id, n_bigrams, top_bigram_n)
+    over the docs `d` (docs without a bigram have no row)."""
     tok_doc = (
         tok.groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1192,11 +1188,34 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("n").alias("n_bigrams"), F.max("n").alias("top_bigram_n"))
     )
-    flagged = (
+    return tok_doc, bg_doc
+
+
+def _repetition_flagged() -> Column:
+    """True where a doc fails a repetition gate (columns of
+    `_repetition_counts`, bigram counts 0 for a doc without one)."""
+    return (
         (F.col("top_token_n") * 5 > F.col("n_tokens"))
         | (F.col("top_bigram_n") * 50 > F.col("n_bigrams") * 9)
         | (F.col("n_distinct") * 2 < F.col("n_tokens"))
     )
+
+
+def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Repetition-based quality gates per (lang, source): the
+    duplicate-text heuristics every corpus-curation pipeline runs
+    (most-common token share, most-common bigram share, type/token
+    ratio), with flag thresholds evaluated as cross-multiplied integers —
+    no float compares in the decision path.
+
+    Shape: explode tokens -> two stacked hash-aggregates (doc×token then
+    doc) + the bigram twin over shingle_rows -> per-doc flags -> tiny
+    rollup. All shuffles key on doc_id or (doc_id, gram): uniform keys,
+    map-side partials, no skew risk at 100 TB.
+    """
+    d = _docs(spark, sf_dir)
+    tok = d.select("doc_id", F.explode(TX.tokenize("text")).alias("t"))
+    tok_doc, bg_doc = _repetition_counts(d, tok)
     per = (
         d.select("doc_id", "lang", "source")
         .join(tok_doc, "doc_id")
@@ -1210,7 +1229,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.coalesce("top_bigram_n", F.lit(0)).alias("top_bigram_n"),
         )
-        .withColumn("flagged", flagged.cast("long"))
+        .withColumn("flagged", _repetition_flagged().cast("long"))
     )
     return (
         per.groupBy("lang", "source")
@@ -1600,6 +1619,20 @@ ORDER BY r.lang
 XENT_FLAG_THRESHOLD = -6  # flag docs whose mean token logprob < -6 nats
 
 
+def _token_lnp(tok: DataFrame) -> DataFrame:
+    """(t, lnp): each token's unigram log-probability over the token
+    rows `tok`, rounded to 6 dp and cast to DECIMAL(18,6) so per-doc
+    sums are exact decimal additions."""
+    freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
+    total = freq.agg(F.sum("cnt").alias("n_total"))
+    return freq.crossJoin(F.broadcast(total)).select(
+        "t",
+        F.round(F.log(F.col("cnt") / F.col("n_total")), 6)
+        .cast("decimal(18,6)")
+        .alias("lnp"),
+    )
+
+
 def unigram_xent_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality proxy: score each doc by its unigram
     cross-entropy against the corpus's own token distribution (mean
@@ -1619,16 +1652,8 @@ def unigram_xent_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", "lang", "source", F.explode(TX.tokenize("text")).alias("t")
     )
-    freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
-    total = freq.agg(F.sum("cnt").alias("n_total"))
-    lnp = freq.crossJoin(F.broadcast(total)).select(
-        "t",
-        F.round(F.log(F.col("cnt") / F.col("n_total")), 6)
-        .cast("decimal(18,6)")
-        .alias("lnp"),
-    )
     per_doc = (
-        tok.join(lnp, "t")
+        tok.join(_token_lnp(tok), "t")
         .groupBy("doc_id", "lang", "source")
         .agg(
             F.sum("lnp").alias("sum_lnp"),
@@ -1938,6 +1963,22 @@ def _quality_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cutoff_rollup(kept: DataFrame) -> DataFrame:
+    """Per-lang summary of a percentile keep set (lang, n_tok, score,
+    n_lang): docs in the language, docs kept, the lowest kept score and
+    the kept tokens."""
+    return (
+        kept.groupBy("lang")
+        .agg(
+            F.max("n_lang").alias("n_docs"),
+            F.count(F.lit(1)).alias("n_kept"),
+            F.min("score").alias("cutoff_score"),
+            F.sum("n_tok").alias("kept_tokens"),
+        )
+        .orderBy("lang")
+    )
+
+
 def quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percentile-based curation: keep each language's top quartile by
     lexical-diversity score (unique-token ratio, doc_id tie-break so the
@@ -1962,16 +2003,7 @@ def quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = ranked.filter(
         F.col("rn") <= F.expr(f"(n_lang + {QUALITY_KEEP_QUARTER - 1}) div {QUALITY_KEEP_QUARTER}")
     )
-    return (
-        kept.groupBy("lang")
-        .agg(
-            F.max("n_lang").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_kept"),
-            F.min("score").alias("cutoff_score"),
-            F.sum("n_tok").alias("kept_tokens"),
-        )
-        .orderBy("lang")
-    )
+    return _cutoff_rollup(kept)
 
 
 QUALITY_PERCENTILE_FILTER_SQL = f"""
@@ -2070,17 +2102,7 @@ def quality_percentile_filter_threshold(
         .filter(F.col("rn") <= F.col("r_slots"))
         .select("lang", "n_tok", "score", "n_lang")
     )
-    return (
-        upper.unionByName(boundary)
-        .groupBy("lang")
-        .agg(
-            F.max("n_lang").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_kept"),
-            F.min("score").alias("cutoff_score"),
-            F.sum("n_tok").alias("kept_tokens"),
-        )
-        .orderBy("lang")
-    )
+    return _cutoff_rollup(upper.unionByName(boundary))
 
 
 # Intentionally the exact-spec per-lang-rank SQL: a green differential
@@ -3208,28 +3230,9 @@ def near_dup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_new", "doc_indexed")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            F.broadcast(
-                sig_new.select(F.col("doc_id").alias("doc_new"), F.col("n").alias("na"))
-            ),
-            "doc_new",
-        )
-        .join(
-            F.broadcast(
-                sig_idx.select(
-                    F.col("doc_id").alias("doc_indexed"), F.col("n").alias("nb")
-                )
-            ),
-            "doc_indexed",
-        )
-        .select("doc_new", "doc_indexed", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_TAU)
-        .orderBy("doc_new", "doc_indexed")
-    )
+    return _jaccard_verified(
+        inter, ("doc_new", "doc_indexed"), (sig_new, sig_idx)
+    ).orderBy("doc_new", "doc_indexed")
 
 
 NEAR_DUP_INCREMENTAL_LSH_SQL = f"""
@@ -3718,6 +3721,30 @@ KEYWORD_SEARCH_CONJUNCTIVE_SQL = _kw_sql().format(toks=_TOKS_SQL)
 PHRASE_SEARCH_POSITIONAL_SQL = _phrase_sql().format(toks=_TOKS_SQL)
 
 
+def _term_stats(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The lexical ranking inputs over SEARCH_QUERIES: (the (query_id,
+    term) list, per-doc token length dl, per-(doc, term) frequency tf of
+    the query terms only, per-term document frequency df)."""
+    terms = _values_df(
+        spark,
+        [(qid, t) for qid, ts in SEARCH_QUERIES.items() for t in ts],
+        "query_id, term",
+    )
+    toks = _docs(spark, sf_dir).select(
+        "doc_id", F.explode(TX.tokenize("text")).alias("term")
+    ).filter(F.col("term") != "")
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    tf = (
+        toks.join(F.broadcast(terms.select("term").distinct()), "term")
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return terms, dl, tf, df_
+
+
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (k1={k1}, b={b}): score every document
     holding at least one query term and return the top-{k} per query
@@ -3735,16 +3762,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: tf postings only for query terms (filter inside the
     explode projection); df and avgdl are map-side-combinable
     aggregates; the final top-k is a bounded per-query window."""
-    d = _docs(spark, sf_dir)
-    terms = _values_df(
-        spark,
-        [(qid, t) for qid, ts in SEARCH_QUERIES.items() for t in ts],
-        "query_id, term",
-    )
-    toks = d.select(
-        "doc_id", F.explode(TX.tokenize("text")).alias("term")
-    ).filter(F.col("term") != "")
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    terms, dl, tf, df_ = _term_stats(spark, sf_dir)
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(
@@ -3754,14 +3772,6 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("avgdl"),
-    )
-    tf = (
-        toks.join(F.broadcast(terms.select("term").distinct()), "term")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df")
     )
     k1, b = F.lit(BM25_K1), F.lit(BM25_B)
     idf = F.round(
@@ -4091,21 +4101,12 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("it")
 
 
-def _bpe_train(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
-    """The shared BPE training loop: returns (the vocabulary frame with
-    its fully-rewritten symbol sequences after BPE_ITERS greedy merges,
-    the merge table). bpe_merge_training adjudicates the merges;
-    bpe_encode_corpus adjudicates the encoded vocabulary's token
-    statistics — one loop, two audited surfaces. Pass `docs` to train
-    on a sub-corpus (bpe_sampled_training's sampled leg); the default
-    is the full documents table, plan-identical to pre-round-11."""
-    from myserver_datawarehouse_spark.session import materialize
-
-    d = _docs(spark, sf_dir) if docs is None else docs
-    words = (
-        d.select(F.explode(TX.tokenize("text")).alias("w"))
+def _bpe_char_words(frame: DataFrame) -> DataFrame:
+    """(w, cnt, char-split s) vocabulary frame for any (doc_id, text)
+    frame: the base both BPE training and the frozen-table encode path
+    rewrite."""
+    return (
+        frame.select(F.explode(TX.tokenize("text")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -4118,10 +4119,49 @@ def _bpe_train(
             ).alias("s"),
         )
     )
+
+
+def _bpe_apply_merges(words: DataFrame, merges) -> DataFrame:
+    """The greedy BPE rewrite: each (it, a, b, freq) merge of `merges`,
+    in order, folds every adjacent (a, b) symbol pair of each word's
+    sequence `s` into the merged symbol a+b, left to right. Training
+    applies one merge per round; the encode path replays a frozen
+    merge table."""
+    for _, a, b, _f in merges:
+        ae = a.replace("'", "''")
+        be = b.replace("'", "''")
+        me = (a + b).replace("'", "''")
+        words = words.select(
+            "w",
+            "cnt",
+            F.expr(
+                f"aggregate(slice(s, 2, size(s)-1), "
+                f"array(element_at(s, 1)), "
+                f"(acc, x) -> CASE WHEN element_at(acc, -1) = '{ae}' "
+                f"AND x = '{be}' "
+                f"THEN concat(slice(acc, 1, size(acc)-1), "
+                f"array('{me}')) "
+                f"ELSE concat(acc, array(x)) END)"
+            ).alias("s"),
+        )
+    return words
+
+
+def _bpe_train(
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
+    """The shared BPE training loop: returns (the vocabulary frame with
+    its fully-rewritten symbol sequences after BPE_ITERS greedy merges,
+    the merge table). bpe_merge_training adjudicates the merges;
+    bpe_encode_corpus adjudicates the encoded vocabulary's token
+    statistics — one loop, two audited surfaces. Pass `docs` to train
+    on a sub-corpus (bpe_sampled_training's sampled leg); the default
+    is the full documents table."""
+    d = _docs(spark, sf_dir) if docs is None else docs
     # materialize: every round re-reads the rewritten vocabulary (pair
     # count + argmax + rewrite); without the cut each round would
     # re-run the whole corpus tokenize + every prior rewrite.
-    words = materialize(words)
+    words = materialize(_bpe_char_words(d))
     merges: list[tuple[int, str, str, int]] = []
     for it in range(1, BPE_ITERS + 1):
         best = (
@@ -4143,24 +4183,7 @@ def _bpe_train(
         )
         a, b, f = best["a"], best["b"], int(best["f"])
         merges.append((it, a, b, f))
-        ae = a.replace("'", "''")
-        be = b.replace("'", "''")
-        me = (a + b).replace("'", "''")
-        words = materialize(
-            words.select(
-                "w",
-                "cnt",
-                F.expr(
-                    f"aggregate(slice(s, 2, size(s)-1), "
-                    f"array(element_at(s, 1)), "
-                    f"(acc, x) -> CASE WHEN element_at(acc, -1) = '{ae}' "
-                    f"AND x = '{be}' "
-                    f"THEN concat(slice(acc, 1, size(acc)-1), "
-                    f"array('{me}')) "
-                    f"ELSE concat(acc, array(x)) END)"
-                ).alias("s"),
-            )
-        )
+        words = materialize(_bpe_apply_merges(words, merges[-1:]))
     return words, merges
 
 
@@ -4173,8 +4196,8 @@ def _bpe_cte_parts(p: str = "", toks_sql: str | None = None) -> list[str]:
     """The BPE training CTE chain with every CTE name prefixed by `p`
     (so two independently-trained chains — full corpus and sampled —
     can coexist in one statement) reading its tokens from `toks_sql`
-    (default: the full documents table). p="" reproduces the
-    pre-round-11 chain byte-for-byte."""
+    (default: the full documents table). p="" gives the unprefixed
+    chain of bpe_merge_training's oracle."""
     toks = _TOKS_SQL if toks_sql is None else toks_sql
     parts = [
         f"""{p}tk0 AS ({toks}),
@@ -4628,23 +4651,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = bm25_search(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("r_bm")
     )
-    d = _docs(spark, sf_dir)
-    terms = _values_df(
-        spark,
-        [(qid, t) for qid, ts in SEARCH_QUERIES.items() for t in ts],
-        "query_id, term",
-    )
-    toks = d.select(
-        "doc_id", F.explode(TX.tokenize("text")).alias("term")
-    ).filter(F.col("term") != "")
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    terms, dl, tf, df_ = _term_stats(spark, sf_dir)
     n_docs = dl.agg(F.count(F.lit(1)).alias("n_docs"))
-    tf = (
-        toks.join(F.broadcast(terms.select("term").distinct()), "term")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(F.broadcast(terms), "term")
         .join(F.broadcast(df_), "term")
@@ -4889,12 +4897,7 @@ def _prefix_filter_pairs(d: DataFrame, hs: DataFrame | None = None) -> DataFrame
             "inter", F.size(F.array_intersect("hs_a", "hs_b"))
         )
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return verified.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= JACCARD_TAU)
+    return _jaccard_verified(verified)
 
 
 NEAR_DUP_PREFIX_FILTER_SQL = f"""
@@ -5167,8 +5170,8 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss) drops pairs from a decile and flips the hash.
 
     The raw fixture's near-dups are all small edits (J >= 0.8), which
-    left the curve's BEND unexercised through round 11 (the disclosed
-    gap). The audit corpus therefore adds deterministic truncation
+    would leave the curve's BEND unexercised. The audit corpus therefore
+    adds deterministic truncation
     variants (_lsh_audit_docs) placing pair mass across the 0.5-0.8
     deciles: measured recall there must track 1-(1-J^2)^8 (~0.90 at
     J=0.5 rising to ~1 by J=0.8) within binomial noise — the
@@ -5194,8 +5197,8 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # jaccard, so exact ∩ verified(cand) == exact ∩ cand — see
     # _minhash_band_candidates). Skipping the redundant per-candidate
     # verify removes two hash-equi-joins over hs plus a pair-sized
-    # aggregation from the plan (r14; the band_tuning sweep has used
-    # this shape per config since round 13).
+    # aggregation from the plan (the band_tuning sweep uses this shape
+    # per config too).
     lsh, _ = _minhash_band_candidates(hs)
     hit = exact.join(lsh, ["doc_a", "doc_b"], "left_semi")
     band = F.floor(F.col("jaccard") * J_BAND_W).cast("int").alias("j_band")
@@ -5450,8 +5453,7 @@ def _minhash_se_theory_rows() -> list[tuple[int, float]]:
     decile midpoint) — computed ONCE in Python, fed to BOTH engines as
     literals (the band-tuning rule).  Covers j_band 0..J_BAND_W
     INCLUSIVE: exact-duplicate pairs land in FLOOR(1.0*W) = W, where
-    the estimator is deterministic (se exactly 0) — the round-12
-    advice lesson applied at authoring time, not after."""
+    the estimator is deterministic (se exactly 0)."""
     out = []
     for jb in range(J_BAND_W + 1):
         j = min((jb + 0.5) / J_BAND_W, 1.0)
@@ -5687,16 +5689,7 @@ def simhash_estimator_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(TX.SIMHASH_BITS)
         ]
     )
-    bit_terms = [
-        F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        for i in range(TX.SIMHASH_BITS)
-    ]
-    total = bit_terms[0]
-    for t in bit_terms[1:]:
-        total = total + t
-    sig = votes.select("doc_id", total.alias("simhash"))
+    sig = _simhash_pack(votes)
     pairs = (
         dot.join(
             nrm.select(
@@ -5932,8 +5925,7 @@ def _dsir_docw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LEFT join from the full docs table: a doc whose text normalizes
     # to zero n-grams has no dbc rows but is still a corpus member —
     # it carries logw exactly 0 and counts in n_docs and the selection
-    # denominator (round-13 review finding; latent, no such doc in the
-    # shipped fixtures).
+    # denominator (no such doc in the shipped fixtures).
     docw = (
         d.select("doc_id", "source")
         .join(
@@ -6634,12 +6626,15 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginal pass rates; NULL when a degenerate marginal makes the
     correction undefined).
 
-    The per-doc rules are expression-identical to their source
-    queries' (gopher_quality_flags' three-way pass, unigram_xent
-    _quality's decimal low-prob flag, text_repetition_stats' integer
-    cross-multiplied repetition flag) — tests/test_round13.py pins the
-    implied per-filter pass counts to the source queries' own rollups
-    so the copies cannot drift.
+    The per-doc rules are their source queries': the token log-prob
+    table (`_token_lnp`) behind unigram_xent_quality's decimal low-prob
+    flag, and the counts and integer cross-multiplied flag
+    (`_repetition_counts`, `_repetition_flagged`) of
+    text_repetition_stats. The Gopher three-way pass is written here as
+    one per-doc expression over the token array, where
+    gopher_quality_flags builds it from its own columns; the implied
+    per-filter pass counts are tested against the source queries'
+    rollups.
 
     Plan shape (100 TB): the token explode + two hash-aggregates +
     vocabulary-bounded lnp join are shared passes into ONE per-doc
@@ -6666,16 +6661,8 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("f_gopher"),
     )
     tok = d.select("doc_id", F.explode(tks).alias("t"))
-    freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
-    total = freq.agg(F.sum("cnt").alias("n_total"))
-    lnp = freq.crossJoin(F.broadcast(total)).select(
-        "t",
-        F.round(F.log(F.col("cnt") / F.col("n_total")), 6)
-        .cast("decimal(18,6)")
-        .alias("lnp"),
-    )
     xent = (
-        tok.join(lnp, "t")
+        tok.join(_token_lnp(tok), "t")
         .groupBy("doc_id")
         .agg(
             F.sum("lnp").alias("sum_lnp"),
@@ -6693,23 +6680,7 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("f_xent"),
         )
     )
-    tok_doc = (
-        tok.groupBy("doc_id", "t")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").alias("n_tokens"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.max("n").alias("top_token_n"),
-        )
-    )
-    bg_doc = (
-        TX.shingle_rows(d, 2)
-        .groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("doc_id")
-        .agg(F.sum("n").alias("n_bigrams"), F.max("n").alias("top_bigram_n"))
-    )
+    tok_doc, bg_doc = _repetition_counts(d, tok)
     rep = (
         tok_doc.join(bg_doc, "doc_id", "left")
         .select(
@@ -6722,18 +6693,7 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "doc_id",
-            (
-                ~(
-                    (F.col("top_token_n") * 5 > F.col("n_tokens"))
-                    | (
-                        F.col("top_bigram_n") * 50
-                        > F.col("n_bigrams") * 9
-                    )
-                    | (F.col("n_distinct") * 2 < F.col("n_tokens"))
-                )
-            )
-            .cast("long")
-            .alias("f_rep"),
+            (~_repetition_flagged()).cast("long").alias("f_rep"),
         )
     )
     flags = gopher.join(xent, "doc_id").join(rep, "doc_id")
@@ -6903,51 +6863,6 @@ ORDER BY filter_a, filter_b
 # compresses its own training text is overfit).
 BPE_HOLDOUT_MOD = 10  # train = doc_id % 10 < 8 (~80%), holdout = rest
 BPE_HOLDOUT_CUT = 8
-
-
-def _bpe_char_words(frame: DataFrame) -> DataFrame:
-    """(w, cnt, char-split s) vocabulary frame for any (doc_id, text)
-    frame — the encode path's base, expression-identical to
-    _bpe_train's (the sync test pins the two)."""
-    return (
-        frame.select(F.explode(TX.tokenize("text")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "w",
-            "cnt",
-            F.expr(
-                "transform(sequence(1, length(w)), "
-                "i -> substring(w, i, 1))"
-            ).alias("s"),
-        )
-    )
-
-
-def _bpe_apply_merges(words: DataFrame, merges) -> DataFrame:
-    """The frozen-merge-table ENCODE path: replay a trained merge list
-    through the same greedy rewrite _bpe_train runs per round —
-    expression-identical (tests/test_round12b.py asserts the replayed
-    segmentations equal the trainer's, word for word)."""
-    for _, a, b, _f in merges:
-        ae = a.replace("'", "''")
-        be = b.replace("'", "''")
-        me = (a + b).replace("'", "''")
-        words = words.select(
-            "w",
-            "cnt",
-            F.expr(
-                f"aggregate(slice(s, 2, size(s)-1), "
-                f"array(element_at(s, 1)), "
-                f"(acc, x) -> CASE WHEN element_at(acc, -1) = '{ae}' "
-                f"AND x = '{be}' "
-                f"THEN concat(slice(acc, 1, size(acc)-1), "
-                f"array('{me}')) "
-                f"ELSE concat(acc, array(x)) END)"
-            ).alias("s"),
-        )
-    return words
 
 
 def bpe_holdout_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7291,7 +7206,7 @@ def _lsh_theory_rows() -> list[tuple[str, int, float]]:
     it a corpus containing jaccard == 1.0 pairs would silently drop
     its exact-dup decile from the tuning table — while the recall
     audit (a LEFT join with no theory side) keeps that band, breaking
-    the two queries' band-set equality (round-12 advice)."""
+    the two queries' band-set equality."""
     out = []
     for bands_n, rows_n in LSH_TUNE_CONFIGS:
         for jb in range(J_BAND_W + 1):

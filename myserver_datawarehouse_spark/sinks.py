@@ -192,20 +192,6 @@ class TelegramSink:
         )
 
 
-def foreach_batch_publisher(
-    sink: Callable[[DataFrame], Any],
-) -> Callable[[DataFrame, int], None]:
-    """Adapter for the streaming variant (SURVEY.md §2.12): wrap any sink
-    over a static DataFrame as a Structured Streaming `foreachBatch`
-    callback — each micro-batch is published through the same bounded
-    driver-side edge."""
-
-    def publish(batch_df: DataFrame, _batch_id: int) -> None:
-        sink(batch_df)
-
-    return publish
-
-
 __all__: Sequence[str] = [
     "serialize_for_export",
     "sheet_grid",
@@ -214,5 +200,4 @@ __all__: Sequence[str] = [
     "with_retry",
     "SheetsSink",
     "TelegramSink",
-    "foreach_batch_publisher",
 ]

@@ -532,9 +532,7 @@ def read_pruned_files(
     if not keep:
         return _MG._read_snapshot(spark, table_dir).filter(F.lit(False))
     if os.path.isfile(os.path.join(table_dir, "_SPECS.json")):
-        from myserver_datawarehouse_spark.operators import evolution as _EV
-
-        schema = _EV._snapshot_schema(table_dir)
+        schema = _MG._sidecar_schema(table_dir, required=True)
         by_layout: dict[str, list[str]] = {}
         for p in keep:
             rel = os.path.relpath(p, table_dir)

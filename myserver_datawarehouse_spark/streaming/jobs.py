@@ -1441,7 +1441,7 @@ def _near_dup_verified_pairs(
     factored out so the streaming curation ledger's text arm runs the
     IDENTICAL candidate + verify path. `dirs` are the (bands, hashes,
     sizes) index roots."""
-    from myserver_datawarehouse_spark.plans.llm_text import JACCARD_TAU
+    from myserver_datawarehouse_spark.plans.llm_text import _jaccard_verified
 
     bands_dir, hashes_dir, sizes_dir = dirs
     cand = _precedence_candidates(bd, _read_tree(sp, bands_dir), ["bk"])
@@ -1458,33 +1458,26 @@ def _near_dup_verified_pairs(
         .groupBy("doc_new", "doc_partner")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(
-            F.broadcast(
-                sz.select(
-                    F.col("doc_id").alias("doc_new"),
-                    F.col("n").alias("na"),
-                )
-            ),
-            "doc_new",
-        )
-        .join(
-            idx_n.select(
-                F.col("doc_id").alias("doc_partner"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_partner",
-        )
-        .select(
-            F.lit(bno).cast("int").alias("batch_no"),
-            "doc_new",
-            "doc_partner",
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_TAU)
+    # The batch's sizes are broadcast; the standing index's are not.
+    sized = inter.join(
+        F.broadcast(
+            sz.select(
+                F.col("doc_id").alias("doc_new"),
+                F.col("n").alias("na"),
+            )
+        ),
+        "doc_new",
+    ).join(
+        idx_n.select(
+            F.col("doc_id").alias("doc_partner"),
+            F.col("n").alias("nb"),
+        ),
+        "doc_partner",
+    )
+    return _jaccard_verified(
+        sized,
+        ("doc_new", "doc_partner"),
+        lead=(F.lit(bno).cast("int").alias("batch_no"),),
     )
 
 

@@ -7,7 +7,7 @@ import string
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark.operators.fuzzy import (
-    delete1_variants,
+    deletek_variants,
     fuzzy_pairs,
 )
 
@@ -41,7 +41,7 @@ def _brute_pairs(spark, rows, max_edit):
 def test_delete1_variants_shape(spark):
     rows = spark.createDataFrame(
         [("abc",), ("aab",), ("",)], "s string"
-    ).select(delete1_variants("s").alias("v")).collect()
+    ).select(deletek_variants("s", 1).alias("v")).collect()
     assert sorted(rows[0].v) == sorted(["abc", "bc", "ac", "ab"])
     # equal-char run collapses: deleting either 'a' of "aab" is "ab"
     assert sorted(rows[1].v) == sorted(["aab", "ab", "aa"])

@@ -74,28 +74,6 @@ def test_sample_frames_single_frame(spark):
     assert [(r.doc_id, r.frame_idx) for r in rows] == [(1, 0)]
 
 
-def test_resize_image_stub_gates_on_pil():
-    from myserver_datawarehouse_spark.operators import multimodal as MM
-
-    # The resize seam is real plumbing behind an import gate: without PIL
-    # it must fail loudly (not silently pass bytes through); with PIL it
-    # must produce the requested dimensions.
-    if MM._HAVE_PIL:
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("RGB", (8, 8)).save(buf, format="PNG")
-        out = MM.resize_image(buf.getvalue(), 4, 4)
-        assert out.size == (4, 4)
-    else:
-        import pytest
-
-        with pytest.raises(NotImplementedError):
-            MM.resize_image(b"xx", 4, 4)
-
-
 def test_media_fingerprints_matches_per_modality_kernels(spark):
     """The fused one-pass kernel (r15) must emit hash-for-hash the same
     fingerprint multisets as the three per-modality kernels it replaces

@@ -438,7 +438,7 @@ def test_order_by_newer_legacy_row_beats_stale_batch(spark, tmp_path):
     # The surviving legacy-version row now lives in the ACTIVE layout
     # and its legacy copy is suppressed (no double-count).
     vdir = os.path.join(root, M._published_version(root))
-    l1 = EV._read_layout(spark, vdir, 1, EV._snapshot_schema(vdir))
+    l1 = EV._read_layout(spark, vdir, 1, M._sidecar_schema(vdir, required=True))
     assert {r.id for r in l1.collect()} == {1}
     assert EV.read_evolved(spark, root).filter(F.col("id") == 1).count() == 1
 

@@ -236,12 +236,10 @@ def test_bpe_holdout_metrics_shape_and_bounds(spark):
 
 
 def test_bpe_holdout_train_leg_matches_full_train_pipeline(spark):
-    """SYNC PIN for the deliberate rewrite-expression duplication:
-    bpe_holdout_coverage's frozen-merge apply path must produce the
-    EXACT per-word segmentations _bpe_train's training path does on
-    the same split — if either copy of the greedy-rewrite expression
-    drifts, some word's final token list differs and this fails
-    naming the word."""
+    """bpe_holdout_coverage's frozen-merge replay (every merge in one
+    lineage, no materialize between them) must produce the EXACT
+    per-word segmentations _bpe_train's round-by-round training does
+    on the same split; a difference names the word."""
     from pyspark.sql import functions as F
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
@@ -252,9 +250,8 @@ def test_bpe_holdout_train_leg_matches_full_train_pipeline(spark):
     words, merges = LT._bpe_train(spark, SF, docs=train)
     trained = {r.w: list(r.s) for r in words.collect()}
 
-    # replay the frozen merge table through the holdout module's OWN
-    # apply path over the same split — this is the copy the query
-    # actually runs, so drift in either expression fails here
+    # replay the frozen merge table through the apply path the holdout
+    # query runs, over the same split
     applied = {
         r.w: list(r.s)
         for r in LT._bpe_apply_merges(

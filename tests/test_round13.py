@@ -405,9 +405,9 @@ def test_epoch_plan_budget_and_cap_invariants(spark):
 
 def test_filter_agreement_marginals_match_source_queries(spark):
     """The agreement table's implied per-filter pass counts must equal
-    the source queries' own rollups — pins the inlined per-doc rules
-    to gopher_quality_flags / unigram_xent_quality /
-    text_repetition_stats so the copies cannot drift."""
+    the source queries' own rollups (gopher_quality_flags /
+    unigram_xent_quality / text_repetition_stats): the per-doc flags
+    it joins decide pass/fail as those queries do."""
     rows = LT.quality_filter_agreement(spark, SF).collect()
     assert len(rows) == 3
     n = rows[0].n_docs

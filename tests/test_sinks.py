@@ -109,10 +109,3 @@ def test_telegram_sink_chunks_retries_caps_caption():
     assert n == 2 and len(sent) == 2
     sink.send_photo(b"png", "c" * 2000)
     assert len(photos[0][1]) == S.TELEGRAM_CAPTION_LIMIT
-
-
-def test_foreach_batch_publisher(frame):
-    seen = []
-    cb = S.foreach_batch_publisher(lambda df: seen.append(df.count()))
-    cb(frame, 0)
-    assert seen == [2]

@@ -31,24 +31,6 @@ def test_salted_distinct_count_matches_direct(spark):
     assert direct["hot"] == 37
 
 
-def test_salted_join_matches_plain_join(spark):
-    df = _skewed_df(spark)
-    dim = spark.createDataFrame(
-        [("hot", 1), ("cold0", 2), ("cold1", 3)], "k string, tag long"
-    )
-    plain = sorted(
-        tuple(r) for r in df.join(dim, "k").select("k", "uid", "tag").collect()
-    )
-    salted = sorted(
-        tuple(r)
-        for r in skew.salted_join(df, dim, ["k"], n_salts=4, entropy=["uid"])
-        .select("k", "uid", "tag")
-        .collect()
-    )
-    assert salted == plain
-    assert len(plain) == 900 + (100 // 7 + 1) * 2  # hot + cold0 + cold1 rows
-
-
 def test_salt_is_deterministic(spark):
     df = _skewed_df(spark)
     a = skew.add_salt(df, 8, ["uid"]).select("k", "uid", "_salt").collect()

@@ -198,14 +198,25 @@ def test_recurring_shapes_have_one_owner():
     """The candidate-pair self-join, the pooled-action thread pool, the
     MinHash signature aggregate, the partner-precedence probe, the
     streaming file source, the foreachBatch drain, the memory-sink drain,
-    the mtime-ordered replay staging and the touched-partition
-    observation of a partitioned merge are each written once, in their
-    owner; every other module calls the owner
-    (`operators/text.doc_pairs`, `session.parallel_actions`,
+    the mtime-ordered replay staging, the touched-partition
+    observation of a partitioned merge, the exact-Jaccard verify, the
+    BPE vocabulary and greedy rewrite, the Lloyd update and PQ encoding,
+    the SimHash bit pack, the unigram log-prob table, the repetition
+    flag, the BM25 query-term postings, the per-lang cutoff rollup, the
+    exact top-k by squared distance and the schema sidecar's file name
+    are each written once, in their owner; every other module calls the
+    owner (`operators/text.doc_pairs`, `session.parallel_actions`,
     `plans/llm_text._minhash_signature`,
     `streaming/jobs._precedence_candidates`, `streaming/jobs._file_stream`,
     `streaming/jobs._drain_files`, `streaming/jobs.run_available_now`,
-    `streaming/jobs._stamp_mtimes`, `operators/merge._stage_touched`)."""
+    `streaming/jobs._stamp_mtimes`, `operators/merge._stage_touched`,
+    `plans/llm_text._jaccard_verified`, `plans/llm_text._bpe_char_words`,
+    `plans/llm_text._bpe_apply_merges`, `plans/embeddings._kmeans_update`,
+    `plans/embeddings._pq_train`, `plans/llm_text._simhash_pack`,
+    `plans/llm_text._token_lnp`, `plans/llm_text._repetition_flagged`,
+    `plans/llm_text._term_stats`, `plans/llm_text._cutoff_rollup`,
+    `ivf_recluster_audit`'s `top_by_d2`,
+    `operators/merge._SCHEMA_SIDECAR`)."""
     import re
 
     pkg = Path(__file__).resolve().parents[1] / "myserver_datawarehouse_spark"
@@ -244,6 +255,54 @@ def test_recurring_shapes_have_one_owner():
         ),
         "touched-partition observation": (
             re.compile(r"F\.collect_set\(F\.struct\("),
+            {"operators/merge.py": 1},
+        ),
+        "Jaccard verify": (
+            re.compile(r'F\.col\("na"\) \+ F\.col\("nb"\) - F\.col\("inter"\)'),
+            {"plans/llm_text.py": 1},
+        ),
+        "BPE greedy rewrite": (
+            re.compile(r"CASE WHEN element_at\(acc, -1\)"),
+            {"plans/llm_text.py": 1},
+        ),
+        "BPE char vocabulary": (
+            re.compile(r"transform\(sequence\(1, length\(w\)\)"),
+            {"plans/llm_text.py": 1},
+        ),
+        "Lloyd update": (
+            re.compile(r'F\.collect_list\(F\.struct\("pos", "m"\)\)'),
+            {"plans/embeddings.py": 1},
+        ),
+        "PQ encoding": (
+            re.compile(r'F\.collect_list\(F\.struct\("sub", "dcid"\)\)'),
+            {"plans/embeddings.py": 1},
+        ),
+        "SimHash bit pack": (
+            re.compile(r'F\.lit\(1 << i\)\.cast\("long"\)'),
+            {"plans/llm_text.py": 1},
+        ),
+        "unigram log-prob table": (
+            re.compile(r'\.alias\("lnp"\)'),
+            {"plans/llm_text.py": 1},
+        ),
+        "repetition flag": (
+            re.compile(r'F\.col\("top_bigram_n"\) \* 50'),
+            {"plans/llm_text.py": 1},
+        ),
+        "BM25 query-term postings": (
+            re.compile(r'terms\.select\("term"\)\.distinct\(\)'),
+            {"plans/llm_text.py": 1},
+        ),
+        "per-lang cutoff rollup": (
+            re.compile(r'F\.min\("score"\)\.alias\("cutoff_score"\)'),
+            {"plans/llm_text.py": 1},
+        ),
+        "exact top-k by d2": (
+            re.compile(r'pair_d2\.alias\("d2"\)'),
+            {"plans/embeddings.py": 1},
+        ),
+        "schema sidecar name": (
+            re.compile(r'"_SCHEMA\.json"'),
             {"operators/merge.py": 1},
         ),
     }
