@@ -286,8 +286,8 @@ def _maintain_root_blooms(
     dropped fall away — the same O(touched files) contract as
     merge.merge_upsert_published's carry, so full sidecar coverage
     SURVIVES evolved writes instead of silently decaying to
-    always-candidates (the round-11 documented gap at
-    sources/files.py bloom_prune_files).
+    always-candidates (a documented gap at sources/files.py
+    bloom_prune_files).
 
     One structural exception: a bloom column that is also a PARTITION
     column of any layout is not physically present in that layout's

@@ -154,7 +154,7 @@ def fuzzy_pairs(
         # partitioning serializes the neighborhood build on few tasks
         # (measured: ONE task at sf0.1). Repartition on the id first;
         # the tiny pre-expansion shuffle buys an evenly parallel build.
-        # The partition count MUST be pinned (r14): an unnumbered
+        # The partition count MUST be pinned: an unnumbered
         # repartition(col) is AQE-coalescible, and AQE sizes partitions
         # by MAP-OUTPUT BYTES — a few hundred KB of keys — so it merged
         # the exchange back to ~1 partition and serialized the whole

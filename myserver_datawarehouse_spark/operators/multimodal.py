@@ -120,7 +120,7 @@ PHASH_WINDOW = 8
 PHASH_SCHEMA = "doc_id long, phash long"
 
 
-# Per-process memo of window-bytes -> histogram bin (r14, guide §4.2/§4.5):
+# Per-process memo of window-bytes -> histogram bin (guide §4.2/§4.5):
 # _phash60 hashes every sliding PHASH_WINDOW-byte block, and real corpus
 # bytes repeat blocks heavily (sf0.1 documents: 432k windows, 12.5k
 # distinct — measured 3.4x on the kernel loop). The bin is a pure

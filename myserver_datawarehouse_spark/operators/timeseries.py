@@ -27,12 +27,16 @@ Design (Spark-first, 100 TB-ready):
     preceding + `first ignorenulls` following + linear blend). Fully
     codegen'd, one sort per group partition, the sane default at scale.
   * `interpolate_nearest2` (bounded grid) and `interpolate_hour_nearest2`
-    (the hourly pipeline's fixed 60-minute grid) — exact reference parity
-    via one `applyInPandas` grouped kernel (the single justified pandas
-    UDF in the engine, SURVEY.md §2.11), vectorized with
-    `np.searchsorted` — the two nearest neighbors of a probe in a sorted
-    array form a contiguous index window, so 4 candidate indices suffice;
-    no per-row Python loop.
+    (the hourly pipeline's fixed 60-minute grid) — exact reference
+    parity. Both rest on one fact: the two nearest neighbors of a probe
+    in a sorted array form a contiguous index window around its
+    insertion point, so 4 candidate indices suffice. The bounded grid
+    runs a grouped `applyInPandas` kernel vectorized with
+    `np.searchsorted` (`_nearest2_values`, SURVEY.md §2.11). The hour
+    grid runs JVM-native: a sorted `collect_list` per group and one
+    `inline` of a higher-order SQL expression (`_hour_fill_sql`, the
+    `collect_list(struct)`+`transform` form of SURVEY.md T2), so the
+    hourly tick starts no Python worker.
 """
 
 from __future__ import annotations
@@ -165,17 +169,6 @@ def interpolate_bracketing(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
     return actual.unionByName(filled)
 
 
-def _nearest2_schema(keys_schema: StructType) -> StructType:
-    return StructType(
-        [
-            *keys_schema.fields,
-            StructField("minute_epoch", LongType(), False),
-            StructField("value", DoubleType(), True),
-            StructField("is_interpolated", BooleanType(), False),
-        ]
-    )
-
-
 def _nearest2_values(t: np.ndarray, v: np.ndarray, m: np.ndarray) -> np.ndarray:
     """Interpolated values at probe minutes `m` from sorted actuals (t, v).
 
@@ -197,25 +190,39 @@ def _nearest2_values(t: np.ndarray, v: np.ndarray, m: np.ndarray) -> np.ndarray:
     return np.where(same, v1, v1 + (m - t1) * (v2 - v1) / denom)
 
 
-def _nearest2_kernel(obs: DataFrame, keys: Sequence[str], grid_of) -> DataFrame:
-    """The one grouped `applyInPandas` behind both nearest-2 modes.
+def interpolate_nearest2(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """T2 (exact parity mode): the reference's nearest-2 semantics over
+    each group's bounded [min, max] observed grid, in one grouped
+    `applyInPandas`. Group size is bounded by the grid span (≤1440
+    rows/day-group), so executor memory is flat regardless of total
+    scale.
 
-    Only the group's actuals shuffle and cross Arrow; its grid is built
-    inside the kernel by `grid_of(key, t)` from the key tuple and the
-    sorted actual minutes `t` (at least 2 of them), so the missing minutes
-    never exist JVM-side — no grid build, no left join (measured ~2x on
-    the sf0.1 events grain vs an explicit-grid path). `grid_of` returns
-    None to leave the group unfilled. Groups with <2 actuals are skipped
-    (missing minutes stay missing), as in the reference."""
-    keys_schema = StructType([obs.schema[k] for k in keys])
+    Only the group's actuals shuffle and cross Arrow; the grid is built
+    inside the kernel from the sorted actual minutes, so the missing
+    minutes never exist JVM-side — no grid build, no left join (measured
+    ~2x on the sf0.1 events grain vs an explicit-grid path). Groups with
+    <2 actuals are skipped (missing minutes stay missing), as in the
+    reference. This grid stays on pandas: with its ends moved to the
+    first and last actual, the hour kernel's SQL form
+    (`_hour_fill_sql`) gave identical rows on the ≤1,440-minute day
+    grids of `interpolate_minutes_nearest2_windowed` at sf0.1 but was
+    no faster once warm (1.18 s vs 1.14 s on 4 cores)."""
+    schema = StructType(
+        [
+            *(obs.schema[k] for k in keys),
+            StructField("minute_epoch", LongType(), False),
+            StructField("value", DoubleType(), True),
+            StructField("is_interpolated", BooleanType(), False),
+        ]
+    )
 
     def fill(key, pdf):  # no hints: partial ones make applyInPandas warn
         actual = pdf.sort_values("minute_epoch")
         out_actual = actual.assign(is_interpolated=False)
         t = actual["minute_epoch"].to_numpy(np.int64)
-        grid = grid_of(key, t) if len(t) >= 2 else None
-        if grid is None:
+        if len(t) < 2:
             return out_actual
+        grid = np.arange(t[0], t[-1] + MINUTE, MINUTE)
         m = grid[~np.isin(grid, t)]
         if m.size == 0:
             return out_actual
@@ -233,17 +240,64 @@ def _nearest2_kernel(obs: DataFrame, keys: Sequence[str], grid_of) -> DataFrame:
         return pd.concat([out_actual, out_missing], ignore_index=True)
 
     return obs.select(*keys, "minute_epoch", "value").groupBy(*keys).applyInPandas(
-        fill, schema=_nearest2_schema(keys_schema)
+        fill, schema=schema
     )
 
 
-def interpolate_nearest2(obs: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """T2 (exact parity mode): the reference's nearest-2 semantics over
-    each group's bounded [min, max] observed grid. Group size is bounded
-    by the grid span (≤1440 rows/day-group), so executor memory is flat
-    regardless of total scale."""
-    return _nearest2_kernel(
-        obs, keys, lambda key, t: np.arange(t[0], t[-1] + MINUTE, MINUTE)
+def _hour_fill_sql(keys: Sequence[str], lo: int) -> str:
+    """The hour kernel as one SQL expression over `__actuals`, a group's
+    actuals as a time-sorted array of struct(t, v): the rows to `inline`,
+    actuals first, then each missing minute of [lo, lo + 59 min].
+
+    A group's missing minutes form runs between consecutive actuals, and
+    every minute of the run ending before actual i (0-based; i = n for
+    the run after the last) shares insertion point i, so its nearest-2
+    candidates are actuals i-2..i+1 (`get` is NULL out of range), as in
+    `_nearest2_values`. Each minute sorts those ≤4 candidates by
+    (distance, time): the candidates have distinct times in ascending
+    order, so this is the reference's stable argsort on distance. The
+    blend keeps the reference's operation order, `v1 + (m - t1) *
+    (v2 - v1) / (t2 - t1)` in doubles, so values are bit-identical.
+    Minute epochs are multiples of 60 (`minute_observations`). Groups
+    with <2 actuals or a NULL key keep only their actuals."""
+    prev_t = f"coalesce(get(__actuals, i - 1).t, {lo - MINUTE})"
+    next_t = f"coalesce(get(__actuals, i).t, {lo + 60 * MINUTE})"
+    candidates = (
+        "filter(array(get(__actuals, i - 2), get(__actuals, i - 1),"
+        " get(__actuals, i), get(__actuals, i + 1)), c -> c IS NOT NULL)"
+    )
+    nearest_first = (
+        "(x, y) -> CASE WHEN abs(x.t - m) < abs(y.t - m)"
+        " OR abs(x.t - m) = abs(y.t - m) AND x.t < y.t THEN -1"
+        " WHEN x.t = y.t THEN 0 ELSE 1 END"
+    )
+    pairs = (
+        "flatten(transform(sequence(0, size(__actuals)), i -> transform("
+        f"CASE WHEN {next_t} - {prev_t} > {MINUTE}"
+        f" THEN sequence({prev_t} + {MINUTE}, {next_t} - {MINUTE}, {MINUTE}L)"
+        " ELSE array() END,"
+        f" m -> named_struct('m', m, 'p', array_sort({candidates},"
+        f" {nearest_first})))))"
+    )
+    blend = (
+        "CASE WHEN s.p[0].t = s.p[1].t THEN s.p[0].v"
+        " ELSE s.p[0].v + CAST(s.m - s.p[0].t AS DOUBLE) * (s.p[1].v - s.p[0].v)"
+        " / CAST(s.p[1].t - s.p[0].t AS DOUBLE) END"
+    )
+    filled = (
+        f"transform({pairs}, s -> named_struct('minute_epoch', s.m,"
+        f" 'value', {blend}, 'is_interpolated', true))"
+    )
+    actual = (
+        "transform(__actuals, x -> named_struct('minute_epoch', x.t,"
+        " 'value', x.v, 'is_interpolated', false))"
+    )
+    fillable = " AND ".join(
+        ["size(__actuals) >= 2", *(f"`{k}` IS NOT NULL" for k in keys)]
+    )
+    return (
+        f"inline(concat({actual},"
+        f" CASE WHEN {fillable} THEN {filled} ELSE array() END))"
     )
 
 
@@ -251,19 +305,24 @@ def interpolate_hour_nearest2(
     obs: DataFrame, keys: Sequence[str], hour_start_epoch: int
 ) -> DataFrame:
     """T1+T2 for one closed hour (fact_gold_price.py:283-351): the fixed
-    60-minute grid of the hour, filled with the nearest-2 kernel from the
-    group's actuals inside the hour. Extrapolation and the <2-actuals skip
-    rule arise with this grid shape; a group with no actual in the hour
-    emits nothing. A group with a NULL key keeps its actuals and is not
-    filled, because the reference's grid is a key-equality join and NULL
-    never matches."""
+    60-minute grid of the hour, filled with the reference's nearest-2
+    rule from the group's actuals inside the hour. Extrapolation and the
+    <2-actuals skip rule arise with this grid shape; a group with no
+    actual in the hour emits nothing. A group with a NULL key keeps its
+    actuals and is not filled, because the reference's grid is a
+    key-equality join and NULL never matches.
+
+    JVM-native: one aggregate collects each group's actuals into a
+    sorted array (≤60 elements) and one `inline` generator emits the
+    actual and filled rows (`_hour_fill_sql`), so a tick starts no
+    Python worker. The per-group cost is bounded by the hour."""
     lo = int(hour_start_epoch) // MINUTE * MINUTE
-    hour = np.arange(lo, lo + 60 * MINUTE, MINUTE)
     in_hour = obs.filter(F.col("minute_epoch").between(lo, lo + 59 * MINUTE))
-    return _nearest2_kernel(
-        in_hour, keys,
-        lambda key, t: None if any(pd.isna(k) for k in key) else hour,
+    actuals = in_hour.groupBy(*keys).agg(
+        F.expr("array_sort(collect_list(struct(minute_epoch AS t, value AS v)))")
+        .alias("__actuals")
     )
+    return actuals.select(*keys, F.expr(_hour_fill_sql(keys, lo)))
 
 
 def with_minute_ts(df: DataFrame, col: str = "minute_epoch") -> DataFrame:

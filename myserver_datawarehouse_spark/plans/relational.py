@@ -2532,8 +2532,8 @@ def customer_fuzzy_match_edit2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The edit-distance-2 tier of `customer_fuzzy_match`: candidates
     come from the delete-≤2 neighborhood equi-join
     (operators/fuzzy.py:deletek_variants — exact recall at ed ≤ 2, see
-    the recall argument there), never the within-block quadratic join
-    the pre-round-5 code fell back to. The oracle stays the naive
+    the recall argument there), never a within-block quadratic join.
+    The oracle stays the naive
     blocked quadratic pair join at distance 2, so the differential gate
     proves delete-2 blocking loses no pair on real keys."""
     return _customer_fuzzy_rollup(spark, sf_dir, 2)
@@ -3083,7 +3083,7 @@ ORDER BY c_mktsegment
 """
 
 
-# ----------- TPC-H Q4/Q7/Q8/Q12/Q13/Q14/Q19/Q11 shapes (round 5)
+# ----------- TPC-H Q4/Q7/Q8/Q12/Q13/Q14/Q19/Q11 shapes
 
 Q4_DATE_LO = "1996-07-01"
 Q4_DATE_HI = "1996-10-01"
@@ -3673,7 +3673,7 @@ def sole_returner_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly when the distinct count is 1. No second scan of lineitem,
     no self-join.
 
-    Scale (round-6 shuffle-audit rewrite): the naive form — two
+    Scale (shuffle-audit rewrite): the naive form — two
     conditional COUNT(DISTINCT)s in one groupBy — plans through an
     Expand that multiplies every lineitem row 3× BEFORE the shuffle
     (measured 26.4 MiB shuffled at sf0.1, the registry's worst). The
@@ -3768,7 +3768,7 @@ def merge_writer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch_tag", F.lit("b")
     )
     target = _pid_tmpdir("msdw_writer_lifecycle", sf_dir)
-    # drop_table, not rmtree: after the round-7 WAP unification the
+    # drop_table, not rmtree: since the WAP unification the
     # evolved table is a snapshot symlink + hidden versions root, and a
     # plain rmtree would leave the old snapshots visible to the rerun.
     drop_table(target)
@@ -3948,7 +3948,7 @@ ORDER BY event_type
 """
 
 
-# ----------- TPC-H Q2/Q10/Q15/Q16/Q20 shapes (round 6) — the last five
+# ----------- TPC-H Q2/Q10/Q15/Q16/Q20 shapes — the last five
 # optimizer shapes of the sweep. No partsupp table exists in this
 # schema, so the part<->supplier catalog derives from lineitem history
 # (GROUP BY partkey, suppkey), which keeps every query joinable on real
@@ -4348,7 +4348,7 @@ ORDER BY s_suppkey
 """
 
 
-# ----------- round-6 S1 completion: CSV/JSONL text round-trips +
+# ----------- S1 completion: CSV/JSONL text round-trips +
 # dynamic partition pruning over a hive-partitioned copy of the fact.
 
 # The 7 columns the Q1-shape aggregate needs — written by every format
@@ -4721,7 +4721,7 @@ ORDER BY o_orderpriority
 """
 
 
-# ----------- round-6 sketch tier completion: count-min heavy hitters.
+# ----------- sketch tier completion: count-min heavy hitters.
 
 CM_W = 1024          # sketch width (buckets per row)
 CM_DEPTH_PARAMS = (  # (a, b) per depth for ((a*k + b) mod P) mod W
@@ -4953,8 +4953,8 @@ ORDER BY event_type
 
 
 def table_time_travel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned reads end to end, driver-adjudicated (the round-6 ask:
-    read_version/published_versions were pytest-only): the events table
+    """Versioned reads end to end as a registry query with an oracle (so
+    read_version/published_versions are not pytest-only): the events table
     is published as snapshot v1, a GDPR-style erasure
     (user_id % {ERASURE_MOD} == 0, same predicate as
     `user_erasure_audit`) is published as snapshot v2, and the output
@@ -5404,7 +5404,7 @@ BLOOM_EVOLVE_PROBES = (
 
 def bloom_evolved_carry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-sidecar point-lookup pruning SURVIVING partition-spec
-    evolution — the round-11 documented decay (evolution-path writes
+    evolution — a documented decay (evolution-path writes
     used to leave new files uncovered, silently degrading pruning to
     full-candidate), retired by operators/evolution._maintain_root_
     blooms: an evolved merge now carries bloom rows for hardlinked
@@ -5480,12 +5480,11 @@ def bloom_evolved_carry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must come from the on-disk artifact, so a prune-path bookkeeping
     # bug cannot vouch for itself. Manifest-scale paths only — read
     # driver-side from the sidecar's parquet footers with column
-    # projection (r15: same artifact, one fewer driver-blocking job
-    # per rep; the writer-tier rule from sources/files.
-    # _sidecar_paths_local).
+    # projection (same artifact, one fewer driver-blocking job per rep;
+    # the writer-tier rule from sources/files._sidecar_paths_local).
     covered = _FS._sidecar_paths_local(_FS._bloom_dir(snapshot, "event_id"))
     bloom_covered = covered == set(_FS._data_files_relative(snapshot))
-    # Reuse the flag probe's own candidate list for the read (r15):
+    # Reuse the flag probe's own candidate list for the read:
     # read_pruned would re-run the identical bloom prune — same keys,
     # same sidecar — a second time inside one audit.
     pruned = _FS.read_pruned_files(spark, snapshot, keep).filter(

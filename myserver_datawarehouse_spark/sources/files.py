@@ -454,8 +454,8 @@ def bloom_prune_files(
             F.expr(f"try_cast(`{column}` AS {meta['type']})").alias(column)
         )
     )
-    # ONE collect for both the cast check and the bucket ids (r15,
-    # guide §1.2: these are driver-blocking jobs over a probe-count-
+    # ONE collect for both the cast check and the bucket ids (guide
+    # §1.2: these are driver-blocking jobs over a probe-count-
     # sized local frame; the former null-check count + bucket collect
     # paid two).
     probe_rows = typed.select(
@@ -478,8 +478,8 @@ def bloom_prune_files(
     for b in probe_buckets[1:]:
         admits = admits | bit_set(b)
     blooms = spark.read.parquet(sidecar)
-    # ONE sidecar scan for both the coverage set and the admitted set
-    # (r15): the bit tests stay executor-side (codegen'd byte-ANDs over
+    # ONE sidecar scan for both the coverage set and the admitted set:
+    # the bit tests stay executor-side (codegen'd byte-ANDs over
     # the bloom column — bitsets never reach the driver); only the
     # manifest-scale (path, admitted) rows collect, where the previous
     # form paid two separate collect jobs over the same scan.
@@ -518,9 +518,9 @@ def read_pruned_files(
 ) -> DataFrame:
     """The delete-aware read half of `read_pruned`, for a caller that
     already holds the pruned candidate list from its own
-    `bloom_prune_files` call (r15: the bloom audits probe once for
-    their file-skipping flags and previously paid a SECOND full prune
-    inside read_pruned for the same keys). Pairs the candidate read
+    `bloom_prune_files` call (the bloom audits probe once for their
+    file-skipping flags; through read_pruned they would pay a SECOND
+    full prune for the same keys). Pairs the candidate read
     with each layout's `_deletes` anti-join exactly as read_pruned."""
     import functools
     import os

@@ -109,10 +109,18 @@ def _tick(spark, sf, workdir, hour):
     return rows, jobs, plans
 
 
+PYTHON_NODE = re.compile(
+    r"FlatMapGroupsInPandas|ArrowEvalPython|BatchEvalPython|MapInPandas")
+# The hour kernel's node in a formatted plan description.
+GENERATE_INLINE = re.compile(
+    r"\(\d+\) Generate\nInput[^\n]*\nArguments: inline\(")
+
+
 def test_tick_cost_does_not_grow_with_history(spark, tmp_path):
     """One tick over 5 days of history and one over 20 days: same output,
-    same number of Spark jobs, and the read-back scan of the fact table
-    prunes to the hour's date_id partition."""
+    same number of Spark jobs, the read-back scan of the fact table
+    prunes to the hour's date_id partition, and no execution of the tick
+    runs a Python worker (the hour kernel is an `inline` generator)."""
     types = ["click", "view", "buy"]
     rows = []
     for h in range(21 * 24):
@@ -138,7 +146,9 @@ def test_tick_cost_does_not_grow_with_history(spark, tmp_path):
     assert rows5 == rows20
     assert jobs5 == jobs20
     for plans in (plans5, plans20):
-        kernel = [p for p in plans if "FlatMapGroupsInPandas" in p]
+        python = [m.group() for p in plans for m in PYTHON_NODE.finditer(p)]
+        assert not python, python
+        kernel = [p for p in plans if GENERATE_INLINE.search(p)]
         assert kernel, "no execution ran the hour kernel"
         scans = re.findall(r"Scan parquet[^\n]*\n(?:[^\n]*\n)*?"
                            r"PartitionFilters: \[([^\n]*)\]", kernel[0])

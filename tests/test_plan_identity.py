@@ -1,5 +1,5 @@
 """tools/plan_identity.py normalises run-specific ids out of a plan dump
-(`norm`) and cuts an AQE plan down to the plan the code built, its
+(`norm`), PySpark's counter-numbered lambda variables included, and cuts an AQE plan down to the plan the code built, its
 operators renumbered in tree order (`initial`). Both are pure text
 functions: no Spark session here."""
 
@@ -78,6 +78,28 @@ def test_norm_replaces_run_specific_ids():
         "org.apache.spark.sql.Obj@H\n"
         "(3) ShuffleQueryStage\nOutput [1]: [k#N]\nArguments: N\n"
     )
+
+
+def test_norm_renumbers_python_lambda_variables():
+    def plan(x, y, z):  # the same plan as built at three counter values
+        return (
+            f"transform(xs#3, lambdafunction((lambda x_{x}#40 * 2), "
+            f"lambda x_{x}#40, false)) AS a#5, zip_with(a#5, b#6, "
+            f"lambdafunction((lambda x_{y}#41 + lambda y_{z}#42), "
+            f"lambda x_{y}#41, lambda y_{z}#42, false))"
+        )
+
+    want = (
+        "transform(xs#N, lambdafunction((lambda x_1#N * 2), "
+        "lambda x_1#N, false)) AS a#N, zip_with(a#N, b#N, "
+        "lambdafunction((lambda x_2#N + lambda y_3#N), "
+        "lambda x_2#N, lambda y_3#N, false))"
+    )
+    assert norm(plan(12, 13, 14), ROOT) == want
+    assert norm(plan(97, 98, 99), ROOT) == want
+    # SQL lambdas (F.expr) carry no counter suffix and stay as written
+    sql = "transform(a#1, lambdafunction(lambda x#9.t, lambda x#9, false))"
+    assert norm(sql, ROOT) == sql.replace("#1", "#N").replace("#9", "#N")
 
 
 def test_initial_keeps_the_built_plan_renumbered():

@@ -1,8 +1,10 @@
 """tools/profile_query.py attributes jobs by job-ID window, so jobs that
 `session.parallel_actions` submits from its pool threads count too, and
-records the driver's py4j round trips per rep."""
+records the driver's py4j round trips and codegen compilations per
+rep."""
 
 import sys
+import time
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -73,3 +75,19 @@ def test_profile_counts_py4j_round_trips(spark):
     assert all(n > 0 for n in base["py4j_calls"])
     for b, m in zip(base["py4j_calls"], more["py4j_calls"]):
         assert m - b >= 50
+
+
+def test_profile_counts_codegen_compiles(spark):
+    # A literal no earlier plan in the session has used: its generated
+    # code is new on the first rep and a cache hit on the repeat.
+    k = 1_000_003 + time.time_ns() % 1_000_000
+
+    def fresh(sp, _sf_dir):
+        return sp.range(100).selectExpr(f"id * {k} + 13 AS z").groupBy(
+            "z").count()
+
+    r = profile_one(spark, SimpleNamespace(name="codegen_stub", spark=fresh),
+                    "", reps=2, warm=0)
+    first, repeat = r["codegen_compiles"]
+    assert first > 0
+    assert repeat == 0

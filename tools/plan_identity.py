@@ -37,7 +37,11 @@ NORM = [(r"(file:)?/tmp/[^\s,\])\"']*", "<TMP>"),
 
 def norm(p, root):
     for rx, to in [(re.escape(root), "<ROOT>")] + NORM: p = re.sub(rx, to, p)
-    return p
+    # PySpark names a Python lambda's variables from one per-process
+    # counter (`lambda x_12`): renumber them in order of first appearance
+    ren = {}
+    return re.sub(r"lambda (\w+?)_\d+\b", lambda m: "lambda %s_%d" % (
+        m.group(1), ren.setdefault(m.group(0), len(ren) + 1)), p)
 
 
 def initial(p):  # cut each AQE Final Plan, renumber operators in tree order

@@ -20,6 +20,13 @@ queries through the bench's noop-sink protocol and report, for each,
     read, a job submission) goes through
     `py4j.clientserver.ClientServerConnection.send_command`, counted
     around each rep on every thread,
+  - the classes Spark's code generator compiled per rep
+    (`codegen_compiles`): the exact count delta of
+    `CodegenMetrics.METRIC_COMPILATION_TIME()`, a histogram with one
+    entry per Janino compilation in the JVM (the driver's, so on a
+    local session the executors' too). A cache hit compiles nothing, so
+    a repeat of a warm plan reads 0 and a query whose code embeds its
+    literals compiles anew on every rep,
 
 so an optimization can be judged by plan shape + scheduler load, not
 wall-clock alone (guide §1: measure first; §7.2: read the plan).
@@ -147,16 +154,21 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
     steals = []
     spawn_counts = []
     calls = []
+    compiles = []
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiled = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
     spawn_cmds: Counter = Counter()
     lo = jobs.next_job_id()
     for _ in range(reps):
         with (jvm_spawns(jvm) if jdk_tools else contextlib.nullcontext()) as cmds:
+            n0 = compiled.getCount()
             c0 = measure.cpu_ticks()
             t0 = time.perf_counter()
             with py4j_calls() as n_calls:
                 df = spec.spark(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
+            compiles.append(compiled.getCount() - n0)
             steals.append(round(measure.steal_pct(c0, measure.cpu_ticks()), 2))
             calls += n_calls
         if cmds is not None:
@@ -187,6 +199,7 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
         # phase, not the plan (see perfbench/measure.cpu_ticks).
         "steal_pct": steals,
         "py4j_calls": calls,
+        "codegen_compiles": compiles,
         "jvm_spawns": spawn_counts if jdk_tools else None,
         "jvm_spawn_cmds": dict(spawn_cmds) if jdk_tools else None,
         **counts,
