@@ -110,6 +110,31 @@ PHASH_CHUNKS = 4
 PHASH_HAMMING_MAX = PHASH_CHUNKS - 1  # pigeonhole-complete radius
 
 
+def _banded_pairs(fp: DataFrame, hash_col: str, *carry: str) -> DataFrame:
+    """The filter step of every media near-dup arm: each 60-bit hash
+    of `fp` (doc_id, hash_col, ...) banded into PHASH_CHUNKS 15-bit
+    chunks (operators/text.simhash_chunks), and the oriented `a`/`b`
+    self-join on a shared (chunk_idx, chunk_value) bucket
+    (operators/text.doc_pairs). `carry` columns ride along to the
+    verify."""
+    chunks = fp.select(
+        "doc_id",
+        *carry,
+        F.posexplode(TX.simhash_chunks(hash_col, PHASH_CHUNKS)).alias(
+            "c", "cv"
+        ),
+    )
+    return TX.doc_pairs(chunks, "c", "cv")
+
+
+def _with_survivor(pairs: DataFrame) -> DataFrame:
+    """The verified pairs plus the survivor pick (min doc_id among each
+    retired doc's matches), in (doc_a, doc_b) order."""
+    return pairs.select(
+        "*", F.min("doc_a").over(Window.partitionBy("doc_b")).alias("survivor")
+    ).orderBy("doc_a", "doc_b")
+
+
 def _image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-banded pHash candidate pairs with exact Hamming verify —
     shared by `near_dup_image_phash` (its presentation surface) and,
@@ -124,15 +149,8 @@ def _image_phash_pairs_from(ph: DataFrame) -> DataFrame:
     """The image pair plan over any (doc_id, phash) frame. `ph` is
     consumed by both sides of the bucket self-join — pass a
     materialized/reusable frame when recomputing it is expensive."""
-    chunks = ph.select(
-        "doc_id",
-        "phash",
-        F.posexplode(TX.simhash_chunks("phash", PHASH_CHUNKS)).alias(
-            "c", "cv"
-        ),
-    )
     return (
-        TX.doc_pairs(chunks, "c", "cv")
+        _banded_pairs(ph, "phash", "phash")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -162,13 +180,7 @@ def near_dup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload shuffle — the payload never leaves its scan; only the
     8-byte (doc_id, phash) pairs move.
     """
-    pairs = _image_phash_pairs(spark, sf_dir)
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        "hamming",
-        F.min("doc_a").over(Window.partitionBy("doc_b")).alias("survivor"),
-    ).orderBy("doc_a", "doc_b")
+    return _with_survivor(_image_phash_pairs(spark, sf_dir))
 
 
 _PHASH_W = MM.PHASH_WINDOW
@@ -217,6 +229,8 @@ ORDER BY doc_a, doc_b
 
 
 VIDEO_HAMMING_MAX = PHASH_HAMMING_MAX  # per-frame radius, same pigeonhole
+# (hash column, set-size column, radius, cover) of `_set_verified_pairs`
+_VIDEO_SET_RULE = ("fhash", "n_frames", VIDEO_HAMMING_MAX, F.greatest)
 
 
 def near_dup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -247,15 +261,7 @@ def near_dup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     k by sampling timestamps, the sample_frames machinery). A banded
     frame bucket with f frames emits O(f^2) candidate rows, the same
     skew envelope as the SimHash/LSH text tiers."""
-    ver = _video_frame_pairs(spark, sf_dir)
-    return ver.select(
-        "doc_a",
-        "doc_b",
-        "matched",
-        "n_frames_a",
-        "n_frames_b",
-        F.min("doc_a").over(Window.partitionBy("doc_b")).alias("survivor"),
-    ).orderBy("doc_a", "doc_b")
+    return _with_survivor(_video_frame_pairs(spark, sf_dir))
 
 
 def _video_frame_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,33 +276,38 @@ def _video_frame_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize: the fingerprint frame feeds the chunk explode AND
     # the per-video set aggregate — without the cut the payload scan +
     # pHash kernel execute twice.
-    return _video_frame_pairs_from(materialize(MM.frame_phash(media)))
-
-
-def _video_frame_pairs_from(fp: DataFrame) -> DataFrame:
-    """The video pair plan over any reusable (doc_id, fhash) frame —
-    callers materialize `fp` (it feeds the chunk explode AND the
-    per-video set aggregate)."""
-    chunks = fp.select(
-        "doc_id",
-        F.posexplode(TX.simhash_chunks("fhash", PHASH_CHUNKS)).alias(
-            "c", "cv"
-        ),
+    return _set_verified_pairs(
+        materialize(MM.frame_phash(media)), *_VIDEO_SET_RULE
     )
+
+
+def _set_verified_pairs(
+    fp: DataFrame, hash_col: str, n_col: str, radius: int, cover
+) -> DataFrame:
+    """The set-verify media arm over any reusable (doc_id, hash_col)
+    frame of per-frame or per-window hashes — callers materialize `fp`
+    (it feeds the chunk explode AND the per-doc set aggregate).
+    Candidate docs share a band (`_banded_pairs`); a hash of doc_a
+    matches if some hash of doc_b is within Hamming `radius`
+    (array-local higher-order functions, no per-hash join), and a pair
+    is kept when the matched count covers half of `cover` (F.greatest:
+    video coverage; F.least: audio containment) of the two set sizes
+    `n_col`_a, `n_col`_b."""
     cand = (
-        TX.doc_pairs(chunks, "c", "cv")
+        _banded_pairs(fp, hash_col)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
         )
         .distinct()
     )
+    hashes = hash_col + "es"
     sets = fp.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("fhash")).alias("fhashes"),
-        F.count(F.lit(1)).alias("n_frames"),
+        F.sort_array(F.collect_list(hash_col)).alias(hashes),
+        F.count(F.lit(1)).alias(n_col),
     )
     sa, sb = sets.alias("sa"), sets.alias("sb")
-    ver = (
+    return (
         cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
         .select(
@@ -304,23 +315,21 @@ def _video_frame_pairs_from(fp: DataFrame) -> DataFrame:
             "doc_b",
             F.size(
                 F.filter(
-                    F.col("sa.fhashes"),
+                    F.col(f"sa.{hashes}"),
                     lambda x: F.exists(
-                        F.col("sb.fhashes"),
-                        lambda y: TX.hamming60(x, y)
-                        <= F.lit(VIDEO_HAMMING_MAX),
+                        F.col(f"sb.{hashes}"),
+                        lambda y: TX.hamming60(x, y) <= F.lit(radius),
                     ),
                 )
             ).alias("matched"),
-            F.col("sa.n_frames").alias("n_frames_a"),
-            F.col("sb.n_frames").alias("n_frames_b"),
+            F.col(f"sa.{n_col}").alias(f"{n_col}_a"),
+            F.col(f"sb.{n_col}").alias(f"{n_col}_b"),
         )
         .filter(
             F.col("matched") * 2
-            >= F.greatest(F.col("n_frames_a"), F.col("n_frames_b"))
+            >= cover(F.col(f"{n_col}_a"), F.col(f"{n_col}_b"))
         )
     )
-    return ver
 
 
 near_dup_video_frames.__doc__ = near_dup_video_frames.__doc__.replace(
@@ -391,6 +400,7 @@ ORDER BY doc_a, doc_b
 
 
 AUDIO_HAMMING_MAX = PHASH_HAMMING_MAX  # per-window radius, same pigeonhole
+_AUDIO_SET_RULE = ("ahash", "n_segs", AUDIO_HAMMING_MAX, F.least)
 CLIP_ID_OFFSET = 9_999_999  # ≡ 0 (mod 3): a clip keeps its track's class
 CLIP_EVERY = 30  # clip every 10th audio doc (doc_id % 30 == 1)
 CLIP_START = MM.AUDIO_HOP  # hop-aligned: clip windows == track windows
@@ -448,15 +458,7 @@ def near_dup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("text", CLIP_START + 1, CLIP_LEN).alias("text"),
     )
     media = MM.with_fake_payload(base.unionAll(clips))
-    ver = _audio_fingerprint_pairs(media)
-    return ver.select(
-        "doc_a",
-        "doc_b",
-        "matched",
-        "n_segs_a",
-        "n_segs_b",
-        F.min("doc_a").over(Window.partitionBy("doc_b")).alias("survivor"),
-    ).orderBy("doc_a", "doc_b")
+    return _with_survivor(_audio_fingerprint_pairs(media))
 
 
 def _audio_fingerprint_pairs(media) -> DataFrame:
@@ -470,59 +472,9 @@ def _audio_fingerprint_pairs(media) -> DataFrame:
     # materialize: the fingerprint frame feeds the chunk explode AND
     # the per-track set aggregate — without the cut the payload scan +
     # fingerprint kernel execute twice.
-    return _audio_fingerprint_pairs_from(
-        materialize(MM.audio_fingerprint(media))
+    return _set_verified_pairs(
+        materialize(MM.audio_fingerprint(media)), *_AUDIO_SET_RULE
     )
-
-
-def _audio_fingerprint_pairs_from(fp: DataFrame) -> DataFrame:
-    """The audio pair plan over any reusable (doc_id, ahash) frame —
-    callers materialize `fp` (it feeds the chunk explode AND the
-    per-track set aggregate)."""
-    chunks = fp.select(
-        "doc_id",
-        F.posexplode(TX.simhash_chunks("ahash", PHASH_CHUNKS)).alias(
-            "c", "cv"
-        ),
-    )
-    cand = (
-        TX.doc_pairs(chunks, "c", "cv")
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sets = fp.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("ahash")).alias("ahashes"),
-        F.count(F.lit(1)).alias("n_segs"),
-    )
-    sa, sb = sets.alias("sa"), sets.alias("sb")
-    ver = (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(
-                F.filter(
-                    F.col("sa.ahashes"),
-                    lambda x: F.exists(
-                        F.col("sb.ahashes"),
-                        lambda y: TX.hamming60(x, y)
-                        <= F.lit(AUDIO_HAMMING_MAX),
-                    ),
-                )
-            ).alias("matched"),
-            F.col("sa.n_segs").alias("n_segs_a"),
-            F.col("sb.n_segs").alias("n_segs_b"),
-        )
-        .filter(
-            F.col("matched") * 2
-            >= F.least(F.col("n_segs_a"), F.col("n_segs_b"))
-        )
-    )
-    return ver
 
 
 near_dup_audio_fingerprint.__doc__ = near_dup_audio_fingerprint.__doc__.replace(
@@ -700,15 +652,17 @@ def cross_modal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.col("mhash").alias("phash")
         )
     ).select("doc_a", "doc_b")
-    apairs = _audio_fingerprint_pairs_from(
+    apairs = _set_verified_pairs(
         fp.filter(F.col("modality") == "audio").select(
             "doc_id", F.col("mhash").alias("ahash")
-        )
+        ),
+        *_AUDIO_SET_RULE,
     ).select("doc_a", "doc_b")
-    vpairs = _video_frame_pairs_from(
+    vpairs = _set_verified_pairs(
         fp.filter(F.col("modality") == "video").select(
             "doc_id", F.col("mhash").alias("fhash")
-        )
+        ),
+        *_VIDEO_SET_RULE,
     ).select("doc_a", "doc_b")
     edges = tpairs.union(ipairs).union(apairs).union(vpairs).distinct()
     labels = LTX._cc_min_labels(edges)

@@ -34,6 +34,25 @@ def dec_sum(col, scale: str = "decimal(18,2)"):
     return F.sum(c.cast(scale)).cast("double")
 
 
+def _sum_value():
+    """The audited value total of the writer-tier and streaming audits:
+    an exact decimal(18,6) sum of `value`, rounded to cents, as double
+    (their oracles' `CAST(ROUND(SUM(CAST(value AS DECIMAL(18,6))), 2)
+    AS DOUBLE)`)."""
+    return (
+        F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
+        .cast("double")
+        .alias("sum_value")
+    )
+
+
+def _disc_price(one: int | float = 1):
+    """TPC-H discounted price `l_extendedprice * (one - l_discount)`.
+    The literal's type is part of the plan (`1` vs `1.0`), so callers
+    pass the one their oracle uses and keep their own decimal cast."""
+    return F.col("l_extendedprice") * (F.lit(one) - F.col("l_discount"))
+
+
 _PID_TMPDIRS: set[str] = set()
 
 
@@ -105,6 +124,17 @@ def _pid_tmpdir(prefix: str, sf_dir: str) -> str:
     return path
 
 
+def _fresh_work(prefix: str, sf_dir: str) -> str:
+    """The query's per-(sf, pid) work dir (atexit-cleaned), emptied:
+    a second plan construction in one process must rebuild the table
+    (or replay the whole stream), not reuse the previous run's."""
+    import shutil
+
+    work = _pid_tmpdir(prefix, sf_dir)
+    shutil.rmtree(work, ignore_errors=True)
+    return work
+
+
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A3-style grouped aggregate block (TPC-H Q1 shape).
 
@@ -118,12 +148,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pricing_block(l: DataFrame) -> DataFrame:
     """The Q1-shape aggregate body, shared by the parquet and ORC entry
     points so the two formats are adjudicated against the SAME SQL."""
-    disc_price = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,10)"
-    )
-    charge = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
-    ).cast("decimal(28,10)")
+    disc_price = _disc_price().cast("decimal(28,10)")
+    charge = (_disc_price() * (1 + F.col("l_tax"))).cast("decimal(28,10)")
     return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -211,9 +237,7 @@ def star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,10)"
-    )
+    rev = _disc_price().cast("decimal(28,10)")
     return (
         l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -251,9 +275,7 @@ def top_supplier_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     l = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,10)"
-    )
+    rev = _disc_price().cast("decimal(28,10)")
     per_supp = (
         l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .groupBy("s_nationkey", "s_suppkey", "s_name")
@@ -710,9 +732,7 @@ def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Beyond the reference surface — its report stacks UNIONed queries for
     totals; a warehouse engine gets them from the same scan."""
     l = load_table(spark, sf_dir, "lineitem")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,10)"
-    )
+    rev = _disc_price().cast("decimal(28,10)")
     return (
         l.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -1270,9 +1290,6 @@ ORDER BY status
 
 # ------------------------------------------------------------- funnel
 
-FUNNEL_STAGES = ("view", "click", "purchase")
-
-
 def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel (view -> click -> purchase): per user, the first
     view, the first click AFTER that view, and the first purchase AFTER
@@ -1739,9 +1756,7 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit(SHIP_CUTOFF).cast("timestamp")
     )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(28,10)"
-    )
+    rev = _disc_price().cast("decimal(28,10)")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -2639,7 +2654,7 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_nationkey"
     )
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    rev = _disc_price(1.0)
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -2698,7 +2713,7 @@ def part_brand_margin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_type", "p_brand", "p_retailprice"
     )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    rev = _disc_price(1.0)
     cost = F.col("p_retailprice") * F.col("l_quantity")
     per = (
         l.join(p, F.col("l_partkey") == F.col("p_partkey"))
@@ -3175,7 +3190,7 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_c = F.broadcast(n.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
     ))
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    rev = _disc_price(1.0)
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -3278,9 +3293,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("supp_nation"),
         )
     )
-    rev = (
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    ).cast("decimal(28,6)")
+    rev = _disc_price(1.0).cast("decimal(28,6)")
     joined = (
         l.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -3475,9 +3488,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey", "l_extendedprice", "l_discount")
     )
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = (
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    ).cast("decimal(28,6)")
+    rev = _disc_price(1.0).cast("decimal(28,6)")
     return (
         l.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
@@ -3560,7 +3571,7 @@ def brand_size_disjunctive_revenue(
             & F.col("l_quantity").between(qlo, qhi)
         )
         cond = branch if cond is None else (cond | branch)
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    rev = _disc_price(1.0)
     return (
         l.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .filter(cond)
@@ -3614,9 +3625,7 @@ def brand_revenue_concentration(
         "l_partkey", "l_extendedprice", "l_discount"
     )
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    rev = (
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    ).cast("decimal(28,6)")
+    rev = _disc_price(1.0).cast("decimal(28,6)")
     per_brand = (
         l.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand")
@@ -3790,11 +3799,7 @@ def merge_writer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.count("batch_tag").alias("n_tagged"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")), 2
-            )
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .orderBy("event_type")
     )
@@ -4093,9 +4098,7 @@ def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = (
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    ).cast("decimal(28,6)")
+    rev = _disc_price(1.0).cast("decimal(28,6)")
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -4154,9 +4157,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey", "l_extendedprice", "l_discount")
     )
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    rev = (
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    ).cast("decimal(28,6)")
+    rev = _disc_price(1.0).cast("decimal(28,6)")
     per_supp = l.groupBy("l_suppkey").agg(
         F.sum(rev).alias("rev_d"), F.count(F.lit(1)).alias("n_lineitems")
     )
@@ -4461,9 +4462,7 @@ def dpp_partitioned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    rev = (
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    ).cast("decimal(28,6)")
+    rev = _disc_price(1.0).cast("decimal(28,6)")
     return (
         fact.join(
             F.broadcast(months),
@@ -4542,9 +4541,7 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("o_orderpriority") == BLOOM_PRIORITY)
             .select("o_orderkey")
         )
-        rev = (
-            F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-        ).cast("decimal(28,6)")
+        rev = _disc_price(1.0).cast("decimal(28,6)")
         out = (
             l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
             .groupBy("l_returnflag")
@@ -4681,9 +4678,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register_exit_cleanup(os.path.join(warehouse, t))
         _register_exit_drop_table(spark, t)
 
-    rev = (
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    ).cast("decimal(28,6)")
+    rev = _disc_price(1.0).cast("decimal(28,6)")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -4876,6 +4871,12 @@ HEAVY_HITTERS_CM_AUDIT_SQL = _cm_oracle_sql()
 ERASURE_MOD = 97
 
 
+def _erased_user():
+    """The GDPR erasure cohort, `user_id % ERASURE_MOD == 0`; its
+    negation `~_erased_user()` selects the survivors."""
+    return F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) == 0
+
+
 def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten at table scope, end to end — and the
     driver adjudication of the WAP writer itself (operators/merge.py
@@ -4897,22 +4898,17 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed write + an O(1) manifest swap — no read-modify-write
     of the live table at any point. Same eager-execution convention as
     the writer-lifecycle query (pid-keyed root, atexit-cleaned)."""
-    import shutil
-
     from myserver_datawarehouse_spark.operators.merge import (
         publish_overwrite,
         read_published,
     )
 
-    root = _pid_tmpdir("msdw_erasure_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_erasure_table", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     publish_overwrite(spark, root, e)
-    erase = e.filter(
-        F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) == 0
-    ).select("user_id").distinct()
+    erase = e.filter(_erased_user()).select("user_id").distinct()
     erased = read_published(spark, root).join(
         F.broadcast(erase), "user_id", "left_anti"
     )
@@ -4923,16 +4919,8 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct("user_id").alias("n_users"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")), 2
-            )
-            .cast("double")
-            .alias("sum_value"),
-            F.count(
-                F.when(
-                    F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) == 0, 1
-                )
-            ).alias("n_residual"),
+            _sum_value(),
+            F.count(F.when(_erased_user(), 1)).alias("n_residual"),
         )
         .orderBy("event_type")
     )
@@ -4972,8 +4960,6 @@ def table_time_travel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two distributed writes + three scans; version resolution is
     O(1) manifest reads. Same eager-execution and pid-keyed-tmpdir
     convention as the erasure query."""
-    import shutil
-
     from myserver_datawarehouse_spark.operators.merge import (
         publish_overwrite,
         published_versions,
@@ -4981,15 +4967,12 @@ def table_time_travel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_version,
     )
 
-    root = _pid_tmpdir("msdw_timetravel_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_timetravel_table", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     v1 = publish_overwrite(spark, root, e)
-    erase = e.filter(
-        F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) == 0
-    ).select("user_id").distinct()
+    erase = e.filter(_erased_user()).select("user_id").distinct()
     erased = read_published(spark, root).join(
         F.broadcast(erase), "user_id", "left_anti"
     )
@@ -5005,9 +4988,7 @@ def table_time_travel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct("user_id").alias("n_users"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         ).select(F.lit(snapshot).alias("snapshot"), "*")
 
     return (
@@ -5097,11 +5078,7 @@ def table_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")), 2
-            )
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .withColumn("files_reduced", F.lit(bool(after < before)))
         .orderBy("event_type")
@@ -5229,11 +5206,7 @@ def file_skipping_scan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan falls back to a full scan with the same output.
     Eager-execution, pid-keyed-dir convention as the writer-lifecycle
     queries."""
-    import os
-    import shutil
-
-    root = _pid_tmpdir("msdw_zonemap_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_zonemap_table", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -5260,9 +5233,7 @@ def file_skipping_scan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .withColumn("files_skipped", F.lit(bool(len(keep) < len(stats))))
         .orderBy("event_type")
@@ -5334,18 +5305,11 @@ def bloom_file_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates ~= true files + fp. Eager-execution, pid-keyed-dir
     convention."""
     import os
-    import shutil
 
-    from myserver_datawarehouse_spark.operators.merge import (
-        publish_overwrite,
-        read_published,  # noqa: F401  (the full-table reader twin)
-    )
-    from myserver_datawarehouse_spark.sources.files import (
-        bloom_prune_files,
-    )
+    from myserver_datawarehouse_spark.operators.merge import publish_overwrite
+    from myserver_datawarehouse_spark.sources.files import bloom_prune_files
 
-    root = _pid_tmpdir("msdw_bloomskip_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_bloomskip_table", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -5368,9 +5332,7 @@ def bloom_file_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned.groupBy("event_id", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .withColumn("files_skipped", F.lit(bool(len(keep) < total)))
         .orderBy("event_id")
@@ -5442,14 +5404,11 @@ def bloom_evolved_carry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     + fpp) files across both layouts. Eager-execution, pid-keyed-dir
     convention."""
     import os
-    import shutil
-
     from myserver_datawarehouse_spark.operators import evolution as EV
     from myserver_datawarehouse_spark.operators import merge as M
     from myserver_datawarehouse_spark.sources import files as _FS
 
-    root = _pid_tmpdir("msdw_bloomevolve_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_bloomevolve_table", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -5494,9 +5453,7 @@ def bloom_evolved_carry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned.groupBy("event_id", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .withColumn("files_skipped", F.lit(bool(len(keep) < total)))
         .withColumn("bloom_covered", F.lit(bool(bloom_covered)))
@@ -5569,20 +5526,17 @@ def table_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjudication pins). Null-safe column compare means value flips
     to/from NULL classify as updates, not noise. Eager-execution,
     pid-keyed-dir convention."""
-    import shutil
-
     from myserver_datawarehouse_spark.operators.merge import (
         publish_overwrite,
         table_changes,
     )
 
-    root = _pid_tmpdir("msdw_cdf_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_cdf_table", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     v1 = publish_overwrite(spark, root, e)
-    survivors = e.filter(F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) != 0)
+    survivors = e.filter(~_erased_user())
     updated = survivors.withColumn(
         "value",
         F.when(
@@ -5604,9 +5558,7 @@ def table_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         changes.groupBy("change_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .orderBy("change_type")
     )
@@ -5673,8 +5625,6 @@ def deletion_vector_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: replaces the rewrite-everything erasure pattern
     (SURVEY.md §2.1 S4/S7)."""
     import os
-    import shutil
-
     from myserver_datawarehouse_spark.operators.merge import (
         compact_table,
         delete_where,
@@ -5691,8 +5641,7 @@ def deletion_vector_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out[f] = os.stat(os.path.join(r, f))
         return out
 
-    root = _pid_tmpdir("msdw_dv_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_dv_table", sf_dir)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -5701,7 +5650,7 @@ def deletion_vector_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = delete_where(
         spark,
         root,
-        F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) == 0,
+        _erased_user(),
         keys=["event_id"],
     )
     v2_dir = os.path.join(root, v2)
@@ -5722,9 +5671,7 @@ def deletion_vector_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _rollup(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
 
     mor = _rollup(read_published(spark, root))  # plan pinned to v2
@@ -5805,9 +5752,7 @@ def incremental_join_maintenance(
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_shipdate",
-        (
-            F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-        )
+        _disc_price(1.0)
         .cast("decimal(28,6)")
         .alias("rev"),
     )
@@ -6069,9 +6014,7 @@ def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("state_at_purchase")
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .orderBy("state_at_purchase")
     )
@@ -6595,8 +6538,6 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: replaces populate_sources_dag.py's drop-and-
     reload repartitioning."""
     import os
-    import shutil
-
     from myserver_datawarehouse_spark.operators import evolution as EV
     from myserver_datawarehouse_spark.operators import merge as M
     from myserver_datawarehouse_spark.session import parallel_actions
@@ -6612,8 +6553,7 @@ def partition_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).st_ino
         return out
 
-    root = _pid_tmpdir("msdw_evolve_table", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = _fresh_work("msdw_evolve_table", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",

@@ -13,17 +13,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myserver_datawarehouse_spark.plans.relational import _pid_tmpdir
+from myserver_datawarehouse_spark.plans.relational import (
+    _fresh_work,
+    _pid_tmpdir,
+    _sum_value,
+)
 from myserver_datawarehouse_spark.streaming import jobs as SJ
-
-
-def _fresh_work(prefix: str, sf_dir: str) -> str:
-    """The query's per-(sf, pid) work dir (atexit-cleaned), emptied:
-    a second plan construction in one process must replay the whole
-    stream, not resume a consumed checkpoint."""
-    work = _pid_tmpdir(prefix, sf_dir)
-    shutil.rmtree(work, ignore_errors=True)
-    return work
 
 
 def streaming_minute_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,11 +320,7 @@ def streaming_restart_exactly_once(
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.countDistinct("event_id").alias("n_unique_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")), 2
-            )
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .orderBy("event_type")
     )
@@ -470,9 +461,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .orderBy("event_type")
     )
@@ -555,9 +544,7 @@ def streaming_cdc_replication(
         replica.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("sum_value"),
+            _sum_value(),
         )
         .crossJoin(F.broadcast(diff))
         .select("event_type", "n_rows", "sum_value", "n_mismatch")

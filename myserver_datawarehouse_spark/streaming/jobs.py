@@ -691,7 +691,7 @@ def cdc_apply_stream(
     precedence is genuinely tested)."""
     from myserver_datawarehouse_spark.plans.relational import (
         CDF_UPDATE_BUMP,
-        ERASURE_MOD,
+        _erased_user,
     )
     from myserver_datawarehouse_spark.sources.tables import load_table
 
@@ -708,9 +708,9 @@ def cdc_apply_stream(
         .withColumn("value", F.col("value") + F.lit(CDF_UPDATE_BUMP))
         .select("*", F.lit("U").alias("op"), F.lit(2).alias("seq"))
     )
-    deletes = e.filter(
-        F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) == 0
-    ).select("*", F.lit("D").alias("op"), F.lit(3).alias("seq"))
+    deletes = e.filter(_erased_user()).select(
+        "*", F.lit("D").alias("op"), F.lit(3).alias("seq")
+    )
     cdc = base.unionByName(updates).unionByName(deletes)
     _stage_files(cdc, input_dir, CDC_APPLY_FILES)
     _drain_files(
@@ -782,7 +782,7 @@ def cdc_replicate_stream(
         CDF_INSERT_MOD,
         CDF_INSERT_OFFSET,
         CDF_UPDATE_BUMP,
-        ERASURE_MOD,
+        _erased_user,
     )
     from myserver_datawarehouse_spark.sources.tables import load_table
 
@@ -794,9 +794,7 @@ def cdc_replicate_stream(
         "event_id", "user_id", "event_type", "value"
     )
     v1 = publish_overwrite(spark, primary, e)
-    survivors = e.filter(
-        F.pmod(F.col("user_id"), F.lit(ERASURE_MOD)) != 0
-    )
+    survivors = e.filter(~_erased_user())
     updated = survivors.withColumn(
         "value",
         F.when(

@@ -1,8 +1,7 @@
-"""P13 COALESCE-on-merge, S8 guarded schema evolution, P19 schema walk."""
+"""P13 COALESCE-on-merge, S8 guarded schema evolution."""
 
 import pytest
 
-from myserver_datawarehouse_spark.functions import schema_io as SIO
 from myserver_datawarehouse_spark.operators import merge as M
 
 
@@ -52,21 +51,6 @@ def test_ensure_columns_adds_missing_once(spark, tmp_path):
 def test_ensure_columns_requires_table(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         M.ensure_columns(spark, str(tmp_path / "nope"), {"x": "int"})
-
-
-def test_schema_json_roundtrip(spark):
-    df = spark.createDataFrame(
-        [(1, [1.0], {"k": "v"}, (1, "s"))],
-        "id long, arr array<double>, m map<string,string>, st struct<a:int,b:string>",
-    )
-    text = SIO.schema_to_json(df.schema)
-    # deterministic: an equal schema built independently serializes
-    # byte-equal
-    again = spark.createDataFrame(
-        [(2, [2.0], {"j": "w"}, (2, "t"))],
-        "id long, arr array<double>, m map<string,string>, st struct<a:int,b:string>",
-    )
-    assert SIO.schema_to_json(again.schema) == text
 
 
 def test_schema_sidecar_round_trip_and_missing(tmp_path):

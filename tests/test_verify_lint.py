@@ -203,9 +203,12 @@ def test_recurring_shapes_have_one_owner():
     BPE vocabulary and greedy rewrite, the Lloyd update and PQ encoding,
     the SimHash bit pack, the unigram log-prob table, the repetition
     flag, the BM25 query-term postings, the per-lang cutoff rollup, the
-    exact top-k by squared distance and the schema sidecar's file name
-    are each written once, in their owner; every other module calls the
-    owner (`operators/text.doc_pairs`, `session.parallel_actions`,
+    exact top-k by squared distance, the schema sidecar's file name,
+    the audited value total, the emptied per-(sf, pid) work dir, the
+    erasure cohort, the TPC-H discounted price, the media near-dup
+    banding, set verify and survivor pick are each written once, in
+    their owner; every other module calls the owner
+    (`operators/text.doc_pairs`, `session.parallel_actions`,
     `plans/llm_text._minhash_signature`,
     `streaming/jobs._precedence_candidates`, `streaming/jobs._file_stream`,
     `streaming/jobs._drain_files`, `streaming/jobs.run_available_now`,
@@ -216,7 +219,14 @@ def test_recurring_shapes_have_one_owner():
     `plans/llm_text._token_lnp`, `plans/llm_text._repetition_flagged`,
     `plans/llm_text._term_stats`, `plans/llm_text._cutoff_rollup`,
     `ivf_recluster_audit`'s `top_by_d2`,
-    `operators/merge._SCHEMA_SIDECAR`)."""
+    `operators/merge._SCHEMA_SIDECAR`, `plans/relational._sum_value`,
+    `plans/relational._fresh_work`, `plans/relational._erased_user`,
+    `plans/relational._disc_price`, `plans/multimodal._banded_pairs`,
+    `plans/multimodal._set_verified_pairs`,
+    `plans/multimodal._with_survivor`). The streaming near-dup ingest
+    keeps its own media banding and set verify: it bands distinct
+    (doc, bucket) rows and names its set columns differently, so
+    calling the batch owners would change its plans."""
     import re
 
     pkg = Path(__file__).resolve().parents[1] / "myserver_datawarehouse_spark"
@@ -305,6 +315,36 @@ def test_recurring_shapes_have_one_owner():
             re.compile(r'"_SCHEMA\.json"'),
             {"operators/merge.py": 1},
         ),
+        "audited value total": (
+            re.compile(
+                r'F\.round\(\s*F\.sum\(F\.col\("value"\)\.cast\("decimal\(18,6\)"\)\),\s*2\s*\)'
+            ),
+            {"plans/relational.py": 1},
+        ),
+        "emptied work dir": (
+            re.compile(r"_pid_tmpdir\(.*\)\n\s*shutil\.rmtree\(\w+, "),
+            {"plans/relational.py": 1},
+        ),
+        "erasure cohort": (
+            re.compile(r'F\.pmod\(\s*F\.col\("user_id"\),\s*F\.lit\(ERASURE_MOD\)\s*\)'),
+            {"plans/relational.py": 1},
+        ),
+        "discounted price": (
+            re.compile(r'-\s*F\.col\("l_discount"\)\s*\)'),
+            {"plans/relational.py": 1},
+        ),
+        "media hash banding": (
+            re.compile(r"TX\.simhash_chunks\([^)]*PHASH_CHUNKS\)"),
+            {"plans/multimodal.py": 1, "streaming/jobs.py": 1},
+        ),
+        "media set verify": (
+            re.compile(r"lambda y: TX\.hamming60\(x, y\)"),
+            {"plans/multimodal.py": 1, "streaming/jobs.py": 1},
+        ),
+        "survivor pick": (
+            re.compile(r'F\.min\("doc_a"\)\.over\('),
+            {"plans/multimodal.py": 1},
+        ),
     }
     for shape, (pat, owners) in shapes.items():
         found = {}
@@ -313,3 +353,55 @@ def test_recurring_shapes_have_one_owner():
             if n:
                 found[path.relative_to(pkg).as_posix()] = n
         assert found == owners, f"{shape}: {found}"
+
+
+def test_every_package_definition_is_referenced():
+    """Every top-level function, class and constant of the package is
+    named outside its own definition by code that is not a test: the
+    package, `tools/`, `perfbench/` or the bench entry points. An
+    `__all__` entry is not a reference. The two exceptions are paper-
+    parity surface with no in-repo caller: `sinks.chart_payload` (the
+    reference's chart push) and `sources/jdbc.closed_hour_extract_sql`
+    (the reference's closed-hour extract)."""
+    import ast
+    import re
+    from collections import defaultdict
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "myserver_datawarehouse_spark"
+    exceptions = {
+        ("sinks.py", "chart_payload"),
+        ("sources/jdbc.py", "closed_hour_extract_sql"),
+    }
+    seen = defaultdict(set)  # identifier -> {(file, line)} it appears on
+    defs = []  # (file, name, its own lines)
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] == "tests" or rel.parts[0].startswith("."):
+            continue
+        src = path.read_text()
+        exports = set()
+        for node in ast.parse(src).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            span = range(node.lineno, node.end_lineno + 1)
+            if names == ["__all__"]:
+                exports.update(span)
+            elif pkg in path.parents:
+                defs += [(rel, n, span) for n in names if not n.startswith("__")]
+        for i, line in enumerate(src.split("\n"), 1):
+            if i not in exports:
+                for word in set(re.findall(r"\w+", line)):
+                    seen[word].add((rel, i))
+    unreferenced = [
+        (rel.relative_to(pkg.name).as_posix(), name)
+        for rel, name, span in defs
+        if all(f == rel and i in span for f, i in seen[name])
+    ]
+    unreferenced = sorted(set(unreferenced) - exceptions)
+    assert not unreferenced, f"defined but never referenced: {unreferenced}"

@@ -242,18 +242,18 @@ ALLOW: dict[str, dict[str, str]] = {
         "lsh_recall_audit), the exact prefix-filter yardstick frame "
         "consumed by the sweep's candidate join + the decile "
         "rollup, and the signature frame both sides of the ONE "
-        "tagged band-key bucket self-join re-read (r14: one tagged "
-        "explode + one self-join replaced the three per-config legs)"
+        "tagged band-key bucket self-join re-read (one tagged "
+        "explode + one self-join, not three per-config legs)"
     },
 }
 
 # ---------------------------------------------------------------------
-# The allowlist's honesty mechanism (round-11 verdict ask #7): every
-# ALLOW entry must either NAME >= 2 downstream consumers of the
-# materialized frame here, or sit in the FROZEN legacy-cut set below.
-# tests/test_verify_lint.py asserts the partition, so a new ALLOW
-# entry cannot land without naming its consumers — the allowlist can
-# only grow with a machine-checked sharing justification.
+# The allowlist's honesty mechanism: every ALLOW entry must either
+# NAME >= 2 downstream consumers of the materialized frame here, or sit
+# in the FROZEN legacy-cut set below. tests/test_verify_lint.py asserts
+# the partition, so a new ALLOW entry cannot land without naming its
+# consumers — the allowlist can only grow with a machine-checked
+# sharing justification.
 CONSUMERS: dict[str, tuple[str, ...]] = {
     **{name: ("hour output: the tick's sink write",
               "hour output: the tick's validate() aggregate")
@@ -443,7 +443,7 @@ CONSUMERS: dict[str, tuple[str, ...]] = {
     ),
 }
 
-# FROZEN: pre-round-12 lineage cuts whose justification is the cut
+# FROZEN: the older lineage cuts whose justification is the cut
 # itself (conf pinning under eager execution / composed-machinery
 # checkpoints), not a >= 2-consumer shared frame. This set must never
 # grow — new single-consumer cuts are a lint violation by policy.
