@@ -595,10 +595,9 @@ def _commit_lock(root: str):
 # metadata is O(files) sequential round trips from the driver (fine for
 # the commit sizes a single writer produces; slow against an object
 # store at 1e5+ files), while the Spark count amortizes the same footer
-# reads across the cluster. Conf'd so a deployment can move the
-# crossover; the audit's guarantee is identical on both paths.
-_FOOTER_AUDIT_LIMIT_CONF = "spark.msdw.audit.footerFileLimit"
-_FOOTER_AUDIT_LIMIT_DEFAULT = "4096"
+# reads across the cluster. The audit's guarantee is identical on both
+# paths.
+_FOOTER_AUDIT_FILE_LIMIT = 4096
 
 
 def _read_back(
@@ -606,7 +605,7 @@ def _read_back(
 ) -> tuple[int, set]:
     """READ-BACK audit shared by every writer: (rows, column names) of
     the data files under `base` — or of just `files`, given relative to
-    `base`. Up to the conf'd file limit it sums parquet footer row
+    `base`. Up to `_FOOTER_AUDIT_FILE_LIMIT` files it sums parquet footer row
     counts and unions footer schema names (plus hive partition-dir
     column names) on the driver. The footer is the writer's own durable
     record of each file, so this is the same physical-completeness
@@ -618,10 +617,7 @@ def _read_back(
     import pyarrow.parquet as pq
 
     rels = _FILES._data_files_relative(base) if files is None else files
-    limit = int(
-        spark.conf.get(_FOOTER_AUDIT_LIMIT_CONF, _FOOTER_AUDIT_LIMIT_DEFAULT)
-    )
-    if len(rels) > limit:
+    if len(rels) > _FOOTER_AUDIT_FILE_LIMIT:
         back = spark.read.parquet(
             *([base] if files is None else
               [os.path.join(base, f) for f in files])

@@ -151,6 +151,23 @@ def hourly_pipeline(
     return materialize(out.coalesce(1).orderBy(*GROUP_KEYS, "minute_ts"))
 
 
+def _rounded_mean(col: str) -> Column:
+    """The mean of `col` rounded to 6 places, half away from zero, in
+    exact arithmetic: the sum in integer micro-units over the count with
+    an integer division. Spark and DuckDB round a tie differently both in
+    a double quotient and in a double -> DECIMAL(18,6) cast (Spark rounds
+    the shortest decimal form half up, DuckDB the scaled double half to
+    even), so each row's micro-units are ROUND(col * 1e6): the same
+    double, rounded half away from zero by both. The flagship oracle
+    (`flagship.PIPELINE_VALIDATION_SQL`) computes the same."""
+    m = f"SUM(CAST(ROUND({col} * 1000000) AS BIGINT))"
+    n = f"COUNT({col})"
+    return F.expr(
+        f"CAST(CASE WHEN {m} < 0 THEN -((2 * -{m} + {n}) div (2 * {n})) "
+        f"ELSE (2 * {m} + {n}) div (2 * {n}) END AS DOUBLE) / 1000000"
+    )
+
+
 def validate(interpolated: DataFrame) -> DataFrame:
     """V1-V3 in one aggregate over the pipeline output: the stats profile
     and interpolation rate (fact_gold_price.py:382-431), completeness
@@ -175,11 +192,7 @@ def validate(interpolated: DataFrame) -> DataFrame:
         F.count(F.when(~interp, 1)).alias("actual_records"),
         n_interp.alias("interpolated_records"),
         *[unique[k].alias(f"unique_{k}") for k in GROUP_KEYS],
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-            / F.count("value"),
-            6,
-        ).alias("avg_value"),
+        _rounded_mean("value").alias("avg_value"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
         F.round(n_interp.cast("double") * 100.0 / total, 2).alias(

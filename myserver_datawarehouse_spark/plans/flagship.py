@@ -106,14 +106,25 @@ def pipeline_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.validate(P.hourly_pipeline(spark, sf_dir))
 
 
+# avg_value: the mean rounded to 6 places, half away from zero, from the
+# exact sum in integer micro-units (`micro`) with an integer division,
+# so no double quotient or decimal cast is rounded on a tie
+# (`pipeline._rounded_mean`).
 PIPELINE_VALIDATION_SQL = f"""
-WITH {_PIPELINE_CTE}
+WITH {_PIPELINE_CTE},
+micro AS (
+  SELECT SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS m,
+         COUNT(value) AS n
+  FROM result
+)
 SELECT
   COUNT(*) AS total_records,
   COUNT(CASE WHEN NOT is_interpolated THEN 1 END) AS actual_records,
   COUNT(CASE WHEN is_interpolated THEN 1 END) AS interpolated_records,
   COUNT(DISTINCT event_type) AS unique_event_type,
-  ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value), 6) AS avg_value,
+  (SELECT CAST(CASE WHEN m < 0 THEN -((2 * -m + n) // (2 * n))
+                    ELSE (2 * m + n) // (2 * n) END AS DOUBLE) / 1000000
+   FROM micro) AS avg_value,
   MIN(value) AS min_value,
   MAX(value) AS max_value,
   ROUND(CAST(COUNT(CASE WHEN is_interpolated THEN 1 END) AS DOUBLE) * 100.0

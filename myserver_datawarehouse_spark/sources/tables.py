@@ -86,23 +86,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     double and drift the last microsecond. The NTZ path is a plain cast
     (session tz is UTC, so wall-clock == instant).
     """
-    # The caller may hand us a session without our factory config (the
-    # driver builds its own). Both confs are runtime-settable and
-    # correctness-critical: UTC pins every date_id/time_id derivation to
-    # the oracle's tz-naive arithmetic (session.py's policy), nanosAsLong
-    # makes TIMESTAMP(NANOS) parquet readable at all.
+    path, schema = table_source(spark, sf_dir, name)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
+    return utc_ts(df) if name == "events" else df
+
+
+def table_source(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[str, StructType | None]:
+    """The path of one TESTDATA table and its footer schema, with the
+    session conf its scan needs. The caller may hand us a session
+    without our factory config (the driver builds its own). Both confs
+    are runtime-settable and correctness-critical: UTC pins every
+    date_id/time_id derivation to the oracle's tz-naive arithmetic
+    (session.py's policy), nanosAsLong makes TIMESTAMP(NANOS) parquet
+    readable at all."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = footer_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return path, footer_schema(spark, path)
 
+
+def utc_ts(events: DataFrame) -> DataFrame:
+    """`events` (a batch scan or a file stream) with `ts` normalized to a
+    session-zone TIMESTAMP, whichever type the scan gave it."""
+    ts_type = dict(events.dtypes).get("ts")
+    if ts_type == "bigint":
+        return events.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events

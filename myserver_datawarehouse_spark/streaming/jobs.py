@@ -44,51 +44,28 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
 from myserver_datawarehouse_spark.session import parallel_actions
-
-# events.parquet carries TIMESTAMP(NANOS); depending on the Spark build
-# the scan yields either a long of nanos (legacy nanosAsLong path) or a
-# native TIMESTAMP_NTZ truncated to micros. The streaming source needs an
-# explicit schema, so `events_stream` probes the batch reader's resolved
-# type for `ts` and declares the same, then normalizes to TIMESTAMP —
-# identical semantics to sources/tables.load_table.
-def _events_schema(ts_type) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
+from myserver_datawarehouse_spark.sources.tables import (
+    load_table,
+    table_source,
+    utc_ts,
+)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table with `ts` normalized to a
-    session-zone TIMESTAMP (parity with the batch reader)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/events.parquet"
-    ts_type = spark.read.parquet(path).schema["ts"].dataType
+    session-zone TIMESTAMP: the batch reader's footer schema and `ts`
+    rule (`sources/tables.table_source`, `utc_ts`)."""
+    _, schema = table_source(spark, sf_dir, "events")
     raw = (
-        spark.readStream.schema(_events_schema(ts_type))
+        spark.readStream.schema(schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if isinstance(ts_type, LongType):
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return utc_ts(raw)
 
 
 def minute_agg_query(stream: DataFrame):
@@ -511,7 +488,6 @@ def upsert_merge_stream(
         merge_upsert,
         vacuum_path_table,
     )
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     input_dir = os.path.join(work_dir, "input")
     target = os.path.join(work_dir, "target")
@@ -569,8 +545,6 @@ def restart_exactly_once_stream(
 
     Returns the sink path; the caller reads it back (the read honors
     _spark_metadata, i.e. only committed files count)."""
-    from myserver_datawarehouse_spark.sources.tables import load_table
-
     src = os.path.join(work_dir, "src")
     ckpt = os.path.join(work_dir, "ckpt")
     sink = os.path.join(work_dir, "sink")
@@ -620,8 +594,6 @@ def watermark_audit_stream(
 
     Returns (emitted-window frame from the memory sink, total dropped
     row count observed via query progress)."""
-    from myserver_datawarehouse_spark.sources.tables import load_table
-
     src = os.path.join(work_dir, "src")
     base = (
         load_table(spark, sf_dir, "events")
@@ -693,7 +665,6 @@ def cdc_apply_stream(
         CDF_UPDATE_BUMP,
         _erased_user,
     )
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     input_dir = os.path.join(work_dir, "input")
     target = os.path.join(work_dir, "target")
@@ -784,7 +755,6 @@ def cdc_replicate_stream(
         CDF_UPDATE_BUMP,
         _erased_user,
     )
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     primary = os.path.join(work_dir, "primary")
     input_dir = os.path.join(work_dir, "input")
@@ -914,7 +884,6 @@ def _seed_target(
     `n_input_files` files in `input_dir`. Returns the staged frame."""
     from myserver_datawarehouse_spark.operators import evolution as EV
     from myserver_datawarehouse_spark.operators import merge as M
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -1096,8 +1065,6 @@ def outer_attribution_stream(
     availableNow runs the final no-data flush batch whenever the last
     data batch advanced the watermark, so eviction results land before
     the query stops."""
-    from myserver_datawarehouse_spark.sources.tables import load_table
-
     src = os.path.join(work_dir, "src")
     base = (
         load_table(spark, sf_dir, "events")
@@ -1269,7 +1236,6 @@ def ivf_ingest_stream(
     which is what makes the census + trajectory adjudicable against a
     batch oracle. Returns the cells ledger path."""
     from myserver_datawarehouse_spark.operators import vectors as V
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     input_dir = os.path.join(work_dir, "input")
     cells_dir = os.path.join(work_dir, "cells")
@@ -1518,7 +1484,6 @@ def near_dup_ingest_stream(
     per-batch cost is O(batch shingles) + band-bucket collisions;
     ledger and index writes are O(batch). Returns the ledger path."""
     from myserver_datawarehouse_spark.plans.llm_text import INCR_MOD
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     input_dir = os.path.join(work_dir, "input")
     bands_dir = os.path.join(work_dir, "index_bands")
@@ -1599,7 +1564,6 @@ def mix_drift_stream(
     seed — so trigger order cannot matter. Returns the ledger path."""
     from myserver_datawarehouse_spark.operators import text as TX
     from myserver_datawarehouse_spark.plans.llm_text import INCR_MOD
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     input_dir = os.path.join(work_dir, "input")
     seed_dir = os.path.join(work_dir, "seed_shares")
@@ -2007,7 +1971,6 @@ def curation_ledger_stream(
     CANDIDATE docs only (semi-join before collect_list). Returns the
     ledger path."""
     from myserver_datawarehouse_spark.plans.llm_text import INCR_MOD
-    from myserver_datawarehouse_spark.sources.tables import load_table
 
     d = {
         k: os.path.join(work_dir, k)

@@ -8,6 +8,7 @@ import sys
 from pathlib import Path
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from myserver_datawarehouse_spark import pipeline as P
@@ -157,3 +158,30 @@ def test_tick_cost_does_not_grow_with_history(spark, tmp_path):
             and re.search(rf"date_id#\d+ <= {date_id}\b", f)
             for f in scans
         ), scans
+
+
+@pytest.mark.parametrize("values, mean", [
+    # a tie in the quotient: 65.4549735 rounds to 65.454974 in Spark's
+    # double division and to 65.454973 in DuckDB's
+    ((65.454973, 65.454974), 65.454974),
+    # ties in the rows (interpolated values of one hourly tick):
+    # each casts to DECIMAL(18,6) as ...667 in Spark and ...666 in DuckDB
+    ((100.0266665, 76.7916665), 88.409167),
+])
+def test_validate_mean_on_a_rounding_tie_matches_the_oracle(spark, values, mean):
+    """avg_value on a 6-place rounding tie equals the DuckDB oracle's:
+    both sides round each row's micro-units from the same double and
+    divide the exact sum."""
+    rows = [("a", v, i % 2 == 1) for i, v in enumerate(values)]
+    frame = spark.createDataFrame(
+        rows, "event_type string, value double, is_interpolated boolean")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE result (event_type VARCHAR, value DOUBLE,"
+                " is_interpolated BOOLEAN)")
+    con.executemany("INSERT INTO result VALUES (?, ?, ?)", rows)
+    # the oracle's final aggregate, over `result` instead of its CTE chain
+    over_result = FL.PIPELINE_VALIDATION_SQL.replace(
+        FL._PIPELINE_CTE + ",", "").replace("WITH " + FL._PIPELINE_CTE, "")
+    assert compare("pipeline_validation", P.validate(frame), con,
+                   over_result) == []
+    assert P.validate(frame).first()["avg_value"] == mean

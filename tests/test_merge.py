@@ -660,6 +660,23 @@ def test_null_partition_rows_survive_partitioned_merge(spark, tmp_path):
     assert rows_of(spark, p) == {(1, "A", None), (3, "c", None), (2, "B", 10)}
 
 
+def test_read_back_distributed_count_matches_footer_audit(
+    spark, tmp_path, monkeypatch
+):
+    """Past `_FOOTER_AUDIT_FILE_LIMIT` data files the read-back audit is
+    one distributed count, the path for very large commits; on the same
+    staged snapshot it reports the footer sums' rows and columns."""
+    root = str(tmp_path / "t")
+    df = batch(spark, [(1, "a", 10), (2, "b", 20), (3, "c", None)])
+    staged = os.path.join(
+        root, M._stage_snapshot(spark, root, df, ["d"], audit=False)
+    )
+    footer = M._read_back(spark, staged)
+    assert footer == (3, {"id", "v", "d"})
+    monkeypatch.setattr(M, "_FOOTER_AUDIT_FILE_LIMIT", 0)
+    assert M._read_back(spark, staged) == footer
+
+
 def test_underscore_partition_column_path_table_merge(spark, tmp_path):
     """A path table partitioned only by an underscore-named column has
     nothing but `_col=v` directories at its top level: the merge must

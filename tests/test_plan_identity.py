@@ -67,6 +67,7 @@ def test_norm_replaces_run_specific_ids():
         "* Project [codegen id : 17] [plan_id=93]\n"
         "org.apache.spark.sql.Obj@5e1f2a9\n"
         "(3) ShuffleQueryStage\nOutput [1]: [k#1]\nArguments: 4\n"
+        "Scan parquet spark_catalog.default.msdw_bkt_l_0f3c9a1b_41207\n"
     )
     assert norm(raw, ROOT) == (
         "Location: InMemoryFileIndex [file:<ROOT>/spark-warehouse/t]\n"
@@ -77,6 +78,7 @@ def test_norm_replaces_run_specific_ids():
         "* Project [codegen id : N] [plan_id=N]\n"
         "org.apache.spark.sql.Obj@H\n"
         "(3) ShuffleQueryStage\nOutput [1]: [k#N]\nArguments: N\n"
+        "Scan parquet spark_catalog.default.msdw_bkt_l_0f3c9a1b_<PID>\n"
     )
 
 

@@ -1,12 +1,14 @@
 """tools/profile_query.py attributes jobs by job-ID window, so jobs that
 `session.parallel_actions` submits from its pool threads count too, and
-records the driver's py4j round trips and codegen compilations per
-rep."""
+records the driver's py4j round trips, codegen compilations and shuffle
+bytes per rep."""
 
 import sys
 import time
 from pathlib import Path
 from types import SimpleNamespace
+
+from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
@@ -91,3 +93,20 @@ def test_profile_counts_codegen_compiles(spark):
     first, repeat = r["codegen_compiles"]
     assert first > 0
     assert repeat == 0
+
+
+def test_profile_counts_shuffle_bytes(spark):
+    def grouped(sp, _sf_dir):
+        return sp.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+
+    def plain(sp, _sf_dir):
+        return sp.range(1)
+
+    g = profile_one(spark, SimpleNamespace(name="shuffle_stub", spark=grouped),
+                    "", reps=2, warm=0)
+    assert g["shuffle_write_bytes_per_rep"] > 0
+    assert g["shuffle_read_bytes_per_rep"] > 0
+    p = profile_one(spark, SimpleNamespace(name="range_stub", spark=plain),
+                    "", reps=2, warm=0)
+    assert p["shuffle_write_bytes_per_rep"] == 0
+    assert p["shuffle_read_bytes_per_rep"] == 0

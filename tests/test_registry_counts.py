@@ -1,6 +1,6 @@
-"""Registry bookkeeping invariants — the doc-count drift guard the
-round-4 advice asked for: every tally PARITY.md cites is derived here
-from registry.specs() so the docs can't silently diverge again."""
+"""Registry bookkeeping invariants — the doc-count drift guard: every
+tally PARITY.md cites is derived here from registry.specs() so the docs
+can't silently diverge again."""
 
 from pathlib import Path
 
@@ -128,10 +128,9 @@ def test_order_does_not_depend_on_cwd(tmp_path):
 
 
 def test_growth_budget_clears_head_and_stalest_tier():
-    """Registry-growth discipline (round-8 verdict ask #7): the
-    adjudication budget must cover the head tier (new/changed
-    queries) PLUS the stalest standing tier, or the rotation never
-    converges and verdicts age without bound."""
+    """Registry-growth discipline: the adjudication budget must cover
+    the head tier (new/changed queries) PLUS the stalest standing tier,
+    or the rotation never converges and verdicts age without bound."""
     tiers: dict[int, int] = {}
     for s in registry.specs():
         t = registry._staleness(s.name)
@@ -156,11 +155,10 @@ def test_names_unique_and_sorted_by_staleness():
 
 
 def test_committed_reports_cover_the_whole_registry():
-    """Drift guard (round-8 verdict ask #2 — this count-drift bug
-    shipped two rounds running): the committed PLANLINT.md and
-    SHUFFLE.md artifacts must cover exactly len(registry.specs())
-    queries. New queries shipped without regenerated reports fail the
-    suite here, not in the next round's verdict."""
+    """Drift guard: the committed PLANLINT.md and SHUFFLE.md artifacts
+    must cover exactly len(registry.specs()) queries. New queries
+    shipped without regenerated reports fail the suite here, not in a
+    later review."""
     import re
 
     n = len(registry.specs())
@@ -185,5 +183,5 @@ def test_committed_reports_cover_the_whole_registry():
     assert m, "SHUFFLE.md missing its zero-shuffle header"
     assert int(m.group(2)) == n, (
         f"SHUFFLE.md covers {m.group(2)} queries but the registry has "
-        f"{n}; re-run tools/shuffle_audit.py"
+        f"{n}; re-run tools/profile_query.py"
     )

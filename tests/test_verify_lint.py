@@ -1,6 +1,7 @@
 """Guard the guard: tools/verify_local.py's dtype lints must actually
-fire — a HUGEINT oracle column or a NULL-promoted Spark int column was
-the round-2 failure mode, and the lint is what keeps it from recurring."""
+fire — a HUGEINT oracle column or a NULL-promoted Spark int column
+fails the driver's exact compare, and the lint is what keeps it from
+recurring."""
 
 import sys
 from pathlib import Path
@@ -153,11 +154,11 @@ def test_plan_lint_classifier():
 
 
 def test_materialize_allowlist_names_consumers():
-    """Round-11 verdict ask #7: the plan-lint materialize() allowlist
-    can only grow with a machine-checked sharing justification — every
-    ALLOW entry must either name >= 2 downstream consumers of its
-    materialized frame in CONSUMERS, or belong to the FROZEN pre-
-    round-12 LEGACY_CUTS set (which must never grow)."""
+    """The plan-lint materialize() allowlist can only grow with a
+    machine-checked sharing justification — every ALLOW entry must
+    either name >= 2 downstream consumers of its materialized frame in
+    CONSUMERS, or belong to the FROZEN LEGACY_CUTS set (which must never
+    grow)."""
     from plan_lint import ALLOW, CONSUMERS, LEGACY_CUTS
 
     allow = set(ALLOW)
@@ -206,8 +207,9 @@ def test_recurring_shapes_have_one_owner():
     exact top-k by squared distance, the schema sidecar's file name,
     the audited value total, the emptied per-(sf, pid) work dir, the
     erasure cohort, the TPC-H discounted price, the media near-dup
-    banding, set verify and survivor pick are each written once, in
-    their owner; every other module calls the owner
+    banding, set verify and survivor pick, and the events `ts` scan
+    conf and normalization are each written once, in their owner; every
+    other module calls the owner
     (`operators/text.doc_pairs`, `session.parallel_actions`,
     `plans/llm_text._minhash_signature`,
     `streaming/jobs._precedence_candidates`, `streaming/jobs._file_stream`,
@@ -223,7 +225,8 @@ def test_recurring_shapes_have_one_owner():
     `plans/relational._fresh_work`, `plans/relational._erased_user`,
     `plans/relational._disc_price`, `plans/multimodal._banded_pairs`,
     `plans/multimodal._set_verified_pairs`,
-    `plans/multimodal._with_survivor`). The streaming near-dup ingest
+    `plans/multimodal._with_survivor`, `sources/tables.table_source` and
+    `sources/tables.utc_ts`). The streaming near-dup ingest
     keeps its own media banding and set verify: it bands distinct
     (doc, bucket) rows and names its set columns differently, so
     calling the batch owners would change its plans."""
@@ -344,6 +347,11 @@ def test_recurring_shapes_have_one_owner():
         "survivor pick": (
             re.compile(r'F\.min\("doc_a"\)\.over\('),
             {"plans/multimodal.py": 1},
+        ),
+        "events ts normalization": (
+            re.compile(r'F\.expr\("ts div 1000"\)|'
+                       r'conf\.set\("spark\.sql\.legacy\.parquet\.nanosAsLong"'),
+            {"sources/tables.py": 2},
         ),
     }
     for shape, (pat, owners) in shapes.items():

@@ -1,7 +1,7 @@
 """Derive a larger test-scale directory from the driver-provided
 sf0.1 parquet tables by key-shifted replication, preserving the
 workload's semantic shape so the measured scale curve extends past
-sf0.1 (the round-6 verdict ask #4).
+sf0.1.
 
     python tools/make_scaled_sf.py /root/testdata/sf0.1 /tmp/sfx0.5 5
 

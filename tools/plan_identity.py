@@ -32,7 +32,8 @@ NORM = [(r"(file:)?/tmp/[^\s,\])\"']*", "<TMP>"),
         (r"\[codegen id : \d+\]", "[codegen id : N]"), (r"plan_id=\d+", "plan_id=N"),
         (r"RDD\[\d+\]", "RDD[N]"), (r"(\w)@[0-9a-f]{4,8}\b", r"\1@H"),  # object ids
         (r"(QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+", r"\1N"),  # AQE stage ids
-        (r"(input_file_name\(\), \^file:/\+, /, 1\), )\d+", r"\1N")]  # pid-length path
+        (r"(input_file_name\(\), \^file:/\+, /, 1\), )\d+", r"\1N"),  # pid-length path
+        (r"\b(msdw_\w+_[0-9a-f]{8})_\d+\b", r"\1_<PID>")]  # per-process catalog names
 
 
 def norm(p, root):

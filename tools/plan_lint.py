@@ -154,14 +154,13 @@ ALLOW: dict[str, dict[str, str]] = {
         "|widths| x TOP_K rows) shared by the 64-width ground-truth "
         "extract, the recall hit semi-join, the hits-per-width "
         "rollup and the served-quality rollup — without it each "
-        "consumer re-derives the N_PROBES x corpus scored frame "
-        "(round-12 advice #3)"
+        "consumer re-derives the N_PROBES x corpus scored frame"
     },
     "embedding_binary_hamming_rerank": {
         "RDD_SCAN": _LC + "; the scored N_PROBES x corpus frame "
         "(hamming + exact cosine from ONE scan) shared by the "
         "Hamming-shortlist/rerank windows and the exact ground-truth "
-        "top-k window (round-12 advice #3)"
+        "top-k window"
     },
     "token_pagerank": {
         "RDD_SCAN": _LC + "; materialized transition table shared by "

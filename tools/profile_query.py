@@ -28,11 +28,18 @@ queries through the bench's noop-sink protocol and report, for each,
     a repeat of a warm plan reads 0 and a query whose code embeds its
     literals compiles anew on every rep,
 
+  - shuffle bytes read and written per rep, summed over the stages of
+    the same job-ID window, so construction-time and pooled jobs count,
+
 so an optimization can be judged by plan shape + scheduler load, not
 wall-clock alone (guide §1: measure first; §7.2: read the plan).
 
+Run without query names or `--family`, it profiles the whole registry
+and also writes SHUFFLE.md, the registry's shuffle bytes per query.
+
 Usage: python tools/profile_query.py [--sf DIR] [--reps N] query ...
        python tools/profile_query.py --family llm_text
+       python tools/profile_query.py [--sf DIR]  # whole registry + SHUFFLE.md
 """
 
 from __future__ import annotations
@@ -57,6 +64,20 @@ sys.path.append(os.path.join(ROOT, "perfbench"))
 import measure  # noqa: E402
 from myserver_datawarehouse_spark import registry  # noqa: E402
 from myserver_datawarehouse_spark.session import get_spark  # noqa: E402
+
+
+def noop(df) -> None:
+    """Run `df` through the bench's `noop` sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def profiling_session(app: str):
+    """A quiet session, warmed up like bench.py's so the first query is
+    not charged with the session's first job."""
+    spark = get_spark(app, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    noop(spark.range(1000).selectExpr("sum(id)"))
+    return spark
 
 
 def plan_counts(df) -> dict:
@@ -144,9 +165,7 @@ def py4j_calls():
 
 def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
     for _ in range(warm):
-        spec.spark(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        noop(spec.spark(spark, sf_dir))
     jobs = measure.SparkJobs(spark)
     jvm = spark.sparkContext._gateway.proc.pid
     jdk_tools = bool(shutil.which("jcmd") and shutil.which("jfr"))
@@ -165,8 +184,7 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
             c0 = measure.cpu_ticks()
             t0 = time.perf_counter()
             with py4j_calls() as n_calls:
-                df = spec.spark(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
+                noop(spec.spark(spark, sf_dir))
             times.append(time.perf_counter() - t0)
             compiles.append(compiled.getCount() - n0)
             steals.append(round(measure.steal_pct(c0, measure.cpu_ticks()), 2))
@@ -195,6 +213,10 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
         "jobs_per_rep": round(census["jobs"] / max(1, reps), 1),
         "stages_per_rep": round(census["stages"] / max(1, reps), 1),
         "tasks_per_rep": round(census["tasks"] / max(1, reps), 1),
+        "shuffle_read_bytes_per_rep": round(
+            census["shuffle_read_bytes"] / max(1, reps)),
+        "shuffle_write_bytes_per_rep": round(
+            census["shuffle_write_bytes"] / max(1, reps)),
         # hypervisor steal% per rep: >2-3% means the rep is a host
         # phase, not the plan (see perfbench/measure.cpu_ticks).
         "steal_pct": steals,
@@ -204,6 +226,57 @@ def profile_one(spark, spec, sf_dir: str, reps: int, warm: int) -> dict:
         "jvm_spawn_cmds": dict(spawn_cmds) if jdk_tools else None,
         **counts,
     }
+
+
+def _fmt(b: float) -> str:
+    for unit in ("B", "KiB", "MiB", "GiB"):
+        if b < 1024:
+            return f"{b:.1f} {unit}" if unit != "B" else f"{b:.0f} B"
+        b /= 1024.0
+    return f"{b:.1f} TiB"
+
+
+def write_shuffle_report(rows: list[dict], sf_dir: str, reps: int,
+                         warm: int) -> None:
+    """SHUFFLE.md: the registry's shuffle bytes per query, from the
+    profiler's rows of every registry query."""
+    rows = sorted(rows, key=lambda r: -r["shuffle_write_bytes_per_rep"])
+    zero = sum(r["shuffle_write_bytes_per_rep"] == 0 for r in rows)
+    total_w = sum(r["shuffle_write_bytes_per_rep"] for r in rows)
+    out = [
+        "# SHUFFLE — measured shuffle bytes per registry query",
+        f"(generated by tools/profile_query.py at {sf_dir}; per rep, over",
+        f"{reps} rep(s) after {warm} warm, noop sink; each stage's shuffle",
+        "bytes summed over the rep's job-ID window once the listener bus",
+        "drained — eager queries include their construction-time work,",
+        "pooled jobs count)",
+        "",
+        f"**Total shuffle write across the registry: {_fmt(total_w)}.**",
+        f"**{zero}/{len(rows)} queries shuffle ZERO bytes** "
+        "(map-side-only plans: scans + broadcast joins + partial-agg "
+        "pushdown or bounded top-k).",
+        "",
+        "Top shuffle producers (write | read):",
+        "",
+        "| query | shuffle write | shuffle read |",
+        "|---|---|---|",
+    ]
+    out += [f"| {r['name']} | {_fmt(r['shuffle_write_bytes_per_rep'])} | "
+            f"{_fmt(r['shuffle_read_bytes_per_rep'])} |" for r in rows[:25]]
+    out += [
+        "",
+        "Interpretation: the top rows are the queries whose DESIGN is a",
+        "keyed repartition of real data volume (fact-grain aggregates,",
+        "candidate-pair joins, iterative components); a query appearing",
+        "here without a documented data-volume shuffle in its docstring",
+        "would be a plan bug. Zero-shuffle queries stay zero at any",
+        "scale — their cost is scan + broadcast only.",
+        "",
+    ]
+    with open(os.path.join(ROOT, "SHUFFLE.md"), "w") as fh:
+        fh.write("\n".join(out))
+    print(f"wrote SHUFFLE.md: total write {_fmt(total_w)}, "
+          f"{zero} zero-shuffle queries")
 
 
 def main() -> None:
@@ -216,26 +289,15 @@ def main() -> None:
     ap.add_argument("--family", default="")
     args = ap.parse_args()
 
-    spark = get_spark(
-        "profile", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # same session warm-up as bench.py so first query is not charged
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark = profiling_session("profile")
     from myserver_datawarehouse_spark.sources.tables import (
         TESTDATA_TABLES,
         load_table,
     )
 
     for t in TESTDATA_TABLES:
-        load_table(spark, args.sf, t).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    spark.range(32).mapInPandas(lambda it: it, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+        noop(load_table(spark, args.sf, t))
+    noop(spark.range(32).mapInPandas(lambda it: it, "id long"))
 
     specs = registry.specs()
     if args.family:
@@ -254,6 +316,8 @@ def main() -> None:
         r = profile_one(spark, spec, args.sf, args.reps, args.warm)
         out.append(r)
         print(json.dumps(r), flush=True)
+    if not (args.queries or args.family):
+        write_shuffle_report(out, args.sf, args.reps, args.warm)
     out.sort(key=lambda r: -r["wall_med"])
     print("\n== slowest ==")
     for r in out[:15]:

@@ -4,8 +4,8 @@ tools/make_scaled_sf.py).
 
     python tools/scale_probe.py /root/testdata/sf0.1 /tmp/sfx0.5 /tmp/sfx1
 
-Per (query, scale): 1 untimed warm rep + 2 timed reps, median reported
-(3rd rep if spread > 0.3 s, same rule as bench.py). One warm JVM for
+Per (query, scale): `profile_query.profile_one` with 1 untimed warm
+rep and 2 timed reps; its `wall_med` is recorded. One warm JVM for
 everything; noop sink. Output: JSON to stdout + tools/scale_probe.json.
 
 Default query set = the top-10 measured shuffle producers (SHUFFLE.md)
@@ -17,17 +17,14 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from profile_query import profile_one, profiling_session
 
 from myserver_datawarehouse_spark import registry
-from myserver_datawarehouse_spark.session import get_spark
 
 PROBE_QUERIES = [
-    # top-10 shuffle producers (SHUFFLE.md, round 6)
+    # the measured top-10 shuffle producers when the set was chosen
     "sole_returner_suppliers",
     "dpp_partitioned_revenue",
     "part_supplier_variety",
@@ -44,12 +41,11 @@ PROBE_QUERIES = [
     # connected-components / LSH family
     "near_dup_minhash_lsh",
     "dedup_clusters",
-    # round-8 additions: incremental ingest, zone-map pruning, PCA
+    # incremental ingest, zone maps and blooms, ANN, sketches, BPE,
+    # multimodal near-dup, CDC and streaming merges, data curation
     "near_dup_incremental_lsh",
     "file_skipping_scan_audit",
     "embedding_pca_audit",
-    # round-8b additions: MOR deletes, sketch set-ops, retrieval tier,
-    # PQ, link analysis, join-IVM, CDC apply
     "deletion_vector_audit",
     "theta_sketch_overlap",
     "bm25_search",
@@ -57,11 +53,8 @@ PROBE_QUERIES = [
     "token_pagerank",
     "incremental_join_maintenance",
     "streaming_cdc_apply",
-    # round-9 additions: composed IVFPQ, CDC replication round-trip
     "embedding_ivfpq_search",
     "streaming_cdc_replication",
-    # round-9b/9c additions: exact prefix-filter join, rank/skyline
-    # algebra, NB scoring join, partition evolution, BPE apply
     "near_dup_prefix_filter",
     "equi_depth_histogram",
     "supplier_pareto_skyline",
@@ -69,15 +62,10 @@ PROBE_QUERIES = [
     "partition_evolution_audit",
     "bpe_encode_corpus",
     "streaming_evolved_upsert",
-    # round-10 additions: image pHash near-dup, span excision,
-    # IVFPQ exact refine, compaction racing a live stream
     "near_dup_image_phash",
     "dup_span_removal",
     "embedding_ivfpq_refined",
     "streaming_compaction_race",
-    # round-11 additions: video frame-set near-dup, cross-modal joint
-    # curation, sampled BPE training, clustered nprobe sweep, committed
-    # bloom sidecars
     "near_dup_video_frames",
     "cross_modal_curation",
     "bpe_sampled_training",
@@ -87,13 +75,9 @@ PROBE_QUERIES = [
     "bpe_fertility_by_lang",
     "ivf_incremental_ingest_audit",
     "streaming_bloom_maintained",
-    # round-12 additions: audio fingerprint near-dup, bloom carry
-    # through evolved merges, streaming IVF ingest
     "near_dup_audio_fingerprint",
     "bloom_evolved_carry_audit",
     "streaming_ivf_ingest",
-    # round-12b additions: matryoshka prefix audit, binary hamming
-    # rerank, temperature mix, streaming near-dup ingest
     "embedding_matryoshka_audit",
     "embedding_binary_hamming_rerank",
     "temperature_resampled_mix",
@@ -103,9 +87,6 @@ PROBE_QUERIES = [
     "dedup_quality_canonical",
     "lsh_band_tuning",
     "streaming_mix_drift",
-    # round-13 additions: DSIR importance resampling, bigram-LM
-    # perplexity gate, streaming cross-modal curation ledger, dedup
-    # threshold sweep, epoch planner, filter-agreement matrix
     "dsir_importance_weights",
     "ngram_lm_quality_gate",
     "streaming_curation_ledger",
@@ -125,52 +106,17 @@ def main() -> None:
         for q in os.environ.get("SPARK_GRAFT_PROBE_QUERIES", "").split(",")
         if q.strip()
     ]
-    spark = get_spark(
-        "scale-probe", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark = profiling_session("scale-probe")
 
     specs = {s.name: s for s in registry.specs()}
     out: dict[str, dict[str, float]] = {}
     for name in (subset or PROBE_QUERIES):
-        spec = specs[name]
         out[name] = {}
         for sf_dir in sf_dirs:
             tag = os.path.basename(sf_dir.rstrip("/"))
-            spec.spark(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # warm: codegen + page cache
-            # Central-gap criterion, same as bench.py (round 9): retry
-            # while the median lacks a close neighbor; if the gap never
-            # closes on an even count, record the LOWER central rep
-            # (bimodal host noise: the fast mode is the plan's cost).
-            def central_gap(ts: list[float]) -> float:
-                srt = sorted(ts)
-                n = len(srt)
-                if n < 2:
-                    return 0.0
-                if n % 2 == 0:
-                    return srt[n // 2] - srt[n // 2 - 1]
-                mid = n // 2
-                return min(srt[mid] - srt[mid - 1], srt[mid + 1] - srt[mid])
-
-            times: list[float] = []
-            while len(times) < 2 or (
-                central_gap(times) > 0.3 and len(times) < 6
-            ):
-                t0 = time.perf_counter()
-                spec.spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                times.append(round(time.perf_counter() - t0, 3))
-            if central_gap(times) > 0.3 and len(times) % 2 == 0:
-                out[name][tag] = round(sorted(times)[len(times) // 2 - 1], 3)
-            else:
-                out[name][tag] = round(statistics.median(times), 3)
-            print(f"{name} @ {tag}: {out[name][tag]} {times}", flush=True)
+            r = profile_one(spark, specs[name], sf_dir, reps=2, warm=1)
+            out[name][tag] = r["wall_med"]
+            print(f"{name} @ {tag}: {r['wall_med']} {r['reps']}", flush=True)
 
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "scale_probe.json")

@@ -58,7 +58,7 @@ def norm_rows(cols, rows):
 
 # DuckDB output types that silently become float64 through the pandas /
 # arrow fetch the external driver uses (SUM(INTEGER) -> HUGEINT -> 4985.0
-# vs Spark's 4985) — the root cause of the round-2 hash failures. Any
+# vs Spark's 4985) makes the driver's exact hash compare fail. Any
 # oracle emitting one of these is a bug regardless of what values show.
 ORACLE_BANNED_TYPES = ("HUGEINT", "UHUGEINT")
 
